@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * dedup keep-first → validate → {save valid subset, quality report}.
   *
   * The reference materializes a new frame after every step; here the whole
-  * chain is ONE lazy logical plan — Catalyst collapses the clean/date/flag
-  * projections into a single codegen'd stage — cached once at the
-  * post-validation fan-out point (counts + report aggregates + sink all
-  * reuse it).
+  * chain is ONE lazy logical plan, built in one place for both entry points
+  * — the clean/date kernels run in one codegen'd stage after the scan's
+  * repartition, the validation kernels in one after dedup — cached at the
+  * drop count and at the post-validation fan-out point (counts + report
+  * aggregates + sink all reuse it).
   */
 object ArticlePipeline {
 
@@ -23,17 +24,32 @@ object ArticlePipeline {
   case class Result(cleaned: DataFrame, stats: QualityStats, report: String)
 
   /** Build the cleaned + validation-flagged frame without any actions. */
-  def cleanAndFlag(raw: DataFrame, cfg: ValidationConfig = ValidationConfig()): DataFrame = {
-    val aliased = ArticleSchema.aliasPublished(raw)
+  def cleanAndFlag(raw: DataFrame, cfg: ValidationConfig = ValidationConfig()): DataFrame =
+    flag(completeRows(raw), cfg)
+
+  /** Repartition → alias → clean text → standardize dates → drop incomplete.
+    *
+    * A multiLine JSON file is one partition, so the loaded frame is
+    * hash-repartitioned on `row_id` first and the text and date kernels run
+    * on every core. `row_id` is assigned at the scan, before the exchange,
+    * so keep-first dedup and the positional indices do not change. The
+    * partition count is explicit because AQE would coalesce a small input
+    * back into one partition.
+    */
+  private def completeRows(raw: DataFrame): DataFrame = {
+    val partitions = raw.sparkSession.sessionState.conf.numShufflePartitions
+    val aliased = ArticleSchema.aliasPublished(raw.repartition(partitions, col("row_id")))
     val cleaned = TextClean.cleanColumns(aliased)
     val dated =
       if (cleaned.columns.contains("published_date"))
         cleaned.withColumn("published_date", Dates.parseIsoDate(col("published_date")))
       else cleaned
-    val complete = CleanSteps.dropIncomplete(dated)
-    val deduped = CleanSteps.deduplicateArticles(complete)
-    Validator.withFlags(deduped, cfg)
+    CleanSteps.dropIncomplete(dated)
   }
+
+  /** Dedup keep-first → validate. */
+  private def flag(complete: DataFrame, cfg: ValidationConfig): DataFrame =
+    Validator.withFlags(CleanSteps.deduplicateArticles(complete), cfg)
 
   /** E1/E2 entry point: full pipeline with file outputs.
     * `outputPath` gets the valid subset as JSON lines (scalable sink); pass
@@ -53,16 +69,9 @@ object ArticlePipeline {
 
     // Two cheap intermediate actions give the funnel counts the report needs;
     // the pre-dedup frame is tiny relative to the scan so we count it directly.
-    val aliased = ArticleSchema.aliasPublished(raw)
-    val cleaned = TextClean.cleanColumns(aliased)
-    val dated =
-      if (cleaned.columns.contains("published_date"))
-        cleaned.withColumn("published_date", Dates.parseIsoDate(col("published_date")))
-      else cleaned
-    val complete = CleanSteps.dropIncomplete(dated).cache()
+    val complete = completeRows(raw).cache()
     val afterDrop = complete.count()
-    val deduped = CleanSteps.deduplicateArticles(complete)
-    val flagged = Validator.withFlags(deduped, cfg).cache()
+    val flagged = flag(complete, cfg).cache()
     val afterDedup = flagged.count()
 
     val stats = Stats.collect(

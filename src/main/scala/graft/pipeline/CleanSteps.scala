@@ -40,8 +40,9 @@ object CleanSteps {
 
   /** Reference O6 exactly: dedup key = normalized (title, url); no-op when
     * either column is missing. `title`/`url` are expected to be already
-    * cleaned (the reference re-cleans its keys, which is idempotent —
-    * cleaner.py:116-117).
+    * cleaned, and the keys are cleaned again as the reference does
+    * (cleaner.py:116-117). The re-clean is NOT idempotent — `&amp;amp;`
+    * cleans to `&amp;` and then to `&` — so it changes which rows match.
     */
   def deduplicateArticles(df: DataFrame): DataFrame =
     if (!df.columns.contains("title") || !df.columns.contains("url")) df

@@ -22,7 +22,7 @@ object Dates {
 
   val IsoFormat = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
-  private val patterns = Seq(
+  private[pipeline] val patterns = Seq(
     IsoFormat,                    // 2025-02-20T14:30:00Z
     "yyyy-MM-dd'T'HH:mm:ssXXX",   // explicit offset
     "yyyy-MM-dd HH:mm:ss",
@@ -32,6 +32,14 @@ object Dates {
     "M/d/yyyy",                   // 05/03/2025 → May 3 (month-first)
     "d/M/yyyy"                    // 15/03/2025 → Mar 15 (day-first fallback)
   )
+
+  /** The literal text of a datetime pattern: quoted runs and the runs of
+    * non-letters between pattern letters (`-`, `:`, `", "`, `/`, ...).
+    */
+  private def literals(pattern: String): Seq[String] =
+    "'([^']*)'|([^A-Za-z']+)".r.findAllMatchIn(pattern)
+      .map(m => Option(m.group(1)).getOrElse(m.group(2)))
+      .filter(_.nonEmpty).toSeq.distinct
 
   /** Parse a messy date string column to TimestampType; null when invalid.
     * Reproduces `parse_iso_date`'s sentinel rejection of "none"/"null"/"nan"
@@ -43,7 +51,18 @@ object Dates {
     // the "Sept" abbreviation Java doesn't accept (SURVEY.md §2.3).
     val noOrdinal = regexp_replace(s, "(?<=\\d)(st|nd|rd|th)\\b", "")
     val pre = regexp_replace(noOrdinal, "^Sept(?=[ .])", "Sep")
-    val parsed = coalesce(patterns.map(p => try_to_timestamp(pre, lit(p))): _*)
+    // A pattern only runs where its literal separators occur: a failed
+    // parse raises and catches an exception per row, and a formatter cannot
+    // match input that lacks its literals, so the guards change no result.
+    // Spark's formatters parse case-insensitively, hence `upper` for the
+    // letter literals (`T`, `Z`).
+    val upperPre = upper(pre)
+    val parsed = coalesce(patterns.map { p =>
+      val guard = literals(p).map { l =>
+        if (l.exists(_.isLetter)) upperPre.contains(l.toUpperCase) else pre.contains(l)
+      }.foldLeft(lit(true))(_ && _)
+      when(guard, try_to_timestamp(pre, lit(p)))
+    }: _*)
     when(c.isNull || lower(s).isin("", "none", "null", "nan"),
       lit(null).cast(TimestampType)
     ).otherwise(parsed)

@@ -34,10 +34,11 @@ case class QualityStats(
   *
   * The reference makes one pandas pass per metric (a per-column loop for
   * completeness, an `iterrows` loop for validation). Here the counts,
-  * per-column completeness, and the date range all collapse into ONE
-  * partial+final hash aggregate over a single scan; only the (small) reason
-  * histogram and failure-detail listing are separate jobs. Call on a cached
-  * flagged frame.
+  * per-column completeness, the date range AND the reason histogram come
+  * from ONE aggregate grouped by `reason` — at most one group per reason
+  * code plus the passed rows' null group — whose few rows are collected
+  * and summed. The failure-detail listing takes two more jobs (see
+  * `failureDetails`). Call on a cached flagged frame.
   */
 object Stats {
 
@@ -51,20 +52,23 @@ object Stats {
       includeFailedDetails: Boolean = true,
       maxFailedDetails: Long = 10000): QualityStats = {
 
-    val dataCols = flagged.columns.filterNot(metaCols.contains)
+    val dataCols = flagged.columns.filterNot(metaCols.contains).toSeq
     val dateCol = Seq("published_date", "published").find(flagged.columns.contains)
 
-    // --- single-pass multi-aggregate: counts + completeness + date range ---
+    // --- one grouped aggregate: counts + completeness + date range + histogram ---
+    val failed = !col("passed")
     val baseAggs = Seq(
       count(lit(1)).as("_total"),
-      count(when(col("passed"), 1)).as("_passed"))
+      count(when(col("passed"), 1)).as("_passed"),
+      count(when(failed, 1)).as("_failed"),
+      min(when(failed, col("row_id"))).as("_first_failed"))
     // O13 semantics note: null counts as MISSING here (intended semantics,
     // README "empty/None/whitespace"). The reference's live behavior differs:
     // its astype(str) cast turns null into the literal "None", so its golden
     // report shows published_date at 100% where this reports 90.9% — a
     // documented deviation (SURVEY.md §0 item 2 / H3), pinned in
     // GoldenPipelineSpec.
-    val complAggs = dataCols.toSeq.map(c =>
+    val complAggs = dataCols.map(c =>
       count(when(!isBlank(col(c).cast("string")), 1)).as(s"_ok_$c"))
     val dateAggs = dateCol.toSeq.flatMap { c =>
       // report re-parses with pandas to_datetime(errors="coerce"); the column
@@ -73,54 +77,32 @@ object Stats {
       Seq(min(ts).as("_d_min"), max(ts).as("_d_max"), count(ts).as("_d_n"))
     }
     val aggs = baseAggs ++ complAggs ++ dateAggs
-    val row = flagged.agg(aggs.head, aggs.tail: _*).head()
+    val groups = flagged.groupBy(col("reason")).agg(aggs.head, aggs.tail: _*).collect().toSeq
+    def sum(name: String): Long = groups.map(_.getAs[Long](name)).sum
+    def stamps(name: String): Seq[Timestamp] = groups.flatMap(r => Option(r.getAs[Timestamp](name)))
 
-    val total = row.getAs[Long]("_total")
-    val passed = row.getAs[Long]("_passed")
-    val completeness = dataCols.toSeq.map(c => c -> row.getAs[Long](s"_ok_$c"))
+    val total = sum("_total")
+    val passed = sum("_passed")
+    val completeness = dataCols.map(c => c -> sum(s"_ok_$c"))
     val dateRange = dateCol.map { _ =>
-      DateRange(
-        Option(row.getAs[Timestamp]("_d_min")),
-        Option(row.getAs[Timestamp]("_d_max")),
-        row.getAs[Long]("_d_n"))
+      DateRange(stamps("_d_min").minByOption(_.toInstant), stamps("_d_max").maxByOption(_.toInstant),
+        sum("_d_n"))
     }
 
     // --- reason histogram (O11): count desc, ties by first occurrence, which
     // reproduces Counter.most_common()'s stable insertion-order ties ---
-    val reasons = flagged.filter(!col("passed"))
-      .groupBy("reason")
-      .agg(count(lit(1)).as("n"), min("row_id").as("first_row"))
-      .orderBy(col("n").desc, col("first_row").asc)
-      .collect()
-      .map(r => ReasonCount(r.getAs[String]("reason"), r.getAs[Long]("n"), r.getAs[Long]("first_row")))
-      .toSeq
+    val reasons = groups.filter(_.getAs[Long]("_failed") > 0)
+      .map(r => ReasonCount(r.getAs[String]("reason"), r.getAs[Long]("_failed"), r.getAs[Long]("_first_failed")))
+      .sortBy(r => (-r.count, r.firstRowId))
 
     // --- failure details (O10): positional index in the cleaned frame, as the
-    // reference reports (SURVEY.md H2). Computed WITHOUT a global window
-    // (which would funnel every row through one partition): filter first,
-    // then count each failed row's predecessors via a broadcast nested-loop
-    // join — map-side partial aggregation emits ≤ |failed| rows per input
-    // partition. The NLJ does |rows| × |failed| comparisons, so the listing
-    // is gated on |failed| ≤ maxFailedDetails: a report that would print
-    // >10k per-row lines is useless anyway, and past the cap the scalable
-    // answer is a side sink keyed by row_id, not a report section.
+    // reference reports (SURVEY.md H2), gated on |failed| ≤ maxFailedDetails:
+    // a report that would print >10k per-row lines is useless anyway, and past
+    // the cap the scalable answer is a side sink keyed by row_id, not a
+    // report section ---
     val failedDetails =
       if (!includeFailedDetails || (total - passed) > maxFailedDetails) Seq.empty
-      else {
-        val failed = flagged.filter(!col("passed"))
-          .select(col("row_id"), col("reason"), col("message"))
-        val preceding = flagged.select(col("row_id").as("_all_id"))
-          .join(broadcast(failed.select(col("row_id").as("_f_id"))),
-            col("_all_id") < col("_f_id"))
-          .groupBy(col("_f_id")).agg(count(lit(1)).as("_idx"))
-        failed.join(preceding, col("row_id") === col("_f_id"), "left")
-          .select(coalesce(col("_idx"), lit(0L)).as("_idx"),
-            col("reason"), col("message"))
-          .orderBy("_idx")
-          .collect()
-          .map(r => FailedDetail(r.getLong(0), r.getString(1), r.getString(2)))
-          .toSeq
-      }
+      else failureDetails(flagged)
 
     QualityStats(
       originalCount = originalCount,
@@ -133,5 +115,37 @@ object Stats {
       reasons = reasons,
       failedDetails = failedDetails,
       dateRange = dateRange)
+  }
+
+  /** Failed rows in `row_id` order, each with its position in the frame
+    * (the number of rows with a smaller `row_id`). Computed WITHOUT a global
+    * window or sort: the m failed ids are collected and broadcast sorted;
+    * each partition counts its rows into m + 1 buckets by binary search
+    * (bucket j = rows whose `row_id` is at or past exactly j failed ids), and
+    * failed row k's position is the prefix sum of the collected buckets
+    * 0..k. One job over all rows, O(n log m).
+    */
+  private def failureDetails(flagged: DataFrame): Seq[FailedDetail] = {
+    val failed = flagged.filter(!col("passed"))
+      .select(col("row_id"), col("reason"), col("message"))
+      .collect().sortBy(_.getLong(0))
+    if (failed.isEmpty) Seq.empty
+    else {
+      val ids = flagged.sparkSession.sparkContext.broadcast(failed.map(_.getLong(0)))
+      val buckets = flagged.select(col("row_id")).rdd.mapPartitions { rows =>
+        val fs = ids.value
+        val counts = new Array[Long](fs.length + 1)
+        rows.foreach { r =>
+          val i = java.util.Arrays.binarySearch(fs, r.getLong(0))
+          counts(if (i >= 0) i + 1 else -i - 1) += 1
+        }
+        Iterator.single(counts)
+      }.reduce { (a, b) => a.indices.foreach(i => a(i) += b(i)); a }
+      ids.destroy()
+      val positions = buckets.scanLeft(0L)(_ + _).tail
+      failed.toSeq.zip(positions).map { case (r, idx) =>
+        FailedDetail(idx, r.getString(1), r.getString(2))
+      }
+    }
   }
 }

@@ -18,8 +18,9 @@ case class ValidationConfig(
   * The reference runs nine predicates per row in a Python loop, collecting
   * ALL failure messages (joined by " ") and deriving the reason code from
   * the FIRST failure in check order title → content → url → published
-  * (validator.py:94-95). Here the whole thing is a single projection of
-  * column expressions — codegen'd, no per-row closures — that appends
+  * (validator.py:94-95). Here the whole thing is column expressions — the
+  * checks projected once as booleans, then the derived columns, all
+  * codegen'd with no per-row closures — that append
   * `errors: array<string>`, `passed: boolean`, `reason: string`,
   * `message: string` columns. Kept as a pure DataFrame → DataFrame function
   * to preserve the reference's standalone-validator composability (E3).
@@ -106,21 +107,30 @@ object Validator {
     * fallback (validator.py:99-117).
     */
   def withChecks(df: DataFrame, cs: Seq[(Column, String, Column)]): DataFrame = {
-    val errors = array_compact(array(cs.map { case (p, _, msg) =>
-      when(p, msg).otherwise(lit(null).cast("string"))
+    // Each predicate is projected ONCE as a boolean column, so the
+    // predicates share their stripped values through whole-stage codegen's
+    // subexpression elimination, and `errors` and `reason` read the flags
+    // instead of re-evaluating the checks. Keep `errors` free of
+    // `array_compact`/`filter`: they lower to the interpreted `ArrayFilter`,
+    // which takes the whole projection out of generated code.
+    val flags = cs.indices.map(i => s"_check_$i")
+    val checked = df.select(col("*") +: cs.zip(flags).map { case ((p, _, _), f) => p.as(f) }: _*)
+    // A true check whose message is null adds no error.
+    val errors = flatten(array(cs.zip(flags).map { case ((_, _, msg), f) =>
+      when(col(f) && msg.isNotNull, array(msg)).otherwise(array().cast("array<string>"))
     }: _*))
     // Reason code of the FIRST failing check, in list order. A check
     // without a code classifies as `validation_failed` IN ITS PLACE —
     // mirroring validator.py:99-117's unrecognized-message fallback —
     // rather than falling through to a later coded check (which would make
     // `reason` and `errors[0]` describe different checks).
-    val reason = coalesce(cs.map { case (p, code, _) =>
-      when(p, lit(if (code == null) "validation_failed" else code))
-        .otherwise(lit(null).cast("string"))
+    val reason = coalesce(cs.zip(flags).map { case ((_, code, _), f) =>
+      when(col(f), lit(if (code == null) "validation_failed" else code))
     }: _*)
-    df.withColumn("errors", errors)
+    checked.withColumn("errors", errors)
       .withColumn("passed", size(col("errors")) === 0)
       .withColumn("reason", when(!col("passed"), reason))
       .withColumn("message", when(!col("passed"), concat_ws(" ", col("errors"))))
+      .drop(flags: _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.ArrayFilter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -123,5 +124,43 @@ class ValidatorSpec extends SparkSuite {
     assert(!failed.getBoolean(1))
     assert(failed.getString(2) == "validation_failed")
     assert(failed.getString(3) == "Custom house rule failed.")
+  }
+
+  test("a true custom check with a null message adds no error and does not flip passed") {
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row.fromTuple(okRow), Row.fromTuple(okRow.copy(_2 = "Brief."))), 1),
+      schema)
+    val custom = Validator.checks(df, ValidationConfig()) :+
+      ((lit(true), "house_rule", lit(null).cast("string")))
+    val Seq(ok, short) = Validator.withChecks(df, custom)
+      .select("passed", "reason", "message", "errors").collect().toSeq
+    assert(ok.getBoolean(0) && ok.isNullAt(1) && ok.isNullAt(2))
+    assert(ok.getSeq[String](3).isEmpty)
+    assert(!short.getBoolean(0) && short.getString(1) == "short_content")
+    assert(short.getSeq[String](3) == Seq("Content is too short: 6 characters (minimum 120 required)."))
+  }
+
+  test("a check with a null code classifies as validation_failed in its place, not a later code") {
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row.fromTuple(okRow.copy(_2 = "Brief."))), 1), schema)
+    val custom = (lit(true), null: String, lit("Custom house rule failed.")) +:
+      Validator.checks(df, ValidationConfig())
+    val Seq(r) = Validator.withChecks(df, custom).select("passed", "reason", "message").collect().toSeq
+    assert(!r.getBoolean(0) && r.getString(1) == "validation_failed")
+    assert(r.getString(2) ==
+      "Custom house rule failed. Content is too short: 6 characters (minimum 120 required).")
+  }
+
+  test("withFlags runs as generated code: no interpreted ArrayFilter, every Project in a codegen stage") {
+    // array_compact/filter lower to ArrayFilter, a CodegenFallback that drops
+    // the whole projection out of whole-stage codegen (and its subexpression
+    // elimination), so every row would re-run the checks' regexes interpreted.
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row.fromTuple(okRow)), 1), schema)
+    val plan = Validator.withFlags(df).queryExecution.executedPlan
+    val text = plan.treeString
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayFilter]))), text)
+    val projects = text.split("\n").filter(_.contains("Project ["))
+    assert(projects.nonEmpty && projects.forall(_.matches("""^[\s:+-]*\*\(\d+\) Project \[.*""")), text)
   }
 }
