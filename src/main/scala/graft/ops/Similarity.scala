@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Overlap.overlap
+
 /** Similarity search over an embedding column (`embeddings.embedding`,
   * array<float>[64]).
   *
@@ -2060,29 +2062,18 @@ object Similarity {
     // tokenize vs embeddings bucket projection), but the sparse leg
     // materializes eagerly (bm25TopKFor's per-call cache-release
     // contract), which serialized the whole dense leg behind it. Submit
-    // both legs from their own threads (guide §2.6 — actions are only
-    // sequential because the driver calls them sequentially): each leg
-    // realizes its bounded |batch|·k result concurrently, and the fuse
-    // composes the two checkpointed frames. Leg plans and released rows
-    // are unchanged.
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val sparseF = Future {
-        TextAnalysis.bm25TopKServed(spark, dir, k)
-          .select(col("q_id"), col("doc_id"), col("rank").as("r_sparse"))
-      }
-      val denseF = Future {
-        annLshTopK(spark, dir, k,
-            queryPred = col("vec_id") <= TextAnalysis.ServeBatchMaxId)
-          .select(col("q_id"), col("n_id").as("doc_id"), col("rank").as("r_dense"))
-          .localCheckpoint(true)
-      }
-      fuseRrf(Await.result(sparseF, Duration.Inf),
-        Await.result(denseF, Duration.Inf), k, c)
-    } finally pool.shutdown()
+    // both legs side by side (guide §2.6 — actions are only sequential
+    // because the driver calls them sequentially): each leg realizes its
+    // bounded |batch|·k result concurrently, and the fuse composes the two
+    // checkpointed frames. Leg plans and released rows are unchanged.
+    val (sparse, dense) = overlap(spark)(
+      TextAnalysis.bm25TopKServed(spark, dir, k)
+        .select(col("q_id"), col("doc_id"), col("rank").as("r_sparse")),
+      annLshTopK(spark, dir, k,
+          queryPred = col("vec_id") <= TextAnalysis.ServeBatchMaxId)
+        .select(col("q_id"), col("n_id").as("doc_id"), col("rank").as("r_dense"))
+        .localCheckpoint(true))
+    fuseRrf(sparse, dense, k, c)
   }
 
   /** INDEXED hybrid serving — [[hybridRrfServed]]'s exact twin with BOTH

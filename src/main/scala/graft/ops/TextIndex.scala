@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Overlap.overlap
+
 /** Append-only incremental maintenance for the INVERTED text index — the
   * BM25 sibling of [[IncrementalIndex]] (vectors). The serving loops
   * ([[TextAnalysis.bm25TopKFor]], the streaming scorer) rebuild or cache
@@ -221,14 +223,10 @@ object TextIndex {
     // build's tokenize stage (a single input split at bench SF) leaves
     // cores idle that the batch tokenize back-fills. Rows, artifacts and
     // the promote ordering are unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val batchPost = Future(
-      postings(docs.filter(col("doc_id") % 10 === 0)).localCheckpoint(true))
-    val base = build(docs.filter(col("doc_id") % 10 =!= 0))
-    val grown = appendPostingsWith(base, Await.result(batchPost, Duration.Inf),
-      IncrementalIndex.CompactEvery, compact)
+    val (batchPost, base) = overlap(spark)(
+      postings(docs.filter(col("doc_id") % 10 === 0)).localCheckpoint(true),
+      build(docs.filter(col("doc_id") % 10 =!= 0)))
+    val grown = appendPostingsWith(base, batchPost, IncrementalIndex.CompactEvery, compact)
     val queries = docs.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("q_id"), col("text"))
     // bounded result (|queries| × k): materialize, then release the

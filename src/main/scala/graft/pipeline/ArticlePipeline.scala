@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Overlap.overlap
+
 /** Pipeline orchestration (reference O19, cleaner.py:284-393):
   * load → alias → clean text → standardize dates → drop incomplete →
   * dedup keep-first → validate → {save valid subset, quality report}.
@@ -12,9 +14,12 @@ import org.apache.spark.sql.functions._
   * The reference materializes a new frame after every step; here the whole
   * chain is ONE lazy logical plan, built in one place for both entry points
   * — the clean/date kernels run in one codegen'd stage after the scan's
-  * repartition, the validation kernels in one after dedup — cached at the
-  * drop count and at the post-validation fan-out point (counts + report
-  * aggregates + sink all reuse it).
+  * repartition, the validation kernels in one after dedup. `run` caches it
+  * twice: the cleaned and dated rows before the incomplete-row filter (the
+  * file is parsed once, and one aggregate over this cache gives the loaded
+  * and complete counts), and the validated frame, whose three readers — the
+  * statistics aggregate, the failed-row listing and the sink — run side by
+  * side on [[graft.Overlap]].
   */
 object ArticlePipeline {
 
@@ -25,9 +30,9 @@ object ArticlePipeline {
 
   /** Build the cleaned + validation-flagged frame without any actions. */
   def cleanAndFlag(raw: DataFrame, cfg: ValidationConfig = ValidationConfig()): DataFrame =
-    flag(completeRows(raw), cfg)
+    flag(CleanSteps.dropIncomplete(datedRows(raw)), cfg)
 
-  /** Repartition → alias → clean text → standardize dates → drop incomplete.
+  /** Repartition → alias → clean text → standardize dates.
     *
     * A multiLine JSON file is one partition, so the loaded frame is
     * hash-repartitioned on `row_id` first and the text and date kernels run
@@ -36,15 +41,13 @@ object ArticlePipeline {
     * partition count is explicit because AQE would coalesce a small input
     * back into one partition.
     */
-  private def completeRows(raw: DataFrame): DataFrame = {
+  private def datedRows(raw: DataFrame): DataFrame = {
     val partitions = raw.sparkSession.sessionState.conf.numShufflePartitions
     val aliased = ArticleSchema.aliasPublished(raw.repartition(partitions, col("row_id")))
     val cleaned = TextClean.cleanColumns(aliased)
-    val dated =
-      if (cleaned.columns.contains("published_date"))
-        cleaned.withColumn("published_date", Dates.parseIsoDate(col("published_date")))
-      else cleaned
-    CleanSteps.dropIncomplete(dated)
+    if (cleaned.columns.contains("published_date"))
+      cleaned.withColumn("published_date", Dates.parseIsoDate(col("published_date")))
+    else cleaned
   }
 
   /** Dedup keep-first → validate. */
@@ -64,35 +67,35 @@ object ArticlePipeline {
       cfg: ValidationConfig = ValidationConfig(),
       prettyArray: Boolean = false): Result = {
 
-    val raw = ArticleSchema.load(spark, inputPath)
-    val originalCount = raw.count()
-
-    // Two cheap intermediate actions give the funnel counts the report needs;
-    // the pre-dedup frame is tiny relative to the scan so we count it directly.
-    val complete = completeRows(raw).cache()
-    val afterDrop = complete.count()
-    val flagged = flag(complete, cfg).cache()
-    val afterDedup = flagged.count()
-
-    val stats = Stats.collect(
-      flagged,
-      originalCount = originalCount,
-      deletedIncomplete = originalCount - afterDrop,
-      deletedDuplicates = afterDrop - afterDedup)
+    val dated = datedRows(ArticleSchema.load(spark, inputPath)).cache()
+    val kept = CleanSteps.completePredicate(dated).getOrElse(lit(true))
+    // the validated frame's plan is built and cached while the funnel runs
+    val (funnel, flagged) = overlap(spark)(
+      dated.agg(count(lit(1)), count(when(kept, 1))).head(),
+      flag(CleanSteps.dropIncomplete(dated), cfg).cache())
+    val (originalCount, afterDrop) = (funnel.getLong(0), funnel.getLong(1))
 
     // Global sort only on the pretty-array (golden-parity, test-scale) path —
     // the scalable JSONL sink has no ordering contract, so forcing a total
     // sort there would be a wasted exchange at scale.
     val valid = flagged.filter(col("passed"))
-    if (prettyArray)
-      writePrettyJsonArray(valid.orderBy("row_id").drop(flagCols: _*), outputPath)
-    else valid.drop(flagCols: _*).write.mode("overwrite").json(outputPath)
+    val (collected, _) = overlap(spark)(
+      Stats.collect(
+        flagged,
+        originalCount = originalCount,
+        deletedIncomplete = originalCount - afterDrop,
+        deletedDuplicates = 0),
+      if (prettyArray)
+        writePrettyJsonArray(valid.orderBy("row_id").drop(flagCols: _*), outputPath)
+      else valid.drop(flagCols: _*).write.mode("overwrite").json(outputPath))
+    // dedup's count is the aggregate's total over the same frame
+    val stats = collected.copy(deletedDuplicates = afterDrop - collected.cleanedCount)
 
     val report = Reports.qualityReport(stats, cfg)
     Option(Paths.get(reportPath).getParent).foreach(Files.createDirectories(_))
     Files.writeString(Paths.get(reportPath), report)
 
-    complete.unpersist()
+    dated.unpersist()
     Result(flagged, stats, report)
   }
 

@@ -10,15 +10,18 @@ object CleanSteps {
 
   val requiredCols: Seq[String] = Seq("title", "content", "url")
 
+  /** [[dropIncomplete]]'s keep predicate: every present required column is
+    * non-blank. `None` when no required column is present.
+    */
+  def completePredicate(df: DataFrame, required: Seq[String] = requiredCols): Option[Column] =
+    required.filter(df.columns.contains).map(c => !isBlank(col(c))).reduceOption(_ && _)
+
   /** Drop rows where any present required column is blank
     * (cleaner.py:85-103). Absent columns are skipped silently, matching the
     * reference. A pure `Filter` — Catalyst pushes it toward the scan.
     */
-  def dropIncomplete(df: DataFrame, required: Seq[String] = requiredCols): DataFrame = {
-    val present = required.filter(df.columns.contains)
-    if (present.isEmpty) df
-    else df.filter(present.map(c => !isBlank(col(c))).reduce(_ && _))
-  }
+  def dropIncomplete(df: DataFrame, required: Seq[String] = requiredCols): DataFrame =
+    completePredicate(df, required).fold(df)(p => df.filter(p))
 
   /** Keep-FIRST deduplication by key columns (cleaner.py:106-121).
     *

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Overlap.overlap
+
 import TextClean.isBlank
 
 case class ReasonCount(reason: String, count: Long, firstRowId: Long)
@@ -37,8 +39,10 @@ case class QualityStats(
   * per-column completeness, the date range AND the reason histogram come
   * from ONE aggregate grouped by `reason` — at most one group per reason
   * code plus the passed rows' null group — whose few rows are collected
-  * and summed. The failure-detail listing takes two more jobs (see
-  * `failureDetails`). Call on a cached flagged frame.
+  * and summed. The failure-detail listing and its positions run side by
+  * side with it on [[graft.Overlap]]; the positions take one more job,
+  * only when the listing passes its gate (see `failureDetails`). Call on a
+  * cached flagged frame.
   */
 object Stats {
 
@@ -77,7 +81,9 @@ object Stats {
       Seq(min(ts).as("_d_min"), max(ts).as("_d_max"), count(ts).as("_d_n"))
     }
     val aggs = baseAggs ++ complAggs ++ dateAggs
-    val groups = flagged.groupBy(col("reason")).agg(aggs.head, aggs.tail: _*).collect().toSeq
+    val (groups, failedDetails) = overlap(flagged.sparkSession)(
+      flagged.groupBy(col("reason")).agg(aggs.head, aggs.tail: _*).collect().toSeq,
+      if (includeFailedDetails) failureDetails(flagged, maxFailedDetails) else Seq.empty)
     def sum(name: String): Long = groups.map(_.getAs[Long](name)).sum
     def stamps(name: String): Seq[Timestamp] = groups.flatMap(r => Option(r.getAs[Timestamp](name)))
 
@@ -95,15 +101,6 @@ object Stats {
       .map(r => ReasonCount(r.getAs[String]("reason"), r.getAs[Long]("_failed"), r.getAs[Long]("_first_failed")))
       .sortBy(r => (-r.count, r.firstRowId))
 
-    // --- failure details (O10): positional index in the cleaned frame, as the
-    // reference reports (SURVEY.md H2), gated on |failed| ≤ maxFailedDetails:
-    // a report that would print >10k per-row lines is useless anyway, and past
-    // the cap the scalable answer is a side sink keyed by row_id, not a
-    // report section ---
-    val failedDetails =
-      if (!includeFailedDetails || (total - passed) > maxFailedDetails) Seq.empty
-      else failureDetails(flagged)
-
     QualityStats(
       originalCount = originalCount,
       cleanedCount = total,
@@ -117,19 +114,27 @@ object Stats {
       dateRange = dateRange)
   }
 
-  /** Failed rows in `row_id` order, each with its position in the frame
-    * (the number of rows with a smaller `row_id`). Computed WITHOUT a global
-    * window or sort: the m failed ids are collected and broadcast sorted;
-    * each partition counts its rows into m + 1 buckets by binary search
-    * (bucket j = rows whose `row_id` is at or past exactly j failed ids), and
-    * failed row k's position is the prefix sum of the collected buckets
-    * 0..k. One job over all rows, O(n log m).
+  /** Failure details (O10): the failed rows in `row_id` order, each with
+    * its positional index in the cleaned frame, as the reference reports
+    * (SURVEY.md H2) — the number of rows with a smaller `row_id`.
+    *
+    * Gated on |failed| ≤ maxFailedDetails: a report that would print >10k
+    * per-row lines is useless anyway, and past the cap the scalable answer
+    * is a side sink keyed by row_id, not a report section. The listing
+    * collects at most one row past the cap, which is how it knows the gate.
+    *
+    * Positions are computed WITHOUT a global window or sort: the m failed
+    * ids are broadcast sorted; each partition counts its rows into m + 1
+    * buckets by binary search (bucket j = rows whose `row_id` is at or past
+    * exactly j failed ids), and failed row k's position is the prefix sum
+    * of the collected buckets 0..k. One job over all rows, O(n log m).
     */
-  private def failureDetails(flagged: DataFrame): Seq[FailedDetail] = {
+  private def failureDetails(flagged: DataFrame, maxFailedDetails: Long): Seq[FailedDetail] = {
+    val listed = (maxFailedDetails.max(-1L).min(Int.MaxValue - 1L) + 1).toInt
     val failed = flagged.filter(!col("passed"))
       .select(col("row_id"), col("reason"), col("message"))
-      .collect().sortBy(_.getLong(0))
-    if (failed.isEmpty) Seq.empty
+      .limit(listed).collect().sortBy(_.getLong(0))
+    if (failed.isEmpty || failed.length > maxFailedDetails) Seq.empty
     else {
       val ids = flagged.sparkSession.sparkContext.broadcast(failed.map(_.getLong(0)))
       val buckets = flagged.select(col("row_id")).rdd.mapPartitions { rows =>

@@ -28,10 +28,8 @@ object ValidatorMain {
 
     val raw = ArticleSchema.load(spark, input)
     val flagged = Validator.withFlags(ArticleSchema.aliasPublished(raw)).cache()
-    val stats = Stats.collect(flagged,
-      originalCount = flagged.count(),
-      deletedIncomplete = 0,
-      deletedDuplicates = 0)
+    val counted = Stats.collect(flagged, originalCount = 0, deletedIncomplete = 0, deletedDuplicates = 0)
+    val stats = counted.copy(originalCount = counted.total)
     val report = Reports.validationReport(stats)
     println(report)
     reportPath.foreach { p =>

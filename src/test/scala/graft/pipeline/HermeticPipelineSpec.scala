@@ -2,11 +2,15 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSuite
 
@@ -36,6 +40,28 @@ class HermeticPipelineSpec extends SparkSuite {
     out.foreach { case (name, text) =>
       assert(text == expected(name), s"$name deviates from the recorded output")
     }
+  }
+
+  /** The funnel aggregate, the sink write, the statistics aggregate, the
+    * failure listing and its position job's `.rdd` — the file is parsed and
+    * each count taken once. */
+  test("a JSONL-mode run takes 5 SQL executions") {
+    val dir = Files.createTempDirectory("graft-executions")
+    val executions = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      ArticlePipeline.run(spark, HermeticPipelineSpec.fixture, s"$dir/sink_jsonl", s"$dir/report.txt")
+        .cleaned.unpersist()
+      TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(executions.get == 5)
   }
 }
 
