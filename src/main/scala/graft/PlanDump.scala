@@ -2,14 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for named queries to files — the
   * optimization rounds' plan-evidence artifact (`plans/rNN/<q>_before.txt`
   * / `_after.txt`). Usage:
   * `runMain graft.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]`.
-  * Session config matches `graft.Bench` (same master/shuffle settings via
-  * SPARK_GRAFT_CPUS) so the dumped plan is the benched plan.
+  * Runs on [[GraftSession]], as `graft.Bench` does, so the dumped plan is
+  * the benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,15 +15,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, dir)

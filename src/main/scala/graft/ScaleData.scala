@@ -83,15 +83,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     keyCols.keys.toSeq.sorted.foreach { t =>
       scaled(spark, srcDir, t, copies)
         .write.mode("overwrite").parquet(s"$dstDir/$t.parquet")

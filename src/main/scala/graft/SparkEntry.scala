@@ -2,17 +2,46 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{Analytics, AsofJoin, Clustering, Corpus, Dedup, DocValidation, Events, FuzzyJoin, IncrementalAgg, Multimodal, PageRank, RangeJoin, Sampling, SimHashOracle, Similarity, Skew, StorageLayout, TextAnalysis, TimeSeries, Tpch, TpchAdapted, TpchTail}
+import graft.ops.{Analytics, AsofJoin, BpeTrain, Centroid, Clustering, Contrastive, Corpus,
+  CorpusRefresh, Dedup, DocValidation, Events, Experiment, FuzzyJoin, GeoJoin, GraphAnn,
+  IncrementalAgg, MarketBasket, MaxSim, Multimodal, PageRank, QualityModel, RangeJoin, Sampling,
+  SetSimJoin, SimHashOracle, Similarity, Skew, StorageLayout, TableChecks, TextAnalysis,
+  TextIndex, TimeSeries, Tpch, TpchAdapted, TpchTail, UnigramLm}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import QuerySpec.{Check, Fitted, Oracle, RowsOnly}
+
+/** One registered query: how to build it, how its rows are checked, and
+  * whether the bench sweep times it. */
+final case class QuerySpec(name: String, build: SparkEntry.Build, check: Check,
+    benched: Boolean = true)
+
+object QuerySpec {
+  sealed trait Check
+  /** DuckDB SQL over the same parquet tables. A thunk, so listing the
+    * registry never renders an oracle. */
+  final case class Oracle(sql: () => String) extends Check
+  /** The oracle embeds a data-fitted model (centroids, codebooks, PCA, LR
+    * weights), so it exists only once the fitted-oracle contexts are bound:
+    * `Similarity`, `Multimodal` and `QualityModel.setOracleContext`, which
+    * `Verify` calls before its dump. */
+  case object Fitted extends Check
+  /** No oracle: the rows are checked by a spec instead, for this reason. */
+  final case class RowsOnly(reason: String) extends Check
+}
+
+/** The query registry (SURVEY.md §7): every query the engine registers, as
+  * `(SparkSession, sfDir) => DataFrame`, each paired where SQL-expressible
+  * with a DuckDB oracle over the same parquet tables. Column names and row
+  * ordering are aligned between the Spark query and its oracle: the
+  * correctness compare sorts columns by name and hashes values, so both
+  * must agree exactly.
   *
-  * Every operator family exposes `(SparkSession, sfDir) => DataFrame`
-  * entries here, each paired (where SQL-expressible) with DuckDB oracle SQL
-  * over the same parquet tables. Column names and row ordering are aligned
-  * between the Spark query and its oracle — the driver's compare sorts
-  * columns by name and hashes values, so both must agree exactly.
+  * [[specs]] is the one declaration; `queries`, `oracleSql` and
+  * `benchQueries` are views of it.
   */
 object SparkEntry {
+
+  type Build = (SparkSession, String) => DataFrame
 
   /** Flagship: TPC-H Q5-shaped 6-table star join — broadcast dims, one
     * fact-fact shuffle, partial aggregation. Representative of the plan
@@ -21,772 +50,522 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Tpch.q5LocalSupplier(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 plus the
-    * LLM-pipeline extension suite (dedup / similarity / text analysis /
-    * event-time windows).
-    */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference operator family (O2–O15) over the documents table ---
-    "filter_incomplete"      -> (DocValidation.filterIncomplete _),
-    "validate_flags"         -> (DocValidation.validateFlags _),
-    "reason_histogram"       -> (DocValidation.reasonHistogram _),
-    "top1_reason"            -> (DocValidation.top1Reason _),
-    "completeness"           -> (DocValidation.completeness _),
-    "date_range"             -> (DocValidation.dateRange _),
-    "dedup_exact_keep_first" -> (DocValidation.dedupKeepFirst _),
-    "clean_text"             -> (DocValidation.cleanText _),
-    "parse_dates"            -> (DocValidation.parseDates _),
-    "article_funnel"         -> (DocValidation.articleFunnel _),
-    // --- relational/star-schema suite (joins, aggregates, top-k) ---
-    "tpch_q1"        -> (Tpch.q1PricingSummary _),
-    "tpch_q3"        -> (Tpch.q3ShippingPriority _),
-    "tpch_q4"        -> (Tpch.q4OrderPriority _),
-    "tpch_q5"        -> (Tpch.q5LocalSupplier _),
-    "tpch_q6"        -> (Tpch.q6ForecastRevenue _),
-    "tpch_q10"       -> (Tpch.q10ReturnedItems _),
-    "tpch_q14"       -> (Tpch.q14PromoRevenue _),
-    "customers_without_urgent" -> (Tpch.customersWithoutUrgent _),
-    "parts_in_both_years" -> (Tpch.partsInBothYears _),
-    "setop_all_shipments" -> (Tpch.setopAllShipments _),
-    "suppliers_no_returns" -> (Tpch.suppliersNoReturns _),
-    "fuzzy_part_pairs"   -> ((s, d) => FuzzyJoin.fuzzyPartPairs(s, d)),
-    "sorted_neighborhood_pairs" -> ((s, d) => FuzzyJoin.sortedNeighborhoodPairs(s, d)),
-    "fuzzy_entity_clusters" -> ((s, d) => FuzzyJoin.fuzzyEntityClusters(s, d)),
-    "entity_golden_records" -> ((s, d) => FuzzyJoin.entityGoldenRecords(s, d)),
-    "incremental_customer_revenue" -> (IncrementalAgg.incrementalCustomerRevenue _),
-    "doc_pagerank"     -> (PageRank.docPageRank _),
-    "doc_personalized_pagerank" -> (PageRank.docPersonalizedPageRank _),
-    "doc_hits"         -> (PageRank.docHits _),
-    "doc_triangles"    -> (PageRank.docTriangles _),
-    "doc_components"   -> (PageRank.docComponents _),
-    "kcore_docs"       -> (PageRank.docCoreness _),
-    "page_scc"         -> (PageRank.pageScc _),
-    "doc_communities"  -> (PageRank.docCommunities _),
-    "community_modularity" -> (PageRank.communityModularity _),
-    "doc_bfs_levels"   -> (PageRank.docBfsLevels _),
-    "hierarchy_paths"  -> (PageRank.hierarchyPaths _),
-    "top_customers"  -> (Tpch.topCustomers _),
-    "also_bought"    -> ((s, d) => Tpch.alsoBought(s, d)),
-    "distinct_parts" -> (Tpch.distinctParts _),
-    // --- decision-support tail (subquery / outer-join shapes) ---
-    "tpch_q7"  -> (TpchTail.q7VolumeShipping _),
-    "tpch_q8"  -> (TpchTail.q8MarketShare _),
-    "tpch_q13" -> (TpchTail.q13OrderDistribution _),
-    "tpch_q15" -> (TpchTail.q15TopSupplier _),
-    "tpch_q17" -> (TpchTail.q17SmallQuantity _),
-    "tpch_q18" -> (TpchTail.q18LargeVolume _),
-    "tpch_q19" -> (TpchTail.q19DiscountedRevenue _),
-    "tpch_q22" -> (TpchTail.q22SalesOpportunity _),
-    // --- the partsupp/shipmode-dependent remainder, schema-adapted ---
-    "tpch_q2"  -> (TpchAdapted.q2MinCostSupplier _),
-    "tpch_q9"  -> (TpchAdapted.q9ProductProfit _),
-    "tpch_q11" -> (TpchAdapted.q11ImportantParts _),
-    "tpch_q12" -> (TpchAdapted.q12LateShipments _),
-    "tpch_q16" -> (TpchAdapted.q16SupplierCounts _),
-    "tpch_q20" -> (TpchAdapted.q20ShareOfPart _),
-    "tpch_q21" -> (TpchAdapted.q21WaitingSupplier _),
-    // --- analytic windows (running total, top-n per group, lag, ntile) ---
-    "running_revenue"         -> (Analytics.runningRevenue _),
-    "top_orders_per_customer" -> (Analytics.topOrdersPerCustomer _),
-    "user_event_gaps"         -> (Analytics.userEventGaps _),
-    "value_quartiles"         -> (Analytics.valueQuartiles _),
-    "rank_family"             -> (Analytics.rankFamily _),
-    "scd2_value_tiers"        -> (Analytics.scd2ValueTiers _),
-    "scd2_temporal_join"      -> (Analytics.scd2TemporalJoin _),
-    "rolling_revenue_7d"      -> (Analytics.rollingRevenue7d _),
-    "revenue_pareto"          -> (Analytics.revenuePareto _),
-    "fulfillment_sla"         -> (Analytics.fulfillmentSla _),
-    "skyline_orders"          -> (Analytics.skylineOrders _),
-    "value_quartiles_approx"  -> ((s, d) => Analytics.valueQuartilesApprox(s, d)),
-    // --- event-time windowing (streaming-ready shapes) ---
-    "events_tumbling" -> (Events.tumbling _),
-    "events_sliding"  -> (Events.sliding _),
-    "events_sessions" -> (Events.sessions _),
-    "events_sessions_sw" -> (Events.sessionsViaSessionWindow _),
-    "conversion_funnel" -> (Events.conversionFunnel _),
-    "ordered_funnel" -> (Events.orderedFunnel _),
-    "event_transitions" -> (Events.eventTransitions _),
-    "event_trigrams" -> ((s, d) => Events.eventTrigrams(s, d)),
-    "multi_touch_attribution" -> (Events.multiTouchAttribution _),
-    "shapley_attribution" -> (Events.shapleyAttribution _),
-    "markov_removal_attribution" -> (Events.markovRemovalAttribution _),
-    "conversion_latency" -> (Events.conversionLatency _),
-    "view_purchase_recon" -> (Events.viewPurchaseRecon _),
-    "props_json_stats" -> (Events.propsJsonStats _),
-    "value_mad_outliers" -> (Events.valueMadOutliers _),
-    "daily_gap_filled" -> (TimeSeries.dailyGapFilled _),
-    "rolling_dau_7d" -> (TimeSeries.rollingDau7d _),
-    "rolling_dau_7d_hll" -> (TimeSeries.rollingDau7dHll _),
-    "cusum_changepoints" -> (TimeSeries.cusumChangepoints _),
-    "daily_count_anomalies" -> (TimeSeries.dailyCountAnomalies _),
-    "ewma_daily" -> (TimeSeries.ewmaDaily _),
-    "holt_daily" -> (TimeSeries.holtDaily _),
-    "holt_winters_daily" -> (TimeSeries.holtWintersDaily _),
-    "forecast_backtest" -> (TimeSeries.forecastBacktest _),
-    "weekday_seasonality" -> (TimeSeries.weekdaySeasonality _),
-    "rolling_dau_7d_bitmap" -> (TimeSeries.rollingDau7dBitmap _),
-    "theil_sen_daily_trend" -> (TimeSeries.theilSenDailyTrend _),
-    "benford_audit" -> (TimeSeries.benfordAudit _),
-    "geo_near_pairs" -> ((s, d) => graft.ops.GeoJoin.geoNearPairs(s, d)),
-    "contrastive_batch_negatives" -> ((s, d) => graft.ops.Contrastive.batchNegatives(s, d)),
-    "hard_negatives_lsh" -> ((s, d) => graft.ops.Contrastive.hardNegativesLsh(s, d)),
-    "triplet_mining" -> (graft.ops.Contrastive.tripletMining _),
-    "winsorized_stats" -> (Events.winsorizedStats _),
-    "cohort_retention" -> (Events.cohortRetention _),
-    "km_purchase_gaps" -> (Events.kmPurchaseGaps _),
-    "sequence_match_conversions" -> (Events.sequenceMatchConversions _),
-    "bootstrap_mean_ci" -> (Events.bootstrapMeanCi _),
-    "media_resize" -> (Multimodal.mediaResize _),
-    "cc_scrub" -> (Corpus.ccScrub _),
-    "debounce_events" -> (Events.debounceEvents _),
-    "user_feature_store" -> (Events.userFeatureStore _),
-    "hour_value_regression" -> (Events.hourValueRegression _),
-    "correlation_matrix" -> (graft.ops.TableChecks.correlationMatrix _),
-    "replica_bucket_diff" -> (graft.ops.TableChecks.replicaBucketDiff _),
-    "data_quality_checks" -> ((s, d) => graft.ops.TableChecks.dataQualityChecks(s, d)),
-    "snapshot_diff" -> ((s, d) => graft.ops.TableChecks.snapshotDiff(s, d)),
-    "k_anonymity_audit" -> ((s, d) => graft.ops.TableChecks.kAnonymityAudit(s, d)),
-    "l_diversity_audit" -> ((s, d) => graft.ops.TableChecks.lDiversityAudit(s, d)),
-    "t_closeness_audit" -> ((s, d) => graft.ops.TableChecks.tClosenessAudit(s, d)),
-    "dp_noisy_counts" -> ((s, d) => graft.ops.TableChecks.dpNoisyCounts(s, d)),
-    "dp_noisy_sum_mean" -> ((s, d) => graft.ops.TableChecks.dpNoisySumMean(s, d)),
-    "dp_thresholded_vocab" -> (graft.ops.TableChecks.dpThresholdedVocab _),
-    "dp_quantiles" -> (graft.ops.TableChecks.dpQuantiles _),
-    "subject_access_export" -> ((s, d) => graft.ops.TableChecks.subjectAccessExport(s, d)),
-    "ttl_purge_plan" -> ((s, d) => graft.ops.TableChecks.ttlPurgePlan(s, d)),
-    "erasure_cascade" -> (graft.ops.TableChecks.erasureCascade _),
-    "psi_drift" -> (graft.ops.TableChecks.psiDrift _),
-    "oov_rate_audit" -> ((s, d) => graft.ops.TextAnalysis.oovRateAudit(s, d)),
-    "ab_cuped_lift" -> (graft.ops.Experiment.abCupedLift _),
-    "ring_rebalance" -> (graft.ops.StorageLayout.ringRebalance _),
-    "ab_conversion_ztest" -> (graft.ops.Experiment.abConversionZtest _),
-    "ab_rank_test" -> (graft.ops.Experiment.abRankTest _),
-    "ab_rank_test_bucketed" -> ((s, d) => graft.ops.Experiment.abRankTestBucketed(s, d)),
-    "ab_diff_in_diff" -> (graft.ops.Experiment.abDiffInDiff _),
-    "ab_srm_check" -> (graft.ops.Experiment.abSrmCheck _),
-    "ips_policy_value" -> ((s, d) => graft.ops.Experiment.ipsPolicyValue(s, d)),
-    "ab_sequential_msprt" -> (graft.ops.Experiment.abSequentialMsprt _),
-    "source_concentration" -> ((s, d) => graft.ops.TableChecks.sourceConcentration(s, d)),
-    "pseudonymized_revenue" -> ((s, d) => graft.ops.TableChecks.pseudonymizedRevenue(s, d)),
-    "merge_upsert" -> ((s, d) => graft.ops.TableChecks.mergeUpsert(s, d)),
-    "merge_change_feed" -> ((s, d) => graft.ops.TableChecks.mergeChangeFeed(s, d)),
-    "skew_report" -> ((s, d) => Skew.skewReport(s, d)),
-    "join_size_estimate" -> ((s, d) => Skew.joinSizeEstimate(s, d)),
-    "profile_columns" -> ((s, d) => graft.ops.TableChecks.profileColumns(s, d)),
-    "profile_columns_approx" -> ((s, d) => graft.ops.TableChecks.profileColumnsApprox(s, d)),
-    "value_percentiles" -> (Events.valuePercentiles _),
-    "value_percentiles_approx" -> ((s, d) => Events.valuePercentilesApprox(s, d)),
-    "asof_last_click" -> (AsofJoin.asofLastClick _),
-    "asof_native_last_click" -> (AsofJoin.asofLastClickNative _),
-    "asof_click_within" -> (AsofJoin.asofClickWithin _),
-    "asof_next_click" -> (AsofJoin.asofNextClick _),
-    "events_in_windows" -> (RangeJoin.eventsInWindows _),
-    "salted_user_age" -> (Skew.saltedUserAge _),
-    "skewed_host_age" -> (Skew.skewedHostAge _),
-    "distinct_parts_approx" -> ((s, d) => Skew.distinctPartsApprox(s, d)),
-    // --- text analysis ---
-    "token_stats"   -> (TextAnalysis.tokenStats _),
-    "bpe_token_stats" -> (TextAnalysis.bpeTokenStats _),
-    "bpe_merges"    -> ((s, d) => graft.ops.BpeTrain.bpeMerges(s, d)),
-    "bpe_byte_merges" -> ((s, d) => graft.ops.BpeTrain.bpeByteMerges(s, d)),
-    "wordpiece_merges" -> ((s, d) => graft.ops.BpeTrain.wordpieceMerges(s, d)),
-    "bpe_byte_segment_stats" -> ((s, d) => graft.ops.BpeTrain.bpeByteSegmentStats(s, d)),
-    "bpe_segment_stats" -> ((s, d) => graft.ops.BpeTrain.bpeSegmentStats(s, d)),
-    "unigram_lm_vocab" -> ((s, d) => graft.ops.UnigramLm.unigramLmVocab(s, d)),
-    "unigram_segment_stats" -> ((s, d) => graft.ops.UnigramLm.unigramSegmentStats(s, d)),
-    "quality_score" -> (TextAnalysis.qualityScore _),
-    "conformal_calibration" -> ((s, d) => graft.ops.QualityModel.conformalCalibration(s, d)),
-    "dsir_weights" -> ((s, d) => graft.ops.QualityModel.dsirWeights(s, d)),
-    "quality_lr_score" ->(graft.ops.QualityModel.qualityLrScore _),
-    "lr_eval_metrics" -> (graft.ops.QualityModel.lrEvalMetrics _),
-    "lr_calibration_bins" -> (graft.ops.QualityModel.lrCalibrationBins _),
-    "quality_weighted_sample" -> ((s, d) => graft.ops.QualityModel.qualityWeightedSample(s, d)),
-    "quality_prune" -> ((s, d) => TextAnalysis.qualityPrune(s, d)),
-    "quality_prune_approx" -> ((s, d) => TextAnalysis.qualityPruneApprox(s, d)),
-    "lang_id"       -> (TextAnalysis.langId _),
-    "lang_id_confusion" -> (TextAnalysis.langIdConfusion _),
-    "nearest_centroid_confusion" -> (graft.ops.Centroid.nearestCentroidConfusion _),
-    "fingerprint"   -> (TextAnalysis.fingerprint _),
-    "winnow_fingerprints" -> (TextAnalysis.winnowFingerprints _),
-    "vocab_top_terms" -> ((s, d) => TextAnalysis.vocabTopTerms(s, d)),
-    "percolate_alerts" -> (TextAnalysis.percolateAlerts _),
-    "percolate_boolean_alerts" -> (TextAnalysis.percolateBooleanAlerts _),
-    "zipf_fit" -> (TextAnalysis.zipfFit _),
-    "lang_source_mi" -> (TextAnalysis.langSourceMi _),
-    "source_vocab_overlap" -> (TextAnalysis.sourceVocabOverlap _),
-    "vocab_heavy_hitters_cms" -> ((s, d) => TextAnalysis.vocabHeavyHittersCms(s, d)),
-    "length_histogram" -> ((s, d) => TextAnalysis.lengthHistogram(s, d)),
-    "quantile_normalize_map" -> (Corpus.quantileNormalizeMap _),
-    "distinctive_terms" -> ((s, d) => TextAnalysis.distinctiveTerms(s, d)),
-    "distinctive_terms_agg" -> ((s, d) => TextAnalysis.distinctiveTermsAgg(s, d)),
-    "bm25_topk" -> ((s, d) => TextAnalysis.bm25TopK(s, d)),
-    "bm25_topk_served" -> ((s, d) => TextAnalysis.bm25TopKServed(s, d)),
-    "bm25_prf_topk"    -> ((s, d) => TextAnalysis.bm25PrfTopK(s, d)),
-    "bm25_prf_indexed" -> ((s, d) => TextAnalysis.bm25PrfTopKIndexed(s, d)),
-    "qld_topk"         -> ((s, d) => TextAnalysis.qldTopK(s, d)),
-    "qld_indexed"      -> ((s, d) => TextAnalysis.qldTopKIndexed(s, d)),
-    "bm25_topk_indexed" -> ((s, d) => graft.ops.TextIndex.bm25TopKIndexed(s, d)),
-    "phrase_search" -> ((s, d) => TextAnalysis.phraseSearch(s, d)),
-    "pmi_pairs" -> ((s, d) => TextAnalysis.pmiPairs(s, d)),
-    "rake_keyphrases" -> ((s, d) => TextAnalysis.rakeKeyphrases(s, d)),
-    "vocab_divergence" -> ((s, d) => TextAnalysis.vocabDivergence(s, d)),
-    "doc_top_tokens" -> (TextAnalysis.docTopTokens _),
-    // --- deduplication suite ---
-    "ngram_jaccard_pairs" -> (Dedup.ngramJaccardPairs _),
-    "prefix_jaccard_pairs" -> (graft.ops.SetSimJoin.prefixJaccardPairs _),
-    "split_leakage_audit" -> (graft.ops.SetSimJoin.splitLeakageAudit _),
-    "minhash_lsh_pairs"   -> (Dedup.minhashLshPairs _),
-    "incremental_near_dup" -> (Dedup.incrementalNearDup _),
-    "repeated_ngram_spans" -> ((s, d) => Dedup.repeatedNgramSpans(s, d)),
-    "cross_doc_spans"     -> ((s, d) => Dedup.crossDocSpans(s, d)),
-    "cut_spans"           -> ((s, d) => Dedup.cutSpans(s, d)),
-    "near_dup_clusters"   -> ((s, d) => Dedup.nearDupClusters(s, d)),
-    "corpus_dedup_report" -> (Dedup.corpusDedupReport _),
-    "winnow_near_dup"     -> ((s, d) => Dedup.winnowNearDupPairs(s, d)),
-    "simhash"             -> (Dedup.simhash _),
-    "simhash_near_dup"    -> ((s, d) => Dedup.simhashNearDup(s, d)),
-    "embedding_near_dup"  -> ((s, d) => Dedup.embeddingNearDup(s, d)),
-    "embedding_near_dup_lsh" -> ((s, d) => Dedup.embeddingNearDupLsh(s, d)),
-    "events_rollup" -> (Events.rollupByTypeDay _),
-    "events_cube"   -> (Events.cubeByTypeDay _),
-    "events_grouping_sets" -> (Events.groupingSetsByTypeDay _),
-    "events_pivot"  -> (Events.eventsPivot _),
-    // --- similarity search ---
-    "ann_topk_brute" -> ((s, d) => Similarity.annTopKBrute(s, d)),
-    "hybrid_rrf_topk" -> ((s, d) => Similarity.hybridRrfTopK(s, d)),
-    "hybrid_rrf_lsh_topk" -> ((s, d) => Similarity.hybridRrfLshTopK(s, d)),
-    "hybrid_rrf_served" -> ((s, d) => Similarity.hybridRrfServed(s, d)),
-    "hybrid_rrf_indexed" -> ((s, d) => Similarity.hybridRrfIndexed(s, d)),
-    "retrieval_eval" -> ((s, d) => Similarity.retrievalEval(s, d)),
-    "dim_truncation_eval" -> ((s, d) => Similarity.dimTruncationEval(s, d)),
-    "ann_lsh_topk"   -> ((s, d) => Similarity.annLshTopK(s, d)),
-    "ann_ivf_topk"   -> ((s, d) => Similarity.annIvfTopK(s, d)),
-    "ann_filtered_topk" -> ((s, d) => Similarity.annFilteredTopK(s, d)),
-    "ivf_pq_filtered_topk" -> ((s, d) => Similarity.ivfPqFilteredTopK(s, d)),
-    "ann_filtered_brute" -> ((s, d) => Similarity.annFilteredBrute(s, d)),
-    "filtered_retrieval_eval" -> ((s, d) => Similarity.filteredRetrievalEval(s, d)),
-    "ivf_retrieval_eval" -> ((s, d) => Similarity.ivfRetrievalEval(s, d)),
-    "semdedup_clusters" -> (Similarity.semDedup _),
-    "pq_adc_topk"    -> ((s, d) => Similarity.pqAdcTopK(s, d)),
-    "pq_rerank_topk" -> ((s, d) => Similarity.pqRerankTopK(s, d)),
-    "sq8_topk"       -> ((s, d) => Similarity.sq8TopK(s, d)),
-    "bq_hamming_topk" -> ((s, d) => Similarity.bqHammingTopK(s, d)),
-    "bq_rerank_topk"  -> ((s, d) => Similarity.bqRerankTopK(s, d)),
-    "bq_adc_rerank_topk" -> ((s, d) => Similarity.bqAdcRerankTopK(s, d)),
-    "maxsim_topk"     -> ((s, d) => graft.ops.MaxSim.maxSimTopK(s, d)),
-    "maxsim_brute"    -> ((s, d) => graft.ops.MaxSim.maxSimBrute(s, d)),
-    "maxsim_retrieval_eval" -> ((s, d) => graft.ops.MaxSim.maxSimRetrievalEval(s, d)),
-    "maxsim_adc_topk" -> ((s, d) => graft.ops.MaxSim.maxSimAdcTopK(s, d)),
-    "maxsim_adc_eval" -> ((s, d) => graft.ops.MaxSim.maxSimAdcEval(s, d)),
-    "containment_pairs" -> ((s, d) => Dedup.containmentPairs(s, d)),
-    "ivf_pq_topk"    -> ((s, d) => Similarity.ivfPqTopK(s, d)),
-    "ivf_pq_residual_topk" -> ((s, d) => Similarity.ivfPqResidualTopK(s, d)),
-    "opq_topk"       -> ((s, d) => Similarity.opqTopK(s, d)),
-    "ivf_pq_residual_rerank_topk" -> ((s, d) => Similarity.ivfPqResidualRerankTopK(s, d)),
-    "opq_ivf_pq_topk" -> ((s, d) => Similarity.opqIvfPqTopK(s, d)),
-    "knn_graph_topk" -> ((s, d) => graft.ops.GraphAnn.knnGraphTopK(s, d)),
-    "mmr_rerank_topk" -> ((s, d) => Similarity.mmrRerankTopK(s, d)),
-    // --- multimodal binary-column plumbing ---
-    "media_stats"      -> (Multimodal.mediaStats _),
-    "media_phash"      -> (Multimodal.mediaPhash _),
-    "media_near_dup"   -> ((s, d) => Multimodal.mediaNearDup(s, d)),
-    "frame_sample"     -> ((s, d) => Multimodal.frameSampleHex(s, d)),
-    "frame_sample_digest" -> ((s, d) => Multimodal.frameSampleDigest(s, d)),
-    "frame_near_dup"   -> ((s, d) => Multimodal.frameNearDup(s, d)),
-    "extract_features" -> ((s, d) => Multimodal.extractFeaturesScalars(s, d)),
-    // --- storage layout (bucketed co-located join, partition-pruned scan) ---
-    "bucketed_join_revenue" -> ((s, d) => StorageLayout.bucketedJoinRevenue(s, d)),
-    "partition_pruned_events" -> ((s, d) => StorageLayout.prunedEventsDaily(s, d)),
-    "zorder_chunks" -> ((s, d) => StorageLayout.zorderChunks(s, d)),
-    "hilbert_chunks" -> ((s, d) => StorageLayout.hilbertChunks(s, d)),
-    "zorder_pruned_scan" -> ((s, d) => StorageLayout.zorderPrunedScan(s, d)),
-    "dpp_pruned_join" -> ((s, d) => StorageLayout.dppPrunedJoin(s, d)),
-    // --- corpus sampling / splitting ---
-    "split_counts"      -> (Sampling.splitCounts _),
-    "stratified_sample" -> ((s, d) => Sampling.stratifiedSampleHash(s, d)),
-    "mixture_sample"    -> ((s, d) => Sampling.mixtureSample(s, d)),
-    "weighted_sample_es" -> (Sampling.weightedSampleEs _),
-    "distribution_match_sample" -> (Sampling.distributionMatchSample _),
-    "stratified_topk_sample" -> ((s, d) => Sampling.stratifiedTopkSample(s, d)),
-    "kcenter_coreset"   -> ((s, d) => Sampling.kcenterCoreset(s, d)),
-    "kmeans_clusters"   -> ((s, d) => Clustering.kmeansClusters(s, d)),
-    "shuffle_shards"    -> ((s, d) => Sampling.shuffleShards(s, d)),
-    "url_host_caps"     -> ((s, d) => Sampling.urlHostCaps(s, d)),
-    "url_canonical_dedup" -> ((s, d) => Sampling.urlCanonicalDedup(s, d)),
-    "temperature_sample" -> ((s, d) => Sampling.temperatureSample(s, d)),
-    "host_lang_entropy" -> (Sampling.hostLangEntropy _),
-    "size_balanced_shards" -> ((s, d) => Sampling.sizeBalancedShards(s, d)),
-    // --- corpus preparation (repetition filter, PII, decontamination, packing) ---
-    "quality_filter"   -> (Corpus.qualityFilter _),
-    "filter_agreement_kappa" -> (Corpus.filterAgreementKappa _),
-    "basket_rules"     -> (graft.ops.MarketBasket.basketRules _),
-    "repetition_stats" -> ((s, d) => Corpus.repetitionStats(s, d)),
-    "pii_scrub"        -> (Corpus.piiScrub _),
-    "boilerplate_scrub" -> ((s, d) => Corpus.boilerplateScrub(s, d)),
-    "decontaminate"    -> ((s, d) => Corpus.decontaminate(s, d)),
-    "decontaminate_bloom" -> ((s, d) => Corpus.decontaminateBloom(s, d)),
-    "pack_sequences"   -> ((s, d) => Corpus.packSequences(s, d)),
-    "ffd_pack_bins"    -> ((s, d) => Corpus.ffdPackBins(s, d)),
-    "length_batching"  -> ((s, d) => Corpus.lengthBatching(s, d)),
-    "chunk_documents"  -> ((s, d) => Corpus.chunkDocuments(s, d)),
-    "chunk_documents_gen" -> ((s, d) => Corpus.chunkDocumentsGen(s, d)),
-    "unigram_logprob"  -> (Corpus.unigramLogProbScore _),
-    "bigram_logprob"   -> ((s, d) => Corpus.bigramLogProbScore(s, d)),
-    "kneser_ney_logprob" -> (Corpus.kneserNeyLogProbScore _),
-    "corpus_refresh_incremental" -> (graft.ops.CorpusRefresh.corpusRefreshIncremental _)
-  )
+  private def oracle(sql: => String): Check = Oracle(() => sql)
 
-  /** DuckDB oracle SQL for each query above.
-    *
-    * `ann_ivf_topk` / `semdedup_clusters` are GENERATED oracles like the
-    * LSH family's, but from DATA-fitted centroids rather than seeded
-    * hyperplanes — they appear only once [[graft.ops.Similarity.setOracleContext]]
-    * has bound the sweep's (session, dir); `Verify` does that before
-    * dumping. Omitted (rows-only check), each for a stated reason:
-    *  - `distinct_parts_approx`, `value_percentiles_approx`,
-    *    `value_quartiles_approx`, `quality_prune_approx`,
-    *    `profile_columns_approx`: HLL/GK/KLL sketch internals are
-    *    engine-specific (error envelopes spec-pinned vs the exact twins);
-    *  - `decontaminate_bloom`: the Bloom bit pattern depends on the
-    *    engine's sketch hashes (no-false-negative superset of the exact
-    *    `decontaminate` + fpp bound spec-pinned instead);
-    *  - `rolling_dau_7d_hll`: DataSketches HLL binary layout is
-    *    engine-specific (error envelope vs the exact `rolling_dau_7d`
-    *    twin spec-pinned instead);
-    *  - `vocab_heavy_hitters_cms`: count-min hash layout is engine-specific
-    *    (one-sided error envelope + top-k agreement vs the exact
-    *    `vocab_top_terms` spec-pinned instead);
-    * `minhash_lsh_pairs` is checked against the BRUTE-FORCE Jaccard oracle:
-    * at sf0.01 every qualifying pair has j ≥ 0.9, where the 16-band/4-row
-    * LSH miss probability is ≈ 4e-8, so the candidate sets coincide.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "filter_incomplete"      -> DocValidation.filterIncompleteSql,
-    "validate_flags"         -> DocValidation.validateFlagsSql,
-    "reason_histogram"       -> DocValidation.reasonHistogramSql,
-    "top1_reason"            -> DocValidation.top1ReasonSql,
-    "completeness"           -> DocValidation.completenessSql,
-    "date_range"             -> DocValidation.dateRangeSql,
-    "dedup_exact_keep_first" -> Dedup.exactDedupSql,
-    "clean_text"             -> DocValidation.cleanTextSql,
-    "parse_dates"            -> DocValidation.parseDatesSql,
-    "article_funnel"         -> DocValidation.articleFunnelSql,
-    "tpch_q1"        -> Tpch.q1Sql,
-    "tpch_q3"        -> Tpch.q3Sql,
-    "tpch_q4"        -> Tpch.q4Sql,
-    "tpch_q5"        -> Tpch.q5Sql,
-    "tpch_q6"        -> Tpch.q6Sql,
-    "tpch_q10"       -> Tpch.q10Sql,
-    "tpch_q14"       -> Tpch.q14Sql,
-    "customers_without_urgent" -> Tpch.customersWithoutUrgentSql,
-    "parts_in_both_years" -> Tpch.partsInBothYearsSql,
-    "setop_all_shipments" -> Tpch.setopAllShipmentsSql,
-    "suppliers_no_returns" -> Tpch.suppliersNoReturnsSql,
-    "fuzzy_part_pairs"   -> FuzzyJoin.fuzzyPartPairsSql,
-    "sorted_neighborhood_pairs" -> FuzzyJoin.sortedNeighborhoodPairsSql,
-    "fuzzy_entity_clusters" -> FuzzyJoin.fuzzyEntityClustersSql,
-    "entity_golden_records" -> FuzzyJoin.entityGoldenRecordsSql,
-    "incremental_customer_revenue" -> IncrementalAgg.incrementalCustomerRevenueSql,
-    "doc_pagerank"     -> PageRank.docPageRankSql,
-    "doc_personalized_pagerank" -> PageRank.docPersonalizedPageRankSql,
-    "doc_hits"         -> PageRank.docHitsSql,
-    "doc_triangles"    -> PageRank.docTrianglesSql,
-    "doc_components"   -> PageRank.docComponentsSql,
-    "kcore_docs"       -> PageRank.docCorenessSql,
-    "page_scc"         -> PageRank.pageSccSql,
-    "doc_communities"  -> PageRank.docCommunitiesSql,
-    // bench-excluded: re-runs the LPA rounds before the metric tail (the
-    // corpus_dedup_report convention — doc_communities carries the cost)
-    "community_modularity" -> PageRank.communityModularitySql,
-    "doc_bfs_levels"   -> PageRank.docBfsLevelsSql,
-    "hierarchy_paths"  -> PageRank.hierarchyPathsSql,
-    "top_customers"  -> Tpch.topCustomersSql,
-    "also_bought"    -> Tpch.alsoBoughtSql,
-    "distinct_parts" -> Tpch.distinctPartsSql,
-    "tpch_q7"  -> TpchTail.q7Sql,
-    "tpch_q8"  -> TpchTail.q8Sql,
-    "tpch_q13" -> TpchTail.q13Sql,
-    "tpch_q15" -> TpchTail.q15Sql,
-    "tpch_q17" -> TpchTail.q17Sql,
-    "tpch_q18" -> TpchTail.q18Sql,
-    "tpch_q19" -> TpchTail.q19Sql,
-    "tpch_q22" -> TpchTail.q22Sql,
-    "tpch_q2"  -> TpchAdapted.q2Sql,
-    "tpch_q9"  -> TpchAdapted.q9Sql,
-    "tpch_q11" -> TpchAdapted.q11Sql,
-    "tpch_q12" -> TpchAdapted.q12Sql,
-    "tpch_q16" -> TpchAdapted.q16Sql,
-    "tpch_q20" -> TpchAdapted.q20Sql,
-    "tpch_q21" -> TpchAdapted.q21Sql,
-    "running_revenue"         -> Analytics.runningRevenueSql,
-    "top_orders_per_customer" -> Analytics.topOrdersPerCustomerSql,
-    "user_event_gaps"         -> Analytics.userEventGapsSql,
-    "value_quartiles"         -> Analytics.valueQuartilesSql,
-    "rank_family"             -> Analytics.rankFamilySql,
-    "scd2_value_tiers"        -> Analytics.scd2ValueTiersSql,
-    "scd2_temporal_join"      -> Analytics.scd2TemporalJoinSql,
-    "rolling_revenue_7d"      -> Analytics.rollingRevenue7dSql,
-    "revenue_pareto"          -> Analytics.revenueParetoSql,
-    "fulfillment_sla"         -> Analytics.fulfillmentSlaSql,
-    "skyline_orders"          -> Analytics.skylineOrdersSql,
-    "events_tumbling" -> Events.tumblingSql,
-    "events_sliding"  -> Events.slidingSql,
-    "events_sessions" -> Events.sessionsSql,
-    "events_sessions_sw" -> Events.sessionsWindowSql,
-    "conversion_funnel" -> Events.conversionFunnelSql,
-    "ordered_funnel" -> Events.orderedFunnelSql,
-    "event_transitions" -> Events.eventTransitionsSql,
-    "event_trigrams" -> Events.eventTrigramsSql,
-    "multi_touch_attribution" -> Events.multiTouchAttributionSql,
-    "shapley_attribution" -> Events.shapleyAttributionSql,
-    "markov_removal_attribution" -> Events.markovRemovalAttributionSql,
-    "conversion_latency" -> Events.conversionLatencySql,
-    "view_purchase_recon" -> Events.viewPurchaseReconSql,
-    "props_json_stats" -> Events.propsJsonStatsSql,
-    "value_mad_outliers" -> Events.valueMadOutliersSql,
-    "daily_gap_filled" -> TimeSeries.dailyGapFilledSql,
-    "rolling_dau_7d" -> TimeSeries.rollingDau7dSql,
-    "cusum_changepoints" -> TimeSeries.cusumChangepointsSql,
-    "daily_count_anomalies" -> TimeSeries.dailyCountAnomaliesSql,
-    "ewma_daily" -> TimeSeries.ewmaDailySql,
-    "holt_daily" -> TimeSeries.holtDailySql,
-    "holt_winters_daily" -> TimeSeries.holtWintersDailySql,
-    "forecast_backtest" -> TimeSeries.forecastBacktestSql,
-    "weekday_seasonality" -> TimeSeries.weekdaySeasonalitySql,
-    // bitmap rolling distinct: the textbook range-join oracle verbatim —
-    // bit-exact equality to an independent formulation IS the claim
-    "rolling_dau_7d_bitmap" -> TimeSeries.rollingDau7dSql,
-    "geo_near_pairs" -> graft.ops.GeoJoin.geoNearPairsSql,
-    "theil_sen_daily_trend" -> TimeSeries.theilSenDailyTrendSql,
-    "benford_audit" -> TimeSeries.benfordAuditSql,
-    "contrastive_batch_negatives" -> graft.ops.Contrastive.batchNegativesSql,
-    "hard_negatives_lsh" -> graft.ops.Contrastive.hardNegativesLshSql,
-    "triplet_mining" -> graft.ops.Contrastive.tripletMiningSql,
-    "winsorized_stats" -> Events.winsorizedStatsSql,
-    "cohort_retention" -> Events.cohortRetentionSql,
-    "km_purchase_gaps" -> Events.kmPurchaseGapsSql,
-    "sequence_match_conversions" -> Events.sequenceMatchConversionsSql,
-    "bootstrap_mean_ci" -> Events.bootstrapMeanCiSql,
-    "media_resize" -> Multimodal.mediaResizeSql,
-    "cc_scrub" -> Corpus.ccScrubSql,
-
-    "debounce_events" -> Events.debounceEventsSql,
-    "user_feature_store" -> Events.userFeatureStoreSql,    "hour_value_regression" -> Events.hourValueRegressionSql,
-    "correlation_matrix" -> graft.ops.TableChecks.correlationMatrixSql,
-    "replica_bucket_diff" -> graft.ops.TableChecks.replicaBucketDiffSql,
-    "data_quality_checks" -> graft.ops.TableChecks.dataQualityChecksSql,
-    "snapshot_diff" -> graft.ops.TableChecks.snapshotDiffSql,
-    "k_anonymity_audit" -> graft.ops.TableChecks.kAnonymityAuditSql,
-    "l_diversity_audit" -> graft.ops.TableChecks.lDiversityAuditSql,
-    "t_closeness_audit" -> graft.ops.TableChecks.tClosenessAuditSql,
-    "dp_noisy_counts" -> graft.ops.TableChecks.dpNoisyCountsSql,
-    "dp_noisy_sum_mean" -> graft.ops.TableChecks.dpNoisySumMeanSql,
-    "dp_thresholded_vocab" -> graft.ops.TableChecks.dpThresholdedVocabSql,
-    "dp_quantiles" -> graft.ops.TableChecks.dpQuantilesSql,
-    "subject_access_export" -> graft.ops.TableChecks.subjectAccessExportSql,
-    "ttl_purge_plan" -> graft.ops.TableChecks.ttlPurgePlanSql,
-    "erasure_cascade" -> graft.ops.TableChecks.erasureCascadeSql,
-    "psi_drift" -> graft.ops.TableChecks.psiDriftSql,
-    "oov_rate_audit" -> graft.ops.TextAnalysis.oovRateAuditSql,
-    "ab_cuped_lift" -> graft.ops.Experiment.abCupedLiftSql,
-    "ring_rebalance" -> graft.ops.StorageLayout.ringRebalanceSql,
-    "ab_conversion_ztest" -> graft.ops.Experiment.abConversionZtestSql,
-    "ab_rank_test" -> graft.ops.Experiment.abRankTestSql,
-    // the bucketed twin is provably equal to the anchor: same oracle
-    "ab_rank_test_bucketed" -> graft.ops.Experiment.abRankTestSql,
-    "ab_diff_in_diff" -> graft.ops.Experiment.abDiffInDiffSql,
-    "ab_srm_check" -> graft.ops.Experiment.abSrmCheckSql,
-    "ips_policy_value" -> graft.ops.Experiment.ipsPolicyValueSql,
-    "ab_sequential_msprt" -> graft.ops.Experiment.abSequentialMsprtSql,
-    "source_concentration" -> graft.ops.TableChecks.sourceConcentrationSql,
-    "pseudonymized_revenue" -> graft.ops.TableChecks.pseudonymizedRevenueSql,
-    "merge_upsert" -> graft.ops.TableChecks.mergeUpsertSql,
-    "merge_change_feed" -> graft.ops.TableChecks.mergeChangeFeedSql,
-    "skew_report" -> Skew.skewReportSql,
-    "join_size_estimate" -> Skew.joinSizeEstimateSql,
-    "profile_columns" -> graft.ops.TableChecks.profileColumnsSql,
-    "value_percentiles" -> Events.valuePercentilesSql,
-    "asof_last_click" -> AsofJoin.asofLastClickSql,
-    "asof_native_last_click" -> AsofJoin.asofLastClickSql,
-    "asof_click_within" -> AsofJoin.asofClickWithinSql,
-    "asof_next_click" -> AsofJoin.asofNextClickSql,
-    "events_in_windows" -> RangeJoin.eventsInWindowsSql,
-    "salted_user_age" -> Skew.saltedUserAgeSql,
-    "skewed_host_age" -> Skew.skewedHostAgeSql,
-    "events_rollup"   -> Events.rollupSql,
-    "events_cube"     -> Events.cubeSql,
-    "events_grouping_sets" -> Events.groupingSetsSql,
-    "events_pivot"    -> Events.eventsPivotSql,
-    "token_stats"   -> TextAnalysis.tokenStatsSql,
-    "bpe_token_stats" -> TextAnalysis.bpeTokenStatsSql,
-    "bpe_merges"    -> graft.ops.BpeTrain.bpeMergesSql,
-    "bpe_byte_merges" -> graft.ops.BpeTrain.bpeByteMergesSql,
-    "wordpiece_merges" -> graft.ops.BpeTrain.wordpieceMergesSql,
-    // bench-excluded like bpe_segment_stats: re-trains the merges before
-    // applying them (the corpus_dedup_report convention)
-    "bpe_byte_segment_stats" -> graft.ops.BpeTrain.bpeByteSegmentStatsSql,
-    "bpe_segment_stats" -> graft.ops.BpeTrain.bpeSegmentStatsSql,
-    "unigram_lm_vocab" -> graft.ops.UnigramLm.unigramLmVocabSql,
-    "unigram_segment_stats" -> graft.ops.UnigramLm.unigramSegmentStatsSql,
-    "quality_score" -> TextAnalysis.qualityScoreSql,
-    "conformal_calibration" -> graft.ops.QualityModel.conformalCalibrationSql,
-    "lang_id"       -> TextAnalysis.langIdSql,
-    "lang_id_confusion" -> TextAnalysis.langIdConfusionSql,
-    "nearest_centroid_confusion" -> graft.ops.Centroid.nearestCentroidConfusionSql,
-    "fingerprint"   -> TextAnalysis.fingerprintSql,
-    "winnow_fingerprints" -> TextAnalysis.winnowFingerprintsSql,
-    "vocab_top_terms" -> TextAnalysis.vocabTopTermsSql,
-    "percolate_alerts" -> TextAnalysis.percolateAlertsSql,
-    "percolate_boolean_alerts" -> TextAnalysis.percolateBooleanAlertsSql,
-    "zipf_fit" -> TextAnalysis.zipfFitSql,
-    "lang_source_mi" -> TextAnalysis.langSourceMiSql,
-    "source_vocab_overlap" -> TextAnalysis.sourceVocabOverlapSql,
-    "length_histogram" -> TextAnalysis.lengthHistogramSql,
-    "quantile_normalize_map" -> Corpus.quantileNormalizeMapSql,
-    "distinctive_terms" -> TextAnalysis.distinctiveTermsSql,
-    // the aggregate variant has the IDENTICAL output contract — one oracle
-    "distinctive_terms_agg" -> TextAnalysis.distinctiveTermsSql,
-    "quality_prune" -> TextAnalysis.qualityPruneSql,
-    "bm25_topk" -> TextAnalysis.bm25TopKSql,
-    // the pinned ≤100-query serving batch (cost ∝ batch, not corpus)
-    "bm25_topk_served" -> TextAnalysis.bm25TopKServedSql,
-    "bm25_prf_topk"    -> TextAnalysis.bm25PrfTopKSql(),
-    "qld_topk"         -> TextAnalysis.qldTopKSql(),
-    // the indexed retrieval serves ride the written postings snapshot /
-    // persisted band artifact; the model statistics are exact mergeable
-    // aggregates of the postings, so the one-shot oracles apply verbatim —
-    // equality IS the serve-from-index exactness claim
-    "bm25_prf_indexed" -> TextAnalysis.bm25PrfTopKSql(),
-    "qld_indexed"      -> TextAnalysis.qldTopKSql(),
-    // the indexed serve has the IDENTICAL output contract over the grown
-    // snapshot — one oracle (the distinctive_terms_agg convention);
-    // equality pins exact incremental maintenance
-    "bm25_topk_indexed" -> TextAnalysis.bm25TopKSql,
-    "phrase_search" -> TextAnalysis.phraseSearchSql,
-    "pmi_pairs" -> TextAnalysis.pmiPairsSql,
-    "rake_keyphrases" -> TextAnalysis.rakeKeyphrasesSql,
-    "vocab_divergence" -> TextAnalysis.vocabDivergenceSql,
-    "doc_top_tokens" -> TextAnalysis.docTopTokensSql,
-    "ngram_jaccard_pairs" -> Dedup.ngramJaccardSql,
-    "prefix_jaccard_pairs" -> graft.ops.SetSimJoin.prefixJaccardPairsSql,
-    "split_leakage_audit" -> graft.ops.SetSimJoin.splitLeakageAuditSql,
-    "minhash_lsh_pairs"   -> Dedup.ngramJaccardSql,
-    "incremental_near_dup" -> Dedup.incrementalNearDupSql,
-    "repeated_ngram_spans" -> Dedup.repeatedNgramSpansSql,
-    "cross_doc_spans"     -> Dedup.crossDocSpansSql,
-    "cut_spans"           -> Dedup.cutSpansSql,
-    "simhash"             -> SimHashOracle.simhashSql,
-    "simhash_near_dup"    -> SimHashOracle.simhashNearDupSql,
-    "near_dup_clusters"   -> Dedup.nearDupClustersSql,
-    "corpus_dedup_report" -> Dedup.corpusDedupReportSql,
-    "winnow_near_dup"     -> Dedup.winnowNearDupSql,
-    "embedding_near_dup"  -> Dedup.embeddingNearDupSql,
-    "embedding_near_dup_lsh" -> Dedup.embeddingNearDupLshSql,
-    "ann_topk_brute" -> Similarity.annTopKSql,
-    // the filtered stack's brute anchor (bench-excluded, like ann_topk_brute)
-    "ann_filtered_brute" -> Similarity.annFilteredBruteSql,
-    "sq8_topk"       -> Similarity.sq8TopKSql,
-    "bq_hamming_topk" -> Similarity.bqHammingTopKSql,
-    "bq_rerank_topk"  -> Similarity.bqRerankTopKSql(),
-    "maxsim_topk"     -> graft.ops.MaxSim.maxSimTopKSql(),
-    "maxsim_brute"    -> graft.ops.MaxSim.maxSimBruteSql(),
-    "maxsim_retrieval_eval" -> graft.ops.MaxSim.maxSimRetrievalEvalSql(),
-    "containment_pairs" -> Dedup.containmentSql,
-    "hybrid_rrf_topk" -> Similarity.hybridRrfTopKSql,
-    "hybrid_rrf_lsh_topk" -> Similarity.hybridRrfLshTopKSql,
-    // the pinned-batch hybrid serve (both legs ≤100 queries)
-    "hybrid_rrf_served" -> Similarity.hybridRrfServedSql,
-    "hybrid_rrf_indexed" -> Similarity.hybridRrfServedSql,
-    // index-quality metrics vs the exact truth (bench-excluded: the truth
-    // leg IS the brute anchor)
-    "retrieval_eval" -> Similarity.retrievalEvalSql(),
-    "mmr_rerank_topk" -> Similarity.mmrRerankTopKSql(),
-    "dim_truncation_eval" -> Similarity.dimTruncationEvalSql(),
-    "ann_lsh_topk"   -> Similarity.annLshTopKSql,
-    "media_stats"    -> Multimodal.mediaStatsSql,
-    "media_phash"    -> Multimodal.mediaPhashSql,
-    "media_near_dup" -> Multimodal.mediaNearDupSql,
-    "frame_sample"        -> Multimodal.frameSampleHexSql,
-    "frame_sample_digest" -> Multimodal.frameSampleDigestSql,
-    "frame_near_dup" -> Multimodal.frameNearDupSql,
-    "bucketed_join_revenue" -> StorageLayout.bucketedJoinRevenueSql,
-    "partition_pruned_events" -> StorageLayout.prunedEventsDailySql,
-    "zorder_chunks" -> StorageLayout.zorderChunksSql,
-    "hilbert_chunks" -> StorageLayout.hilbertChunksSql,
-    "zorder_pruned_scan" -> StorageLayout.zorderPrunedScanSql,
-    "dpp_pruned_join" -> StorageLayout.dppPrunedJoinSql,
-    "split_counts"   -> Sampling.splitCountsSql,
-    "stratified_sample" -> Sampling.stratifiedSampleHashSql,
-    "mixture_sample"    -> Sampling.mixtureSampleSql,
-    "weighted_sample_es" -> Sampling.weightedSampleEsSql,
-    "distribution_match_sample" -> Sampling.distributionMatchSampleSql,
-    "stratified_topk_sample" -> Sampling.stratifiedTopkSampleSql,
-    "kcenter_coreset"   -> Sampling.kcenterCoresetSql(),
-    "kmeans_clusters"   -> Clustering.kmeansClustersSql(),
-    "shuffle_shards"    -> Sampling.shuffleShardsSql,
-    "url_host_caps"     -> Sampling.urlHostCapsSql,
-    "url_canonical_dedup" -> Sampling.urlCanonicalDedupSql,
-    "temperature_sample" -> Sampling.temperatureSampleSql,
-    "host_lang_entropy" -> Sampling.hostLangEntropySql,
-    "size_balanced_shards" -> Sampling.sizeBalancedShardsSql,
-    "quality_filter"   -> Corpus.qualityFilterSql,
-    "filter_agreement_kappa" -> Corpus.filterAgreementKappaSql,
-    "basket_rules"     -> graft.ops.MarketBasket.basketRulesSql,
-    "repetition_stats" -> Corpus.repetitionStatsSql,
-    "pii_scrub"        -> Corpus.piiScrubSql,
-    "boilerplate_scrub" -> Corpus.boilerplateScrubSql,
-    "decontaminate"    -> Corpus.decontaminateSql,
-    "pack_sequences"   -> Corpus.packSequencesSql,
-    "ffd_pack_bins"    -> Corpus.ffdPackBinsSql(),
-    "length_batching"  -> Corpus.lengthBatchingSql,
-    "chunk_documents"  -> Corpus.chunkDocumentsSql,
-    // the generator variant has the IDENTICAL output contract — one oracle
-    "chunk_documents_gen" -> Corpus.chunkDocumentsSql,
-    "unigram_logprob"  -> Corpus.unigramLogProbScoreSql,
-    "bigram_logprob"   -> Corpus.bigramLogProbScoreSql,
-    "kneser_ney_logprob" -> Corpus.kneserNeyLogProbScoreSql,
-    "dsir_weights" -> graft.ops.QualityModel.dsirWeightsSql,
-    "corpus_refresh_incremental" -> graft.ops.CorpusRefresh.corpusRefreshIncrementalSql
-  ) ++ Similarity.quantizerOracles ++ Multimodal.codecOracles ++
-    graft.ops.QualityModel.modelOracles
-
-  /** Headline bench set: every query that is scale-shaped. The two O(n²)
-    * brute-force correctness anchors (`ngram_jaccard_pairs`,
-    * `embedding_near_dup`) are deliberately excluded — their scale paths
-    * (`minhash_lsh_pairs`, `ann_lsh_topk`) are what gets timed. So is
-    * `corpus_dedup_report`: a once-per-corpus audit composite that
-    * re-executes the already-benched minhash-LSH and cut_spans pipelines —
-    * benching it would double-count their cost in the sweep total.
+  /** Every registered query, in bench order. The bench set is every query
+    * that is scale-shaped; each unbenched entry sits next to the benched
+    * twin that is timed in its place, with the reason beside it.
     *
     * Ordered heavy-first: the JVM degrades measurably over a long sweep
     * (GC/code-cache state), and the multi-stage LSH queries are the most
     * sensitive to it — running them first times the plans, not the sweep
     * position.
     */
-  val benchQueries: Seq[String] = Seq(
-    "minhash_lsh_pairs", "near_dup_clusters", "embedding_near_dup_lsh", "ann_lsh_topk",
-    "ann_ivf_topk", "ann_filtered_topk", "ivf_pq_filtered_topk",
-    "semdedup_clusters", "pq_adc_topk", "ivf_pq_topk",
-    "ivf_pq_residual_topk", "opq_topk", "ivf_pq_residual_rerank_topk",
-    "opq_ivf_pq_topk", "knn_graph_topk", "mmr_rerank_topk",
-    "pq_rerank_topk", "sq8_topk", "bq_hamming_topk", "bq_rerank_topk",
-    "bq_adc_rerank_topk", "maxsim_topk", "maxsim_adc_topk", "containment_pairs",
-    "simhash_near_dup", "simhash",
-    "ann_topk_brute",
-    "tpch_q1", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q10",
-    "tpch_q14", "customers_without_urgent", "parts_in_both_years",
-    "setop_all_shipments", "suppliers_no_returns", "also_bought",
-    "basket_rules",
-    "fuzzy_part_pairs", "sorted_neighborhood_pairs",
-    "fuzzy_entity_clusters",
-    "incremental_customer_revenue", "doc_pagerank",
-    "doc_personalized_pagerank", "doc_hits", "doc_triangles",
-    "doc_components", "doc_communities", "kcore_docs", "page_scc",
-    "hierarchy_paths", "doc_bfs_levels",
-    "tpch_q7", "tpch_q8", "tpch_q13", "tpch_q15", "tpch_q17", "tpch_q18",
-    "tpch_q19", "tpch_q22",
-    "tpch_q2", "tpch_q9", "tpch_q11", "tpch_q12", "tpch_q16", "tpch_q20",
-    "tpch_q21",
-    // exact `value_quartiles` (per-type ntile sort) is the correctness
-    // anchor; the benched form is the approx-histogram bucket assignment
-    "running_revenue", "top_orders_per_customer", "user_event_gaps",
-    "value_quartiles_approx", "rank_family", "scd2_value_tiers",
-    "scd2_temporal_join",
-    "rolling_revenue_7d",
-    "top_customers", "distinct_parts",
-    "events_tumbling", "events_sliding", "events_sessions",
-    "events_sessions_sw",
-    "conversion_funnel", "ordered_funnel", "event_transitions", "event_trigrams",
-    "multi_touch_attribution", "shapley_attribution", "markov_removal_attribution",
-    "conversion_latency",
-    "view_purchase_recon",
-    // exact `profile_columns` (6-way multi-distinct Expand + sort-agg) is
-    // the unbenched correctness anchor; the benched profile is the sketch
-    // form — the value_quartiles convention
-    "data_quality_checks", "snapshot_diff", "k_anonymity_audit",
-    "l_diversity_audit", "t_closeness_audit", "dp_noisy_counts",
-    "dp_noisy_sum_mean", "dp_thresholded_vocab", "dp_quantiles",
-    "source_concentration",
-    "erasure_cascade", "subject_access_export", "ttl_purge_plan", "psi_drift", "oov_rate_audit", "ab_cuped_lift", "ring_rebalance",
-    // `ab_rank_test` (single value-domain window) is the unbenched
-    // exactness anchor; the benched form is the two-phase bucketed twin —
-    // the size_balanced_shards convention
-    "ab_conversion_ztest", "ab_rank_test_bucketed", "ab_diff_in_diff", "ab_srm_check",
-    "ips_policy_value", "ab_sequential_msprt",
-    "pseudonymized_revenue", "merge_upsert",
-    "merge_change_feed", "skew_report",
-    "profile_columns_approx",
-    "props_json_stats", "winsorized_stats", "cohort_retention", "km_purchase_gaps",
-    "debounce_events", "user_feature_store", "hour_value_regression", "correlation_matrix", "replica_bucket_diff", "value_mad_outliers", "revenue_pareto", "skyline_orders", "fulfillment_sla",
-    "daily_gap_filled", "rolling_dau_7d", "rolling_dau_7d_hll",
-    "rolling_dau_7d_bitmap", "daily_count_anomalies", "cusum_changepoints", "ewma_daily", "holt_daily", "holt_winters_daily", "forecast_backtest", "weekday_seasonality",
-    "theil_sen_daily_trend", "benford_audit",
-    "geo_near_pairs", "contrastive_batch_negatives", "hard_negatives_lsh",
-    "triplet_mining",
-    "sequence_match_conversions", "cc_scrub", "bootstrap_mean_ci",
-    "media_resize",
-    "value_percentiles", "value_percentiles_approx",
-    // `split_leakage_audit` re-runs the prefix_jaccard pair join before
-    // its 3-row bucket agg — benching it would double-count the set-sim
-    // join (the corpus_dedup_report convention). `corpus_refresh_incremental`
-    // is excluded by the same convention: it composes the already-benched
-    // scrub/url-dedup/incremental-LSH/quality legs; its batch-∝ scaling is
-    // measured and recorded in BASELINE.md instead.
-    "winnow_near_dup", "incremental_near_dup", "prefix_jaccard_pairs",
-    "repeated_ngram_spans",
-    "cross_doc_spans", "cut_spans",
-    "asof_last_click", "asof_native_last_click", "events_in_windows", "salted_user_age",
-    "skewed_host_age",
-    "distinct_parts_approx",
-    "events_rollup", "events_cube", "events_grouping_sets", "events_pivot",
-    "filter_incomplete", "validate_flags", "reason_histogram", "top1_reason",
-    "completeness", "date_range", "dedup_exact_keep_first", "clean_text",
-    "parse_dates", "article_funnel",
-    // `bpe_segment_stats` re-trains the merges before applying them —
-    // benching it would double-count bpe_merges (the corpus_dedup_report
-    // convention); the training is what gets timed
-    // same convention: `unigram_segment_stats` re-trains before serving
-    "token_stats", "bpe_token_stats", "bpe_merges", "bpe_byte_merges",
-    "wordpiece_merges",
-    "unigram_lm_vocab",
-    "quality_score", "quality_lr_score", "lr_eval_metrics", "conformal_calibration",
-    "quality_weighted_sample", "dsir_weights",
-    "lang_id", "lang_id_confusion", "nearest_centroid_confusion", "fingerprint",
-    "winnow_fingerprints", "vocab_top_terms", "percolate_alerts", "percolate_boolean_alerts", "zipf_fit", "lang_source_mi", "source_vocab_overlap", "length_histogram", "quantile_normalize_map",
-    // `hybrid_rrf_topk` (brute dense leg) is the unbenched exactness
-    // anchor; the benched hybrid is the LSH-leg composite. Likewise exact
-    // `quality_prune` (per-language rank sort — single-task on a dominant
-    // language) is the unbenched anchor; the benched form is the
-    // approx-quantile threshold scan
-    // `bm25_prf_topk`/`qld_topk`/`hybrid_rrf_served` (inline corpus-model
-    // rebuild per call) stay benched for cross-round comparability (the
-    // bench contract never drops an entry); their indexed twins — riding
-    // the written postings/band artifacts, the production shape where a
-    // query pays only its serving tail — are benched ALONGSIDE them
-    "distinctive_terms", "distinctive_terms_agg", "bm25_topk",
-    "bm25_topk_served", "bm25_prf_topk", "bm25_prf_indexed",
-    "qld_topk", "qld_indexed", "bm25_topk_indexed",
-    "phrase_search",
-    "pmi_pairs", "rake_keyphrases", "vocab_divergence", "doc_top_tokens",
-    "quality_prune_approx", "hybrid_rrf_lsh_topk",
-    "hybrid_rrf_served", "hybrid_rrf_indexed",
-    "vocab_heavy_hitters_cms",
-    "media_stats", "media_phash", "media_near_dup",
-    "frame_sample", "frame_sample_digest", "frame_near_dup",
-    "extract_features",
-    "bucketed_join_revenue", "partition_pruned_events", "zorder_chunks",
-    "hilbert_chunks", "zorder_pruned_scan", "dpp_pruned_join",
-    "split_counts", "stratified_sample", "mixture_sample", "temperature_sample",
-    "weighted_sample_es", "distribution_match_sample", "stratified_topk_sample",
-    "kcenter_coreset", "kmeans_clusters", "shuffle_shards",
-    "url_host_caps", "url_canonical_dedup", "host_lang_entropy",
-    "size_balanced_shards",
-    "quality_filter",
-    "repetition_stats", "pii_scrub", "boilerplate_scrub",
-    "filter_agreement_kappa", "lr_calibration_bins",
-    "decontaminate", "decontaminate_bloom",
-    "pack_sequences", "ffd_pack_bins", "length_batching",
-    "chunk_documents", "chunk_documents_gen", "unigram_logprob", "bigram_logprob",
-    "kneser_ney_logprob"
+  val specs: Seq[QuerySpec] = Seq(
+    // --- similarity search and near-duplicate detection (the heavy multi-stage plans) ---
+    // checked against the brute-force Jaccard oracle: at sf0.01 every qualifying pair
+    // has j ≥ 0.9, where the 16-band/4-row LSH miss probability is ≈ 4e-8, so the
+    // candidate sets coincide
+    QuerySpec("minhash_lsh_pairs", Dedup.minhashLshPairs, oracle(Dedup.ngramJaccardSql)),
+    // unbenched: the O(n²) brute-force anchor; its scale path above is what gets timed
+    QuerySpec("ngram_jaccard_pairs", Dedup.ngramJaccardPairs,
+      oracle(Dedup.ngramJaccardSql), benched = false),
+    QuerySpec("near_dup_clusters", Dedup.nearDupClusters(_, _), oracle(Dedup.nearDupClustersSql)),
+    QuerySpec("embedding_near_dup_lsh", Dedup.embeddingNearDupLsh(_, _),
+      oracle(Dedup.embeddingNearDupLshSql)),
+    // unbenched: the O(n²) brute-force anchor; its scale paths are what get timed
+    QuerySpec("embedding_near_dup", Dedup.embeddingNearDup(_, _),
+      oracle(Dedup.embeddingNearDupSql), benched = false),
+    QuerySpec("ann_lsh_topk", Similarity.annLshTopK(_, _), oracle(Similarity.annLshTopKSql)),
+    // index-quality metrics vs the exact truth. Unbenched, like every *_eval entry
+    // below: the truth leg IS the brute anchor
+    QuerySpec("retrieval_eval", Similarity.retrievalEval(_, _),
+      oracle(Similarity.retrievalEvalSql()), benched = false),
+    QuerySpec("ann_ivf_topk", Similarity.annIvfTopK(_, _), Fitted),
+    QuerySpec("ivf_retrieval_eval", Similarity.ivfRetrievalEval(_, _), Fitted, benched = false),
+    QuerySpec("ann_filtered_topk", Similarity.annFilteredTopK(_, _), Fitted),
+    // unbenched: the filtered stack's brute anchor
+    QuerySpec("ann_filtered_brute", Similarity.annFilteredBrute(_, _),
+      oracle(Similarity.annFilteredBruteSql), benched = false),
+    QuerySpec("filtered_retrieval_eval", Similarity.filteredRetrievalEval(_, _),
+      Fitted, benched = false),
+    QuerySpec("ivf_pq_filtered_topk", Similarity.ivfPqFilteredTopK(_, _), Fitted),
+    QuerySpec("semdedup_clusters", Similarity.semDedup, Fitted),
+    QuerySpec("pq_adc_topk", Similarity.pqAdcTopK(_, _), Fitted),
+    QuerySpec("ivf_pq_topk", Similarity.ivfPqTopK(_, _), Fitted),
+    QuerySpec("ivf_pq_residual_topk", Similarity.ivfPqResidualTopK(_, _), Fitted),
+    QuerySpec("opq_topk", Similarity.opqTopK(_, _), Fitted),
+    QuerySpec("ivf_pq_residual_rerank_topk", Similarity.ivfPqResidualRerankTopK(_, _), Fitted),
+    QuerySpec("opq_ivf_pq_topk", Similarity.opqIvfPqTopK(_, _), Fitted),
+    QuerySpec("knn_graph_topk", GraphAnn.knnGraphTopK(_, _), Fitted),
+    QuerySpec("mmr_rerank_topk", Similarity.mmrRerankTopK(_, _),
+      oracle(Similarity.mmrRerankTopKSql())),
+    QuerySpec("pq_rerank_topk", Similarity.pqRerankTopK(_, _), Fitted),
+    QuerySpec("sq8_topk", Similarity.sq8TopK(_, _), oracle(Similarity.sq8TopKSql)),
+    QuerySpec("bq_hamming_topk", Similarity.bqHammingTopK(_, _),
+      oracle(Similarity.bqHammingTopKSql)),
+    QuerySpec("bq_rerank_topk", Similarity.bqRerankTopK(_, _),
+      oracle(Similarity.bqRerankTopKSql())),
+    QuerySpec("bq_adc_rerank_topk", Similarity.bqAdcRerankTopK(_, _), Fitted),
+    QuerySpec("maxsim_topk", MaxSim.maxSimTopK(_, _), oracle(MaxSim.maxSimTopKSql())),
+    // unbenched: the multi-vector stack's brute anchor
+    QuerySpec("maxsim_brute", MaxSim.maxSimBrute(_, _),
+      oracle(MaxSim.maxSimBruteSql()), benched = false),
+    QuerySpec("maxsim_retrieval_eval", MaxSim.maxSimRetrievalEval(_, _),
+      oracle(MaxSim.maxSimRetrievalEvalSql()), benched = false),
+    QuerySpec("maxsim_adc_topk", MaxSim.maxSimAdcTopK(_, _), Fitted),
+    QuerySpec("maxsim_adc_eval", MaxSim.maxSimAdcEval(_, _), Fitted, benched = false),
+    QuerySpec("containment_pairs", Dedup.containmentPairs(_, _), oracle(Dedup.containmentSql)),
+    QuerySpec("simhash_near_dup", Dedup.simhashNearDup(_, _),
+      oracle(SimHashOracle.simhashNearDupSql)),
+    QuerySpec("simhash", Dedup.simhash, oracle(SimHashOracle.simhashSql)),
+    QuerySpec("ann_topk_brute", Similarity.annTopKBrute(_, _), oracle(Similarity.annTopKSql)),
+    QuerySpec("dim_truncation_eval", Similarity.dimTruncationEval(_, _),
+      oracle(Similarity.dimTruncationEvalSql()), benched = false),
+    // --- relational / star-schema suite ---
+    QuerySpec("tpch_q1", Tpch.q1PricingSummary, oracle(Tpch.q1Sql)),
+    QuerySpec("tpch_q3", Tpch.q3ShippingPriority, oracle(Tpch.q3Sql)),
+    QuerySpec("tpch_q4", Tpch.q4OrderPriority, oracle(Tpch.q4Sql)),
+    QuerySpec("tpch_q5", Tpch.q5LocalSupplier, oracle(Tpch.q5Sql)),
+    QuerySpec("tpch_q6", Tpch.q6ForecastRevenue, oracle(Tpch.q6Sql)),
+    QuerySpec("tpch_q10", Tpch.q10ReturnedItems, oracle(Tpch.q10Sql)),
+    QuerySpec("tpch_q14", Tpch.q14PromoRevenue, oracle(Tpch.q14Sql)),
+    QuerySpec("customers_without_urgent", Tpch.customersWithoutUrgent,
+      oracle(Tpch.customersWithoutUrgentSql)),
+    QuerySpec("parts_in_both_years", Tpch.partsInBothYears, oracle(Tpch.partsInBothYearsSql)),
+    QuerySpec("setop_all_shipments", Tpch.setopAllShipments, oracle(Tpch.setopAllShipmentsSql)),
+    QuerySpec("suppliers_no_returns", Tpch.suppliersNoReturns, oracle(Tpch.suppliersNoReturnsSql)),
+    QuerySpec("also_bought", Tpch.alsoBought(_, _), oracle(Tpch.alsoBoughtSql)),
+    QuerySpec("basket_rules", MarketBasket.basketRules, oracle(MarketBasket.basketRulesSql)),
+    QuerySpec("fuzzy_part_pairs", FuzzyJoin.fuzzyPartPairs(_, _),
+      oracle(FuzzyJoin.fuzzyPartPairsSql)),
+    QuerySpec("sorted_neighborhood_pairs", FuzzyJoin.sortedNeighborhoodPairs(_, _),
+      oracle(FuzzyJoin.sortedNeighborhoodPairsSql)),
+    QuerySpec("fuzzy_entity_clusters", FuzzyJoin.fuzzyEntityClusters(_, _),
+      oracle(FuzzyJoin.fuzzyEntityClustersSql)),
+    // unbenched: re-runs the benched fuzzy_entity_clusters before its one keyed
+    // aggregate (the corpus_dedup_report convention)
+    QuerySpec("entity_golden_records", FuzzyJoin.entityGoldenRecords(_, _),
+      oracle(FuzzyJoin.entityGoldenRecordsSql), benched = false),
+    QuerySpec("incremental_customer_revenue", IncrementalAgg.incrementalCustomerRevenue,
+      oracle(IncrementalAgg.incrementalCustomerRevenueSql)),
+    // --- graph family ---
+    QuerySpec("doc_pagerank", PageRank.docPageRank, oracle(PageRank.docPageRankSql)),
+    QuerySpec("doc_personalized_pagerank", PageRank.docPersonalizedPageRank,
+      oracle(PageRank.docPersonalizedPageRankSql)),
+    QuerySpec("doc_hits", PageRank.docHits, oracle(PageRank.docHitsSql)),
+    QuerySpec("doc_triangles", PageRank.docTriangles, oracle(PageRank.docTrianglesSql)),
+    QuerySpec("doc_components", PageRank.docComponents, oracle(PageRank.docComponentsSql)),
+    QuerySpec("doc_communities", PageRank.docCommunities, oracle(PageRank.docCommunitiesSql)),
+    // unbenched: re-runs the LPA rounds before the metric tail (the
+    // corpus_dedup_report convention: doc_communities carries the cost)
+    QuerySpec("community_modularity", PageRank.communityModularity,
+      oracle(PageRank.communityModularitySql), benched = false),
+    QuerySpec("kcore_docs", PageRank.docCoreness, oracle(PageRank.docCorenessSql)),
+    QuerySpec("page_scc", PageRank.pageScc, oracle(PageRank.pageSccSql)),
+    QuerySpec("hierarchy_paths", PageRank.hierarchyPaths, oracle(PageRank.hierarchyPathsSql)),
+    QuerySpec("doc_bfs_levels", PageRank.docBfsLevels, oracle(PageRank.docBfsLevelsSql)),
+    // --- decision-support tail, then the schema-adapted remainder ---
+    QuerySpec("tpch_q7", TpchTail.q7VolumeShipping, oracle(TpchTail.q7Sql)),
+    QuerySpec("tpch_q8", TpchTail.q8MarketShare, oracle(TpchTail.q8Sql)),
+    QuerySpec("tpch_q13", TpchTail.q13OrderDistribution, oracle(TpchTail.q13Sql)),
+    QuerySpec("tpch_q15", TpchTail.q15TopSupplier, oracle(TpchTail.q15Sql)),
+    QuerySpec("tpch_q17", TpchTail.q17SmallQuantity, oracle(TpchTail.q17Sql)),
+    QuerySpec("tpch_q18", TpchTail.q18LargeVolume, oracle(TpchTail.q18Sql)),
+    QuerySpec("tpch_q19", TpchTail.q19DiscountedRevenue, oracle(TpchTail.q19Sql)),
+    QuerySpec("tpch_q22", TpchTail.q22SalesOpportunity, oracle(TpchTail.q22Sql)),
+    QuerySpec("tpch_q2", TpchAdapted.q2MinCostSupplier, oracle(TpchAdapted.q2Sql)),
+    QuerySpec("tpch_q9", TpchAdapted.q9ProductProfit, oracle(TpchAdapted.q9Sql)),
+    QuerySpec("tpch_q11", TpchAdapted.q11ImportantParts, oracle(TpchAdapted.q11Sql)),
+    QuerySpec("tpch_q12", TpchAdapted.q12LateShipments, oracle(TpchAdapted.q12Sql)),
+    QuerySpec("tpch_q16", TpchAdapted.q16SupplierCounts, oracle(TpchAdapted.q16Sql)),
+    QuerySpec("tpch_q20", TpchAdapted.q20ShareOfPart, oracle(TpchAdapted.q20Sql)),
+    QuerySpec("tpch_q21", TpchAdapted.q21WaitingSupplier, oracle(TpchAdapted.q21Sql)),
+    // --- analytic windows and event-time analytics ---
+    QuerySpec("running_revenue", Analytics.runningRevenue, oracle(Analytics.runningRevenueSql)),
+    QuerySpec("top_orders_per_customer", Analytics.topOrdersPerCustomer,
+      oracle(Analytics.topOrdersPerCustomerSql)),
+    QuerySpec("user_event_gaps", Analytics.userEventGaps, oracle(Analytics.userEventGapsSql)),
+    QuerySpec("value_quartiles_approx", Analytics.valueQuartilesApprox(_, _), RowsOnly(
+      "approx_percentile boundaries are engine-specific; envelope spec-pinned vs value_quartiles")),
+    // unbenched: the exact correctness anchor (per-type ntile sort); the benched
+    // form is the approx-histogram bucket assignment above
+    QuerySpec("value_quartiles", Analytics.valueQuartiles,
+      oracle(Analytics.valueQuartilesSql), benched = false),
+    QuerySpec("rank_family", Analytics.rankFamily, oracle(Analytics.rankFamilySql)),
+    QuerySpec("scd2_value_tiers", Analytics.scd2ValueTiers, oracle(Analytics.scd2ValueTiersSql)),
+    QuerySpec("scd2_temporal_join", Analytics.scd2TemporalJoin,
+      oracle(Analytics.scd2TemporalJoinSql)),
+    QuerySpec("rolling_revenue_7d", Analytics.rollingRevenue7d,
+      oracle(Analytics.rollingRevenue7dSql)),
+    QuerySpec("top_customers", Tpch.topCustomers, oracle(Tpch.topCustomersSql)),
+    QuerySpec("distinct_parts", Tpch.distinctParts, oracle(Tpch.distinctPartsSql)),
+    QuerySpec("events_tumbling", Events.tumbling, oracle(Events.tumblingSql)),
+    QuerySpec("events_sliding", Events.sliding, oracle(Events.slidingSql)),
+    QuerySpec("events_sessions", Events.sessions, oracle(Events.sessionsSql)),
+    QuerySpec("events_sessions_sw", Events.sessionsViaSessionWindow,
+      oracle(Events.sessionsWindowSql)),
+    QuerySpec("conversion_funnel", Events.conversionFunnel, oracle(Events.conversionFunnelSql)),
+    QuerySpec("ordered_funnel", Events.orderedFunnel, oracle(Events.orderedFunnelSql)),
+    QuerySpec("event_transitions", Events.eventTransitions, oracle(Events.eventTransitionsSql)),
+    QuerySpec("event_trigrams", Events.eventTrigrams(_, _), oracle(Events.eventTrigramsSql)),
+    QuerySpec("multi_touch_attribution", Events.multiTouchAttribution,
+      oracle(Events.multiTouchAttributionSql)),
+    QuerySpec("shapley_attribution", Events.shapleyAttribution,
+      oracle(Events.shapleyAttributionSql)),
+    QuerySpec("markov_removal_attribution", Events.markovRemovalAttribution,
+      oracle(Events.markovRemovalAttributionSql)),
+    QuerySpec("conversion_latency", Events.conversionLatency, oracle(Events.conversionLatencySql)),
+    QuerySpec("view_purchase_recon", Events.viewPurchaseRecon, oracle(Events.viewPurchaseReconSql)),
+    // --- table checks, privacy and experiments ---
+    QuerySpec("data_quality_checks", TableChecks.dataQualityChecks(_, _),
+      oracle(TableChecks.dataQualityChecksSql)),
+    QuerySpec("snapshot_diff", TableChecks.snapshotDiff(_, _), oracle(TableChecks.snapshotDiffSql)),
+    QuerySpec("k_anonymity_audit", TableChecks.kAnonymityAudit(_, _),
+      oracle(TableChecks.kAnonymityAuditSql)),
+    QuerySpec("l_diversity_audit", TableChecks.lDiversityAudit(_, _),
+      oracle(TableChecks.lDiversityAuditSql)),
+    QuerySpec("t_closeness_audit", TableChecks.tClosenessAudit(_, _),
+      oracle(TableChecks.tClosenessAuditSql)),
+    QuerySpec("dp_noisy_counts", TableChecks.dpNoisyCounts(_, _),
+      oracle(TableChecks.dpNoisyCountsSql)),
+    QuerySpec("dp_noisy_sum_mean", TableChecks.dpNoisySumMean(_, _),
+      oracle(TableChecks.dpNoisySumMeanSql)),
+    QuerySpec("dp_thresholded_vocab", TableChecks.dpThresholdedVocab,
+      oracle(TableChecks.dpThresholdedVocabSql)),
+    QuerySpec("dp_quantiles", TableChecks.dpQuantiles, oracle(TableChecks.dpQuantilesSql)),
+    QuerySpec("source_concentration", TableChecks.sourceConcentration(_, _),
+      oracle(TableChecks.sourceConcentrationSql)),
+    QuerySpec("erasure_cascade", TableChecks.erasureCascade, oracle(TableChecks.erasureCascadeSql)),
+    QuerySpec("subject_access_export", TableChecks.subjectAccessExport(_, _),
+      oracle(TableChecks.subjectAccessExportSql)),
+    QuerySpec("ttl_purge_plan", TableChecks.ttlPurgePlan(_, _),
+      oracle(TableChecks.ttlPurgePlanSql)),
+    QuerySpec("psi_drift", TableChecks.psiDrift, oracle(TableChecks.psiDriftSql)),
+    QuerySpec("oov_rate_audit", TextAnalysis.oovRateAudit(_, _),
+      oracle(TextAnalysis.oovRateAuditSql)),
+    QuerySpec("ab_cuped_lift", Experiment.abCupedLift, oracle(Experiment.abCupedLiftSql)),
+    QuerySpec("ring_rebalance", StorageLayout.ringRebalance,
+      oracle(StorageLayout.ringRebalanceSql)),
+    QuerySpec("ab_conversion_ztest", Experiment.abConversionZtest,
+      oracle(Experiment.abConversionZtestSql)),
+    // the bucketed twin is provably equal to the anchor: same oracle
+    QuerySpec("ab_rank_test_bucketed", Experiment.abRankTestBucketed(_, _),
+      oracle(Experiment.abRankTestSql)),
+    // unbenched: the single value-domain window is the exactness anchor; the
+    // two-phase bucketed twin above is benched (the size_balanced_shards convention)
+    QuerySpec("ab_rank_test", Experiment.abRankTest,
+      oracle(Experiment.abRankTestSql), benched = false),
+    QuerySpec("ab_diff_in_diff", Experiment.abDiffInDiff, oracle(Experiment.abDiffInDiffSql)),
+    QuerySpec("ab_srm_check", Experiment.abSrmCheck, oracle(Experiment.abSrmCheckSql)),
+    QuerySpec("ips_policy_value", Experiment.ipsPolicyValue(_, _),
+      oracle(Experiment.ipsPolicyValueSql)),
+    QuerySpec("ab_sequential_msprt", Experiment.abSequentialMsprt,
+      oracle(Experiment.abSequentialMsprtSql)),
+    QuerySpec("pseudonymized_revenue", TableChecks.pseudonymizedRevenue(_, _),
+      oracle(TableChecks.pseudonymizedRevenueSql)),
+    QuerySpec("merge_upsert", TableChecks.mergeUpsert(_, _), oracle(TableChecks.mergeUpsertSql)),
+    QuerySpec("merge_change_feed", TableChecks.mergeChangeFeed(_, _),
+      oracle(TableChecks.mergeChangeFeedSql)),
+    QuerySpec("skew_report", Skew.skewReport(_, _), oracle(Skew.skewReportSql)),
+    // unbenched: the prediction is the operator; its validation leg executes the
+    // real join once as the oracle witness
+    QuerySpec("join_size_estimate", Skew.joinSizeEstimate(_, _),
+      oracle(Skew.joinSizeEstimateSql), benched = false),
+    QuerySpec("profile_columns_approx", TableChecks.profileColumnsApprox(_, _), RowsOnly(
+      "HLL++ cardinalities are engine-specific; envelope spec-pinned vs profile_columns")),
+    // unbenched: the exact 6-way multi-distinct Expand + sort-agg is the correctness
+    // anchor; the benched profile is the sketch form (the value_quartiles convention)
+    QuerySpec("profile_columns", TableChecks.profileColumns(_, _),
+      oracle(TableChecks.profileColumnsSql), benched = false),
+    QuerySpec("props_json_stats", Events.propsJsonStats, oracle(Events.propsJsonStatsSql)),
+    QuerySpec("winsorized_stats", Events.winsorizedStats, oracle(Events.winsorizedStatsSql)),
+    QuerySpec("cohort_retention", Events.cohortRetention, oracle(Events.cohortRetentionSql)),
+    QuerySpec("km_purchase_gaps", Events.kmPurchaseGaps, oracle(Events.kmPurchaseGapsSql)),
+    QuerySpec("debounce_events", Events.debounceEvents, oracle(Events.debounceEventsSql)),
+    QuerySpec("user_feature_store", Events.userFeatureStore, oracle(Events.userFeatureStoreSql)),
+    QuerySpec("hour_value_regression", Events.hourValueRegression,
+      oracle(Events.hourValueRegressionSql)),
+    QuerySpec("correlation_matrix", TableChecks.correlationMatrix,
+      oracle(TableChecks.correlationMatrixSql)),
+    QuerySpec("replica_bucket_diff", TableChecks.replicaBucketDiff,
+      oracle(TableChecks.replicaBucketDiffSql)),
+    QuerySpec("value_mad_outliers", Events.valueMadOutliers, oracle(Events.valueMadOutliersSql)),
+    QuerySpec("revenue_pareto", Analytics.revenuePareto, oracle(Analytics.revenueParetoSql)),
+    QuerySpec("skyline_orders", Analytics.skylineOrders, oracle(Analytics.skylineOrdersSql)),
+    QuerySpec("fulfillment_sla", Analytics.fulfillmentSla, oracle(Analytics.fulfillmentSlaSql)),
+    // --- time series ---
+    QuerySpec("daily_gap_filled", TimeSeries.dailyGapFilled, oracle(TimeSeries.dailyGapFilledSql)),
+    QuerySpec("rolling_dau_7d", TimeSeries.rollingDau7d, oracle(TimeSeries.rollingDau7dSql)),
+    QuerySpec("rolling_dau_7d_hll", TimeSeries.rollingDau7dHll, RowsOnly(
+      "DataSketches HLL layout is engine-specific; envelope spec-pinned vs rolling_dau_7d")),
+    // the textbook range-join oracle verbatim: bit-exact equality to an independent
+    // formulation IS the claim
+    QuerySpec("rolling_dau_7d_bitmap", TimeSeries.rollingDau7dBitmap,
+      oracle(TimeSeries.rollingDau7dSql)),
+    QuerySpec("daily_count_anomalies", TimeSeries.dailyCountAnomalies,
+      oracle(TimeSeries.dailyCountAnomaliesSql)),
+    QuerySpec("cusum_changepoints", TimeSeries.cusumChangepoints,
+      oracle(TimeSeries.cusumChangepointsSql)),
+    QuerySpec("ewma_daily", TimeSeries.ewmaDaily, oracle(TimeSeries.ewmaDailySql)),
+    QuerySpec("holt_daily", TimeSeries.holtDaily, oracle(TimeSeries.holtDailySql)),
+    QuerySpec("holt_winters_daily", TimeSeries.holtWintersDaily,
+      oracle(TimeSeries.holtWintersDailySql)),
+    QuerySpec("forecast_backtest", TimeSeries.forecastBacktest,
+      oracle(TimeSeries.forecastBacktestSql)),
+    QuerySpec("weekday_seasonality", TimeSeries.weekdaySeasonality,
+      oracle(TimeSeries.weekdaySeasonalitySql)),
+    QuerySpec("theil_sen_daily_trend", TimeSeries.theilSenDailyTrend,
+      oracle(TimeSeries.theilSenDailyTrendSql)),
+    QuerySpec("benford_audit", TimeSeries.benfordAudit, oracle(TimeSeries.benfordAuditSql)),
+    // --- geo and contrastive pairs, dedup spans, as-of and range joins, rollups ---
+    QuerySpec("geo_near_pairs", GeoJoin.geoNearPairs(_, _), oracle(GeoJoin.geoNearPairsSql)),
+    QuerySpec("contrastive_batch_negatives", Contrastive.batchNegatives(_, _),
+      oracle(Contrastive.batchNegativesSql)),
+    QuerySpec("hard_negatives_lsh", Contrastive.hardNegativesLsh(_, _),
+      oracle(Contrastive.hardNegativesLshSql)),
+    QuerySpec("triplet_mining", Contrastive.tripletMining, oracle(Contrastive.tripletMiningSql)),
+    QuerySpec("sequence_match_conversions", Events.sequenceMatchConversions,
+      oracle(Events.sequenceMatchConversionsSql)),
+    QuerySpec("cc_scrub", Corpus.ccScrub, oracle(Corpus.ccScrubSql)),
+    QuerySpec("bootstrap_mean_ci", Events.bootstrapMeanCi, oracle(Events.bootstrapMeanCiSql)),
+    QuerySpec("media_resize", Multimodal.mediaResize, oracle(Multimodal.mediaResizeSql)),
+    QuerySpec("value_percentiles", Events.valuePercentiles, oracle(Events.valuePercentilesSql)),
+    QuerySpec("value_percentiles_approx", Events.valuePercentilesApprox(_, _), RowsOnly(
+      "GK sketch internals are engine-specific; envelope spec-pinned vs value_percentiles")),
+    QuerySpec("winnow_near_dup", Dedup.winnowNearDupPairs(_, _), oracle(Dedup.winnowNearDupSql)),
+    QuerySpec("incremental_near_dup", Dedup.incrementalNearDup,
+      oracle(Dedup.incrementalNearDupSql)),
+    // unbenched: composes the already-benched scrub, url-dedup, incremental-LSH and
+    // quality legs; its batch-∝ scaling is recorded in BASELINE.md instead
+    QuerySpec("corpus_refresh_incremental", CorpusRefresh.corpusRefreshIncremental,
+      oracle(CorpusRefresh.corpusRefreshIncrementalSql), benched = false),
+    QuerySpec("prefix_jaccard_pairs", SetSimJoin.prefixJaccardPairs,
+      oracle(SetSimJoin.prefixJaccardPairsSql)),
+    // unbenched: re-runs the prefix_jaccard pair join before its 3-row bucket
+    // aggregate; benching it would double-count the set-sim join
+    QuerySpec("split_leakage_audit", SetSimJoin.splitLeakageAudit,
+      oracle(SetSimJoin.splitLeakageAuditSql), benched = false),
+    QuerySpec("repeated_ngram_spans", Dedup.repeatedNgramSpans(_, _),
+      oracle(Dedup.repeatedNgramSpansSql)),
+    QuerySpec("cross_doc_spans", Dedup.crossDocSpans(_, _), oracle(Dedup.crossDocSpansSql)),
+    QuerySpec("cut_spans", Dedup.cutSpans(_, _), oracle(Dedup.cutSpansSql)),
+    // unbenched: a once-per-corpus audit composite that re-executes the benched
+    // minhash-LSH and cut_spans pipelines; benching it would double-count their cost
+    QuerySpec("corpus_dedup_report", Dedup.corpusDedupReport,
+      oracle(Dedup.corpusDedupReportSql), benched = false),
+    QuerySpec("asof_last_click", AsofJoin.asofLastClick, oracle(AsofJoin.asofLastClickSql)),
+    QuerySpec("asof_native_last_click", AsofJoin.asofLastClickNative,
+      oracle(AsofJoin.asofLastClickSql)),
+    // unbenched variants of the native as-of merge: a staleness bound, and the
+    // forward direction on negated time
+    QuerySpec("asof_click_within", AsofJoin.asofClickWithin,
+      oracle(AsofJoin.asofClickWithinSql), benched = false),
+    QuerySpec("asof_next_click", AsofJoin.asofNextClick,
+      oracle(AsofJoin.asofNextClickSql), benched = false),
+    QuerySpec("events_in_windows", RangeJoin.eventsInWindows, oracle(RangeJoin.eventsInWindowsSql)),
+    QuerySpec("salted_user_age", Skew.saltedUserAge, oracle(Skew.saltedUserAgeSql)),
+    QuerySpec("skewed_host_age", Skew.skewedHostAge, oracle(Skew.skewedHostAgeSql)),
+    QuerySpec("distinct_parts_approx", Skew.distinctPartsApprox(_, _), RowsOnly(
+      "HLL sketch internals are engine-specific; envelope spec-pinned vs distinct_parts")),
+    QuerySpec("events_rollup", Events.rollupByTypeDay, oracle(Events.rollupSql)),
+    QuerySpec("events_cube", Events.cubeByTypeDay, oracle(Events.cubeSql)),
+    QuerySpec("events_grouping_sets", Events.groupingSetsByTypeDay, oracle(Events.groupingSetsSql)),
+    QuerySpec("events_pivot", Events.eventsPivot, oracle(Events.eventsPivotSql)),
+    // --- the reference article operators (O2–O15) over the documents table ---
+    QuerySpec("filter_incomplete", DocValidation.filterIncomplete,
+      oracle(DocValidation.filterIncompleteSql)),
+    QuerySpec("validate_flags", DocValidation.validateFlags,
+      oracle(DocValidation.validateFlagsSql)),
+    QuerySpec("reason_histogram", DocValidation.reasonHistogram,
+      oracle(DocValidation.reasonHistogramSql)),
+    QuerySpec("top1_reason", DocValidation.top1Reason, oracle(DocValidation.top1ReasonSql)),
+    QuerySpec("completeness", DocValidation.completeness, oracle(DocValidation.completenessSql)),
+    QuerySpec("date_range", DocValidation.dateRange, oracle(DocValidation.dateRangeSql)),
+    QuerySpec("dedup_exact_keep_first", DocValidation.dedupKeepFirst, oracle(Dedup.exactDedupSql)),
+    QuerySpec("clean_text", DocValidation.cleanText, oracle(DocValidation.cleanTextSql)),
+    QuerySpec("parse_dates", DocValidation.parseDates, oracle(DocValidation.parseDatesSql)),
+    QuerySpec("article_funnel", DocValidation.articleFunnel,
+      oracle(DocValidation.articleFunnelSql)),
+    // --- text analysis and retrieval ---
+    QuerySpec("token_stats", TextAnalysis.tokenStats, oracle(TextAnalysis.tokenStatsSql)),
+    QuerySpec("bpe_token_stats", TextAnalysis.bpeTokenStats, oracle(TextAnalysis.bpeTokenStatsSql)),
+    QuerySpec("bpe_merges", BpeTrain.bpeMerges(_, _), oracle(BpeTrain.bpeMergesSql)),
+    // unbenched, like the byte and unigram twins below: re-trains before it
+    // segments; the training is what gets timed (the corpus_dedup_report convention)
+    QuerySpec("bpe_segment_stats", BpeTrain.bpeSegmentStats(_, _),
+      oracle(BpeTrain.bpeSegmentStatsSql), benched = false),
+    QuerySpec("bpe_byte_merges", BpeTrain.bpeByteMerges(_, _), oracle(BpeTrain.bpeByteMergesSql)),
+    QuerySpec("bpe_byte_segment_stats", BpeTrain.bpeByteSegmentStats(_, _),
+      oracle(BpeTrain.bpeByteSegmentStatsSql), benched = false),
+    QuerySpec("wordpiece_merges", BpeTrain.wordpieceMerges(_, _),
+      oracle(BpeTrain.wordpieceMergesSql)),
+    QuerySpec("unigram_lm_vocab", UnigramLm.unigramLmVocab(_, _),
+      oracle(UnigramLm.unigramLmVocabSql)),
+    QuerySpec("unigram_segment_stats", UnigramLm.unigramSegmentStats(_, _),
+      oracle(UnigramLm.unigramSegmentStatsSql), benched = false),
+    QuerySpec("quality_score", TextAnalysis.qualityScore, oracle(TextAnalysis.qualityScoreSql)),
+    QuerySpec("quality_lr_score", QualityModel.qualityLrScore, Fitted),
+    QuerySpec("lr_eval_metrics", QualityModel.lrEvalMetrics, Fitted),
+    QuerySpec("conformal_calibration", QualityModel.conformalCalibration(_, _),
+      oracle(QualityModel.conformalCalibrationSql)),
+    QuerySpec("quality_weighted_sample", QualityModel.qualityWeightedSample(_, _), Fitted),
+    QuerySpec("dsir_weights", QualityModel.dsirWeights(_, _), oracle(QualityModel.dsirWeightsSql)),
+    QuerySpec("lang_id", TextAnalysis.langId, oracle(TextAnalysis.langIdSql)),
+    QuerySpec("lang_id_confusion", TextAnalysis.langIdConfusion,
+      oracle(TextAnalysis.langIdConfusionSql)),
+    QuerySpec("nearest_centroid_confusion", Centroid.nearestCentroidConfusion,
+      oracle(Centroid.nearestCentroidConfusionSql)),
+    QuerySpec("fingerprint", TextAnalysis.fingerprint, oracle(TextAnalysis.fingerprintSql)),
+    QuerySpec("winnow_fingerprints", TextAnalysis.winnowFingerprints,
+      oracle(TextAnalysis.winnowFingerprintsSql)),
+    QuerySpec("vocab_top_terms", TextAnalysis.vocabTopTerms(_, _),
+      oracle(TextAnalysis.vocabTopTermsSql)),
+    QuerySpec("percolate_alerts", TextAnalysis.percolateAlerts,
+      oracle(TextAnalysis.percolateAlertsSql)),
+    QuerySpec("percolate_boolean_alerts", TextAnalysis.percolateBooleanAlerts,
+      oracle(TextAnalysis.percolateBooleanAlertsSql)),
+    QuerySpec("zipf_fit", TextAnalysis.zipfFit, oracle(TextAnalysis.zipfFitSql)),
+    QuerySpec("lang_source_mi", TextAnalysis.langSourceMi, oracle(TextAnalysis.langSourceMiSql)),
+    QuerySpec("source_vocab_overlap", TextAnalysis.sourceVocabOverlap,
+      oracle(TextAnalysis.sourceVocabOverlapSql)),
+    QuerySpec("length_histogram", TextAnalysis.lengthHistogram(_, _),
+      oracle(TextAnalysis.lengthHistogramSql)),
+    QuerySpec("quantile_normalize_map", Corpus.quantileNormalizeMap,
+      oracle(Corpus.quantileNormalizeMapSql)),
+    QuerySpec("distinctive_terms", TextAnalysis.distinctiveTerms(_, _),
+      oracle(TextAnalysis.distinctiveTermsSql)),
+    // the aggregate variant has the IDENTICAL output contract: one oracle
+    QuerySpec("distinctive_terms_agg", TextAnalysis.distinctiveTermsAgg(_, _),
+      oracle(TextAnalysis.distinctiveTermsSql)),
+    QuerySpec("bm25_topk", TextAnalysis.bm25TopK(_, _), oracle(TextAnalysis.bm25TopKSql)),
+    // the pinned ≤100-query serving batch (cost ∝ batch, not corpus).
+    // bm25_prf_topk / qld_topk / hybrid_rrf_served rebuild the corpus model per call and
+    // stay benched for cross-round comparability; their indexed twins ride the written
+    // postings / band artifacts (the production shape) and are benched alongside them
+    QuerySpec("bm25_topk_served", TextAnalysis.bm25TopKServed(_, _),
+      oracle(TextAnalysis.bm25TopKServedSql)),
+    QuerySpec("bm25_prf_topk", TextAnalysis.bm25PrfTopK(_, _),
+      oracle(TextAnalysis.bm25PrfTopKSql())),
+    // the indexed serves' model statistics are exact mergeable aggregates of the
+    // postings, so the one-shot oracles apply verbatim: equality IS the
+    // serve-from-index exactness claim
+    QuerySpec("bm25_prf_indexed", TextAnalysis.bm25PrfTopKIndexed(_, _),
+      oracle(TextAnalysis.bm25PrfTopKSql())),
+    QuerySpec("qld_topk", TextAnalysis.qldTopK(_, _), oracle(TextAnalysis.qldTopKSql())),
+    QuerySpec("qld_indexed", TextAnalysis.qldTopKIndexed(_, _), oracle(TextAnalysis.qldTopKSql())),
+    // the indexed serve over the grown snapshot has the IDENTICAL output contract:
+    // one oracle; equality pins exact incremental maintenance
+    QuerySpec("bm25_topk_indexed", TextIndex.bm25TopKIndexed(_, _),
+      oracle(TextAnalysis.bm25TopKSql)),
+    QuerySpec("phrase_search", TextAnalysis.phraseSearch(_, _),
+      oracle(TextAnalysis.phraseSearchSql)),
+    QuerySpec("pmi_pairs", TextAnalysis.pmiPairs(_, _), oracle(TextAnalysis.pmiPairsSql)),
+    QuerySpec("rake_keyphrases", TextAnalysis.rakeKeyphrases(_, _),
+      oracle(TextAnalysis.rakeKeyphrasesSql)),
+    QuerySpec("vocab_divergence", TextAnalysis.vocabDivergence(_, _),
+      oracle(TextAnalysis.vocabDivergenceSql)),
+    QuerySpec("doc_top_tokens", TextAnalysis.docTopTokens, oracle(TextAnalysis.docTopTokensSql)),
+    QuerySpec("quality_prune_approx", TextAnalysis.qualityPruneApprox(_, _), RowsOnly(
+      "KLL quantile sketch is engine-specific; envelope spec-pinned vs quality_prune")),
+    // unbenched: the exact per-language rank sort (single-task on a dominant
+    // language) is the anchor; the approx-quantile threshold scan above is benched
+    QuerySpec("quality_prune", TextAnalysis.qualityPrune(_, _),
+      oracle(TextAnalysis.qualityPruneSql), benched = false),
+    QuerySpec("hybrid_rrf_lsh_topk", Similarity.hybridRrfLshTopK(_, _),
+      oracle(Similarity.hybridRrfLshTopKSql)),
+    // unbenched: the brute dense leg makes it the exactness anchor; the LSH-leg
+    // composite above is benched
+    QuerySpec("hybrid_rrf_topk", Similarity.hybridRrfTopK(_, _),
+      oracle(Similarity.hybridRrfTopKSql), benched = false),
+    // the pinned-batch hybrid serve (both legs ≤100 queries)
+    QuerySpec("hybrid_rrf_served", Similarity.hybridRrfServed(_, _),
+      oracle(Similarity.hybridRrfServedSql)),
+    QuerySpec("hybrid_rrf_indexed", Similarity.hybridRrfIndexed(_, _),
+      oracle(Similarity.hybridRrfServedSql)),
+    QuerySpec("vocab_heavy_hitters_cms", TextAnalysis.vocabHeavyHittersCms(_, _), RowsOnly(
+      "count-min hash layout is engine-specific; envelope + top-k spec-pinned vs vocab_top_terms")),
+    // --- multimodal binary-column plumbing ---
+    QuerySpec("media_stats", Multimodal.mediaStats, oracle(Multimodal.mediaStatsSql)),
+    QuerySpec("media_phash", Multimodal.mediaPhash, oracle(Multimodal.mediaPhashSql)),
+    QuerySpec("media_near_dup", Multimodal.mediaNearDup(_, _), oracle(Multimodal.mediaNearDupSql)),
+    QuerySpec("frame_sample", Multimodal.frameSampleHex(_, _),
+      oracle(Multimodal.frameSampleHexSql)),
+    QuerySpec("frame_sample_digest", Multimodal.frameSampleDigest(_, _),
+      oracle(Multimodal.frameSampleDigestSql)),
+    QuerySpec("frame_near_dup", Multimodal.frameNearDup(_, _), oracle(Multimodal.frameNearDupSql)),
+    QuerySpec("extract_features", Multimodal.extractFeaturesScalars(_, _), Fitted),
+    // --- storage layout ---
+    QuerySpec("bucketed_join_revenue", StorageLayout.bucketedJoinRevenue(_, _),
+      oracle(StorageLayout.bucketedJoinRevenueSql)),
+    QuerySpec("partition_pruned_events", StorageLayout.prunedEventsDaily(_, _),
+      oracle(StorageLayout.prunedEventsDailySql)),
+    QuerySpec("zorder_chunks", StorageLayout.zorderChunks(_, _),
+      oracle(StorageLayout.zorderChunksSql)),
+    QuerySpec("hilbert_chunks", StorageLayout.hilbertChunks(_, _),
+      oracle(StorageLayout.hilbertChunksSql)),
+    QuerySpec("zorder_pruned_scan", StorageLayout.zorderPrunedScan(_, _),
+      oracle(StorageLayout.zorderPrunedScanSql)),
+    QuerySpec("dpp_pruned_join", StorageLayout.dppPrunedJoin(_, _),
+      oracle(StorageLayout.dppPrunedJoinSql)),
+    // --- corpus sampling and splitting ---
+    QuerySpec("split_counts", Sampling.splitCounts, oracle(Sampling.splitCountsSql)),
+    QuerySpec("stratified_sample", Sampling.stratifiedSampleHash(_, _),
+      oracle(Sampling.stratifiedSampleHashSql)),
+    QuerySpec("mixture_sample", Sampling.mixtureSample(_, _), oracle(Sampling.mixtureSampleSql)),
+    QuerySpec("temperature_sample", Sampling.temperatureSample(_, _),
+      oracle(Sampling.temperatureSampleSql)),
+    QuerySpec("weighted_sample_es", Sampling.weightedSampleEs,
+      oracle(Sampling.weightedSampleEsSql)),
+    QuerySpec("distribution_match_sample", Sampling.distributionMatchSample,
+      oracle(Sampling.distributionMatchSampleSql)),
+    QuerySpec("stratified_topk_sample", Sampling.stratifiedTopkSample(_, _),
+      oracle(Sampling.stratifiedTopkSampleSql)),
+    QuerySpec("kcenter_coreset", Sampling.kcenterCoreset(_, _),
+      oracle(Sampling.kcenterCoresetSql())),
+    QuerySpec("kmeans_clusters", Clustering.kmeansClusters(_, _),
+      oracle(Clustering.kmeansClustersSql())),
+    QuerySpec("shuffle_shards", Sampling.shuffleShards(_, _), oracle(Sampling.shuffleShardsSql)),
+    QuerySpec("url_host_caps", Sampling.urlHostCaps(_, _), oracle(Sampling.urlHostCapsSql)),
+    QuerySpec("url_canonical_dedup", Sampling.urlCanonicalDedup(_, _),
+      oracle(Sampling.urlCanonicalDedupSql)),
+    QuerySpec("host_lang_entropy", Sampling.hostLangEntropy, oracle(Sampling.hostLangEntropySql)),
+    QuerySpec("size_balanced_shards", Sampling.sizeBalancedShards(_, _),
+      oracle(Sampling.sizeBalancedShardsSql)),
+    // --- corpus preparation (filters, PII, decontamination, packing, LM scores) ---
+    QuerySpec("quality_filter", Corpus.qualityFilter, oracle(Corpus.qualityFilterSql)),
+    QuerySpec("repetition_stats", Corpus.repetitionStats(_, _), oracle(Corpus.repetitionStatsSql)),
+    QuerySpec("pii_scrub", Corpus.piiScrub, oracle(Corpus.piiScrubSql)),
+    QuerySpec("boilerplate_scrub", Corpus.boilerplateScrub(_, _),
+      oracle(Corpus.boilerplateScrubSql)),
+    QuerySpec("filter_agreement_kappa", Corpus.filterAgreementKappa,
+      oracle(Corpus.filterAgreementKappaSql)),
+    QuerySpec("lr_calibration_bins", QualityModel.lrCalibrationBins, Fitted),
+    QuerySpec("decontaminate", Corpus.decontaminate(_, _), oracle(Corpus.decontaminateSql)),
+    QuerySpec("decontaminate_bloom", Corpus.decontaminateBloom(_, _), RowsOnly(
+      "Bloom bit pattern is engine-specific; superset of decontaminate + fpp bound spec-pinned")),
+    QuerySpec("pack_sequences", Corpus.packSequences(_, _), oracle(Corpus.packSequencesSql)),
+    QuerySpec("ffd_pack_bins", Corpus.ffdPackBins(_, _), oracle(Corpus.ffdPackBinsSql())),
+    QuerySpec("length_batching", Corpus.lengthBatching(_, _), oracle(Corpus.lengthBatchingSql)),
+    QuerySpec("chunk_documents", Corpus.chunkDocuments(_, _), oracle(Corpus.chunkDocumentsSql)),
+    // the generator variant has the IDENTICAL output contract: one oracle
+    QuerySpec("chunk_documents_gen", Corpus.chunkDocumentsGen(_, _),
+      oracle(Corpus.chunkDocumentsSql)),
+    QuerySpec("unigram_logprob", Corpus.unigramLogProbScore, oracle(Corpus.unigramLogProbScoreSql)),
+    QuerySpec("bigram_logprob", Corpus.bigramLogProbScore(_, _),
+      oracle(Corpus.bigramLogProbScoreSql)),
+    QuerySpec("kneser_ney_logprob", Corpus.kneserNeyLogProbScore,
+      oracle(Corpus.kneserNeyLogProbScoreSql))
   )
+
+  lazy val queries: Map[String, Build] = specs.iterator.map(q => q.name -> q.build).toMap
+
+  /** DuckDB oracle SQL per query: the literal oracles, plus the fitted ones
+    * once their contexts are bound (see [[QuerySpec.Fitted]]). */
+  def oracleSql: Map[String, String] =
+    specs.iterator.collect { case QuerySpec(name, _, Oracle(sql), _) => name -> sql() }.toMap ++
+      Similarity.quantizerOracles ++ Multimodal.codecOracles ++ QualityModel.modelOracles
+
+  /** The headline bench set, in sweep order. */
+  val benchQueries: Seq[String] = specs.filter(_.benched).map(_.name)
 }

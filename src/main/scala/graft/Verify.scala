@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,17 +21,10 @@ object Verify {
     }
     only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[verify] WARNING: '$n' matches no registered query — typo?")))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the two quantizer oracles are generated from centroids fitted on THIS
-    // sweep's data — bind the context before the oracle dump below
+    val spark = GraftSession()
+    // the 22 fitted oracles embed models (centroids, codebooks, PCA, LR
+    // weights) fitted on THIS sweep's data — bind the contexts before the
+    // oracle dump below
     graft.ops.Similarity.setOracleContext(spark, sfDir)
     graft.ops.Multimodal.setOracleContext(spark, sfDir)
     graft.ops.QualityModel.setOracleContext(spark, sfDir)

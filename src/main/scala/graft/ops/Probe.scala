@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Standing stage-level timing probe for optimization work (the
   * [[graft.PlanDump]] convention: a measurement tool, never registered or
   * benched — r17 shipped it as a scratch file, r18 keeps it as the
-  * documented instrument). Session config mirrors [[graft.Bench]].
+  * documented instrument). Runs on [[graft.GraftSession]], as Bench does.
   *
   * Modes: `acct <query>` — warm one registered query, then re-run it under
   * a SparkListener and report jobs / stages / tasks / stage wall+CPU (the
@@ -18,14 +18,7 @@ import org.apache.spark.sql.functions._
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

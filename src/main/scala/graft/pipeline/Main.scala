@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point (reference E1: `python cleaner.py`, cleaner.py:396-397).
   *
   * Usage: runMain graft.pipeline.Main [input.json [output.json [report.txt]]]
@@ -14,15 +12,7 @@ object Main {
     val output = args.lift(1).getOrElse("cleaned_output.json")
     val report = args.lift(2).getOrElse("quality_report.txt")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-article-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     println("=" * 60)
     println("DATA PROCESSING PIPELINE")

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone validator CLI (reference E3: the `validator.py` library run on
   * its own, validator.py:144-199) — validates a raw article JSON file
   * WITHOUT the cleaning pipeline, exactly as `batch_validate` +
@@ -16,15 +14,7 @@ object ValidatorMain {
     val input = args.lift(0).getOrElse("sample_data.json")
     val reportPath = args.lift(1)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-validator")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val raw = ArticleSchema.load(spark, input)
     val flagged = Validator.withFlags(ArticleSchema.aliasPublished(raw)).cache()

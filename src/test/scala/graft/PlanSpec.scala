@@ -1,6 +1,8 @@
 package graft
 
-/** Plan-shape regression guards: the properties PlanAudit prints, asserted.
+/** Plan-shape regression guards: join strategy, exchanges and pushdown of
+  * the headline queries, asserted per family ([[PlanShapeSpec]] is the
+  * blanket digest over every benched query).
   * A change that silently drops a broadcast, un-pushes a filter, or turns
   * an equi-join into a nested loop should fail here, not surface as a
   * mystery slowdown in a later round's bench.

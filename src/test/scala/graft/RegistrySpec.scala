@@ -1,73 +1,48 @@
 package graft
 
-/** Registry-hygiene tripwire: the driver contract lives in three parallel
-  * structures (`queries`, `oracleSql`, `benchQueries`) plus a documented
-  * rows-only allowlist. This spec fails the build the moment they drift —
-  * a new query landing without an oracle (or without a documented reason
-  * for not having one) is exactly the kind of silent coverage erosion a
-  * later round would otherwise discover in the correctness report.
+import graft.QuerySpec.{Fitted, RowsOnly}
+
+/** Registry tripwire. Every query is one `SparkEntry.specs` entry whose
+  * check is an oracle, a fitted oracle or a rows-only reason, so coverage
+  * cannot drift by construction; this spec pins what the types cannot:
+  * unique names, the fitted oracles' wiring, the tally, and that every
+  * query resolves.
   */
 class RegistrySpec extends SparkSuite {
 
-  /** Every rows-only query, each with its reason documented on
-    * `SparkEntry.oracleSql`'s scaladoc. Adding to this list requires
-    * adding the reason there too. */
-  // ann_ivf_topk / semdedup_clusters left this list in round 8 (fitted
-  // centroid literals), extract_features and quality_lr_score in round 11
-  // (fitted PCA / LR literals): their oracles are generated once the
-  // contexts below are bound (exactly what Verify does before its dump).
+  // the fitted oracles exist only once their contexts are bound (exactly
+  // what Verify does before its dump)
   graft.ops.Similarity.setOracleContext(spark, "/root/testdata/sf0.001")
   graft.ops.Multimodal.setOracleContext(spark, "/root/testdata/sf0.001")
   graft.ops.QualityModel.setOracleContext(spark, "/root/testdata/sf0.001")
 
-  private val documentedRowsOnly = Set(
-    "distinct_parts_approx",    // HLL sketch internals are engine-specific
-    "value_percentiles_approx", // GK sketch internals are engine-specific
-    "value_quartiles_approx",   // approx_percentile boundaries are engine-specific
-    "quality_prune_approx",     // KLL quantile sketch is engine-specific (envelope spec vs exact)
-    "profile_columns_approx",   // HLL++ profile cardinalities are engine-specific (envelope spec vs exact)
-    "decontaminate_bloom",      // Bloom bit pattern is engine-specific (sketch hashes)
-    "vocab_heavy_hitters_cms",  // count-min hash layout is engine-specific
-    "rolling_dau_7d_hll"        // DataSketches HLL layout is engine-specific (envelope spec vs exact twin)
-  )
-
-  test("every registered query has an oracle or a documented rows-only reason") {
-    val undocumented = SparkEntry.queries.keySet --
-      SparkEntry.oracleSql.keySet -- documentedRowsOnly
-    assert(undocumented.isEmpty,
-      s"queries with neither oracle nor documented reason: ${undocumented.mkString(", ")}")
+  test("query names are unique") {
+    // `queries` and `oracleSql` are maps: a duplicate would silently
+    // shadow its first declaration
+    val dups = SparkEntry.specs.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"declared more than once: ${dups.mkString(", ")}")
   }
 
-  test("no orphan oracles or stale rows-only entries") {
-    val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphanOracles.isEmpty, s"oracles without a query: ${orphanOracles.mkString(", ")}")
-    val convertedButListed = documentedRowsOnly & SparkEntry.oracleSql.keySet
-    assert(convertedButListed.isEmpty,
-      s"rows-only entries that now HAVE oracles (drop from the list): ${convertedButListed.mkString(", ")}")
-    val ghostRowsOnly = documentedRowsOnly -- SparkEntry.queries.keySet
-    assert(ghostRowsOnly.isEmpty, s"rows-only entries with no query: ${ghostRowsOnly.mkString(", ")}")
+  test("the Fitted-marked queries are exactly the fitted oracles' keys") {
+    val marked = SparkEntry.specs.filter(_.check == Fitted).map(_.name).toSet
+    val generated = graft.ops.Similarity.quantizerOracles.keySet ++
+      graft.ops.Multimodal.codecOracles.keySet ++ graft.ops.QualityModel.modelOracles.keySet
+    assert(marked == generated,
+      s"marked but not generated: ${(marked -- generated).mkString(", ")}; " +
+        s"generated but not marked: ${(generated -- marked).mkString(", ")}")
   }
 
   test("the ledger tally is pinned: registered = exact + rows-only") {
     // THE single source of truth for the registered/exact/rows-only split
     // (BASELINE.md's gate paragraph cites these numbers; the driver's
-    // correctness report derives from the same structures). The partition
-    // identity is enforced by the two set tests above; this pin makes the
-    // TALLY itself a deliberate, reviewed change instead of prose that can
-    // drift. "Exact" counts every query whose oracle Verify can emit —
-    // including the fitted-quantizer oracles generated once the contexts
-    // above are bound; "rows-only" is exactly `documentedRowsOnly`.
-    val tally = (SparkEntry.queries.size, SparkEntry.oracleSql.size,
-      documentedRowsOnly.size)
+    // correctness report derives from the same structures). The pin makes
+    // the TALLY a deliberate, reviewed change instead of prose that can
+    // drift. "Exact" counts every query whose oracle Verify can emit,
+    // the fitted ones included once the contexts above are bound.
+    val rowsOnly = SparkEntry.specs.count(_.check.isInstanceOf[RowsOnly])
+    val tally = (SparkEntry.queries.size, SparkEntry.oracleSql.size, rowsOnly)
     assert(tally == ((295, 287, 8)),
       s"ledger tally changed to $tally — update this pin AND BASELINE.md's gate paragraph together")
-  }
-
-  test("the bench set is a subset of the registry") {
-    val ghosts = SparkEntry.benchQueries.toSet -- SparkEntry.queries.keySet
-    assert(ghosts.isEmpty, s"benched but unregistered: ${ghosts.mkString(", ")}")
-    assert(SparkEntry.benchQueries.distinct.size == SparkEntry.benchQueries.size,
-      "duplicate entries in benchQueries")
   }
 
   test("every query runs against the smoke SF and returns a non-empty schema") {
