@@ -1,16 +1,17 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.functions.date_format
+
+import graft.functions.ParseTimestamp
 
 /** Date standardization (reference O3, cleaner.py:51-70).
   *
   * The reference uses dateutil's fuzzy parser; we reproduce its observed
   * behavior on the full input corpus (SURVEY.md §2.3, verified against
-  * dateutil) with two regex pre-normalizations and a `coalesce` of strict
-  * `try_to_timestamp` patterns. `try_to_timestamp` (not `to_timestamp`)
-  * keeps the null-on-failure semantics under Spark 4's default ANSI mode.
+  * dateutil) with two regex pre-normalizations and strict patterns tried in
+  * order, each parsed as `try_to_timestamp` parses it (null on failure,
+  * also under Spark 4's default ANSI mode).
   *
   * Pattern order encodes dateutil's resolution rules:
   *  - ISO first (fast path for already-clean data);
@@ -33,45 +34,20 @@ object Dates {
     "d/M/yyyy"                    // 15/03/2025 → Mar 15 (day-first fallback)
   )
 
-  /** The literal text of a datetime pattern: quoted runs and the runs of
-    * non-letters between pattern letters (`-`, `:`, `", "`, `/`, ...).
-    */
-  private def literals(pattern: String): Seq[String] =
-    "'([^']*)'|([^A-Za-z']+)".r.findAllMatchIn(pattern)
-      .map(m => Option(m.group(1)).getOrElse(m.group(2)))
-      .filter(_.nonEmpty).toSeq.distinct
-
   /** Parse a messy date string column to TimestampType; null when invalid.
     * Reproduces `parse_iso_date`'s sentinel rejection of "none"/"null"/"nan"
     * (cleaner.py:64) and null-on-unparseable (cleaner.py:69).
+    *
+    * One generated call ([[graft.functions.ParseTimestamp]]), not a column
+    * chain: as a `coalesce` of guarded `try_to_timestamp`s it pushed the
+    * clean stage's generated method to 21,811 bytes and the report's
+    * date-range aggregate to 19,762, past HotSpot's 8,000-byte JIT limit,
+    * so both ran interpreted. Keep a kernel one call; `CodegenSizeSpec`
+    * pins every stage that parses dates under that limit.
     */
-  def parseTimestamp(c: Column): Column = {
-    val s = trim(c.cast("string"))
-    // dateutil quirks the corpus exercises: ordinal suffixes ("July 1st") and
-    // the "Sept" abbreviation Java doesn't accept (SURVEY.md §2.3).
-    val noOrdinal = regexp_replace(s, "(?<=\\d)(st|nd|rd|th)\\b", "")
-    val pre = regexp_replace(noOrdinal, "^Sept(?=[ .])", "Sep")
-    // A pattern only runs where its literal separators occur: a failed
-    // parse raises and catches an exception per row, and a formatter cannot
-    // match input that lacks its literals, so the guards change no result.
-    // Spark's formatters parse case-insensitively, hence `upper` for the
-    // letter literals (`T`, `Z`).
-    val upperPre = upper(pre)
-    val parsed = coalesce(patterns.map { p =>
-      val guard = literals(p).map { l =>
-        if (l.exists(_.isLetter)) upperPre.contains(l.toUpperCase) else pre.contains(l)
-      }.foldLeft(lit(true))(_ && _)
-      when(guard, try_to_timestamp(pre, lit(p)))
-    }: _*)
-    when(c.isNull || lower(s).isin("", "none", "null", "nan"),
-      lit(null).cast(TimestampType)
-    ).otherwise(parsed)
-  }
+  def parseTimestamp(c: Column): Column = ParseTimestamp(c, patterns)
 
   /** Full O3: messy string → ISO-8601 string (`yyyy-MM-ddTHH:mm:ssZ`) or null. */
   def parseIsoDate(c: Column): Column =
     date_format(parseTimestamp(c), IsoFormat)
-
-  /** Re-parse an already-ISO string column (report date-range aggregate, O14). */
-  def isoToTimestamp(c: Column): Column = try_to_timestamp(c, lit(IsoFormat))
 }

@@ -56,33 +56,9 @@ object Stats {
       includeFailedDetails: Boolean = true,
       maxFailedDetails: Long = 10000): QualityStats = {
 
-    val dataCols = flagged.columns.filterNot(metaCols.contains).toSeq
-    val dateCol = Seq("published_date", "published").find(flagged.columns.contains)
-
-    // --- one grouped aggregate: counts + completeness + date range + histogram ---
-    val failed = !col("passed")
-    val baseAggs = Seq(
-      count(lit(1)).as("_total"),
-      count(when(col("passed"), 1)).as("_passed"),
-      count(when(failed, 1)).as("_failed"),
-      min(when(failed, col("row_id"))).as("_first_failed"))
-    // O13 semantics note: null counts as MISSING here (intended semantics,
-    // README "empty/None/whitespace"). The reference's live behavior differs:
-    // its astype(str) cast turns null into the literal "None", so its golden
-    // report shows published_date at 100% where this reports 90.9% — a
-    // documented deviation (SURVEY.md §0 item 2 / H3), pinned in
-    // GoldenPipelineSpec.
-    val complAggs = dataCols.map(c =>
-      count(when(!isBlank(col(c).cast("string")), 1)).as(s"_ok_$c"))
-    val dateAggs = dateCol.toSeq.flatMap { c =>
-      // report re-parses with pandas to_datetime(errors="coerce"); the column
-      // holds ISO strings (or raw `published`), so a try-parse chain suffices
-      val ts = Dates.parseTimestamp(col(c))
-      Seq(min(ts).as("_d_min"), max(ts).as("_d_max"), count(ts).as("_d_n"))
-    }
-    val aggs = baseAggs ++ complAggs ++ dateAggs
+    val dataCols = dataColumns(flagged)
     val (groups, failedDetails) = overlap(flagged.sparkSession)(
-      flagged.groupBy(col("reason")).agg(aggs.head, aggs.tail: _*).collect().toSeq,
+      grouped(flagged).collect().toSeq,
       if (includeFailedDetails) failureDetails(flagged, maxFailedDetails) else Seq.empty)
     def sum(name: String): Long = groups.map(_.getAs[Long](name)).sum
     def stamps(name: String): Seq[Timestamp] = groups.flatMap(r => Option(r.getAs[Timestamp](name)))
@@ -90,7 +66,7 @@ object Stats {
     val total = sum("_total")
     val passed = sum("_passed")
     val completeness = dataCols.map(c => c -> sum(s"_ok_$c"))
-    val dateRange = dateCol.map { _ =>
+    val dateRange = dateColumn(flagged).map { _ =>
       DateRange(stamps("_d_min").minByOption(_.toInstant), stamps("_d_max").maxByOption(_.toInstant),
         sum("_d_n"))
     }
@@ -112,6 +88,40 @@ object Stats {
       reasons = reasons,
       failedDetails = failedDetails,
       dateRange = dateRange)
+  }
+
+  private def dataColumns(flagged: DataFrame): Seq[String] =
+    flagged.columns.filterNot(metaCols.contains).toSeq
+
+  private def dateColumn(flagged: DataFrame): Option[String] =
+    Seq("published_date", "published").find(flagged.columns.contains)
+
+  /** The one grouped aggregate: counts, completeness, date range and the
+    * reason histogram, one row per `reason`.
+    */
+  private[pipeline] def grouped(flagged: DataFrame): DataFrame = {
+    val failed = !col("passed")
+    val baseAggs = Seq(
+      count(lit(1)).as("_total"),
+      count(when(col("passed"), 1)).as("_passed"),
+      count(when(failed, 1)).as("_failed"),
+      min(when(failed, col("row_id"))).as("_first_failed"))
+    // O13 semantics note: null counts as MISSING here (intended semantics,
+    // README "empty/None/whitespace"). The reference's live behavior differs:
+    // its astype(str) cast turns null into the literal "None", so its golden
+    // report shows published_date at 100% where this reports 90.9% — a
+    // documented deviation (SURVEY.md §0 item 2 / H3), pinned in
+    // GoldenPipelineSpec.
+    val complAggs = dataColumns(flagged).map(c =>
+      count(when(!isBlank(col(c).cast("string")), 1)).as(s"_ok_$c"))
+    val dateAggs = dateColumn(flagged).toSeq.flatMap { c =>
+      // report re-parses with pandas to_datetime(errors="coerce"); the column
+      // holds ISO strings (or raw `published`), so the pipeline's parser suffices
+      val ts = Dates.parseTimestamp(col(c))
+      Seq(min(ts).as("_d_min"), max(ts).as("_d_max"), count(ts).as("_d_n"))
+    }
+    val aggs = baseAggs ++ complAggs ++ dateAggs
+    flagged.groupBy(col("reason")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Failure details (O10): the failed rows in `row_id` order, each with

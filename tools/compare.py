@@ -6,10 +6,15 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [name ...]
 Reads each Spark result parquet under <verifyOutDir>/<name>, runs the
 matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over
 views of the <sfDir> parquet tables, then compares like the driver:
-sort columns by name, sort rows, value-compare. Exit 1 on any mismatch.
+sort columns by name, sort rows, value-compare. Each line gives the
+oracle's DuckDB time; an oracle still running after ORACLE_LIMIT_S seconds
+is interrupted and counted as a failure, never skipped. Exit 1 on any
+mismatch, error or timeout.
 """
-import json, sys, glob
+import json, sys, glob, threading, time
 import duckdb, pandas as pd
+
+ORACLE_LIMIT_S = 120  # the slowest oracle, near_dup_clusters, takes about 25 s at sf0.01
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -82,6 +87,7 @@ def main():
         src = f"{p}/*.parquet" if os.path.isdir(p) else p  # ScaleData writes part-file dirs
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     fails = 0
+    times = {}
     for name in names or sorted(oracles):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
@@ -89,10 +95,19 @@ def main():
         spark_df = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
         if name not in oracles:
             print(f"{name}: rows={len(spark_df)} (no oracle — rows-only)"); continue
+        timer = threading.Timer(ORACLE_LIMIT_S, con.interrupt)
+        start = time.monotonic()
+        timer.start()
         try:
             ora_df = con.execute(oracles[name]).fetchdf()
+        except duckdb.InterruptException:
+            print(f"{name}: ORACLE TIMEOUT: no result after {ORACLE_LIMIT_S} s"); fails += 1; continue
         except Exception as e:
             print(f"{name}: ORACLE SQL ERROR: {e}"); fails += 1; continue
+        finally:
+            timer.cancel()
+            secs = time.monotonic() - start
+            times[name] = secs
         spark_df, ora_df, aligned = align_dtypes(spark_df, ora_df)
         for c in aligned:
             print(f"{name}: WARNING dtype alignment fired on column '{c}' "
@@ -109,7 +124,10 @@ def main():
             print(f"{name}: VALUE MISMATCH at sorted-row {i}:\n  spark : {a.loc[i].to_dict()}\n  oracle: {b.loc[i].to_dict()}")
             fails += 1
         else:
-            print(f"{name}: OK ({len(a)} rows)")
+            print(f"{name}: OK ({len(a)} rows, oracle {secs:.2f} s)")
+    slowest = sorted(times.items(), key=lambda kv: -kv[1])[:5]
+    print(f"oracles run: {len(times)}, failed: {fails}, oracle time: {sum(times.values()):.1f} s; "
+          "slowest: " + ", ".join(f"{n} {t:.2f} s" for n, t in slowest))
     sys.exit(1 if fails else 0)
 
 main()
