@@ -548,16 +548,12 @@ object Analytics {
        |FROM per_order GROUP BY 1
        |ORDER BY o_orderpriority""".stripMargin
 
-  /** The (day, min price) collapse both the batch query and the streaming
-    * monitor fold over — per-day minima are mergeable by MIN, so a live
-    * monitor can maintain this frame incrementally. */
+  /** The (day, min price) collapse the frontier is taken over. */
   private[graft] def dailyMinPrice(orders: DataFrame): DataFrame =
     orders.groupBy(to_date(col("o_orderdate")).as("day"))
       .agg(min(col("o_totalprice")).as("price"))
 
-  /** The frontier filter over a (day, price) frame — shared verbatim by
-    * batch and streaming, so the streamed frontier is definitionally the
-    * batch metric. */
+  /** The frontier filter over a (day, price) frame. */
   private[graft] def frontierOf(pts: DataFrame): DataFrame = {
     val wNewer = Window.orderBy(col("day").desc)
       .rowsBetween(Window.unboundedPreceding, -1)

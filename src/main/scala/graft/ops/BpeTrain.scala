@@ -336,9 +336,9 @@ object BpeTrain {
   }
 
   /** Count any `(doc_id, text)` frame against a trained segmentation
-    * table (`word, syms`) — the serving core shared by the batch query
-    * and the streaming ingest twin. Words the vocabulary has never seen
-    * would drop out of the inner join; the production convention is
+    * table (`word, syms`) — the serving core of [[bpeSegmentStats]].
+    * Words the vocabulary has never seen would drop out of the inner
+    * join; the production convention is
     * char-fallback, so unseen words count `len(word)+1` subwords (the
     * untrained segmentation) via the left join + coalesce.
     *

@@ -110,8 +110,7 @@ object CorpusRefresh {
   /** The three index artifacts of a CURATED `(doc_id, source, text)`
     * frame — what a full run LANDS next to its output so the next refresh
     * never re-scans history ((canon), (band, band_hash, hist_id),
-    * (doc_id, sh)). The streaming ingest twin grows these per micro-batch
-    * with each batch's landed docs. */
+    * (doc_id, sh)). */
   def indexArtifactsOf(curated: DataFrame): (DataFrame, DataFrame, DataFrame) =
     (curated.select(
        Sampling.canonicalUrl(plantedRefreshUrl).as("canon")).distinct(),
@@ -136,11 +135,11 @@ object CorpusRefresh {
       batch: DataFrame): DataFrame = {
     // Persisted-artifact entry point: fail fast on a stale-scheme band
     // store (a pre-v2 index would silently report ZERO near-dups — its
-    // hashes never collide with fresh ones). The guard lives HERE, not
-    // only in the streaming wrappers, so every direct caller of the
-    // documented stored-artifact API hits the same check. `histBands`
-    // must therefore carry the `mh_scheme` stamp as written by
-    // [[indexArtifactsOf]]; the guard strips it before the band join.
+    // hashes never collide with fresh ones). The guard lives HERE so
+    // every caller of the documented stored-artifact API hits the same
+    // check. `histBands` must therefore carry the `mh_scheme` stamp as
+    // written by [[indexArtifactsOf]]; the guard strips it before the
+    // band join.
     val hb = Dedup.requireBandScheme(histBands)
     // Stage 1 — PII scrub: per-row projection, drops nothing.
     val b = batch.select(col("doc_id"), col("source"),

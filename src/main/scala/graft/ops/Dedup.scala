@@ -838,11 +838,10 @@ object Dedup {
   }
 
   /** The corpus band index as a standalone artifact: `(band, band_hash,
-    * hist_id)` — what [[incrementalNearDup]] builds inline, exposed for the
-    * streaming ingest ([[graft.streaming.DocStreams.nearDupAgainstIndex]]),
-    * where it plays the static side of a stream-static join. At production
-    * scale this is a bucketed table keyed by (band, band_hash), rebuilt per
-    * index epoch.
+    * hist_id)` — what [[incrementalNearDup]] builds inline, stamped with the
+    * scheme version [[requireBandScheme]] checks when a stored index is read
+    * back. At production scale this is a bucketed table keyed by
+    * (band, band_hash), rebuilt per index epoch.
     */
   def bandIndex(docs: DataFrame): DataFrame =
     docs.select(
@@ -875,10 +874,6 @@ object Dedup {
         "collide across schemes, so the index MUST be rebuilt")
     bands.drop("mh_scheme")
   }
-
-  /** The verify-side shingle store for the band index: `(hist_id, hist_sh)`. */
-  def shingleIndex(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id").as("hist_id"), shingles(col("text")).as("hist_sh"))
 
   /** Cross-document repeated-substring spans (the Lee et al. exact-substring
     * dedup primitive): maximal runs of consecutive matching token n-grams

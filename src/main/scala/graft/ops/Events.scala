@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Event-time windowing over the `events` table — tumbling, sliding, and
-  * session windows, in shapes that move unchanged to Structured Streaming
-  * (`readStream` + `withWatermark`; see [[graft.streaming.EventStreams]]).
+  * session windows.
   *
   * Scale notes:
   *  - tumbling/sliding use the built-in `window()` generator → a single
@@ -246,11 +245,8 @@ object Events {
       .orderBy("user_id", "session_idx")
   }
 
-  /** Sessionization via Spark's own `session_window()` generator — the
-    * batch twin of the Structured Streaming sessionizer (the generator is
-    * the same operator Spark uses under `groupBy(session_window(...))` in a
-    * stream; see [[graft.streaming.EventStreams]]). One hash aggregate with
-    * session-merge, no window functions.
+  /** Sessionization via Spark's own `session_window()` generator. One
+    * hash aggregate with session-merge, no window functions.
     *
     * Boundary semantics differ from [[sessions]] BY CONSTRUCTION: a
     * session_window spans [first, last + gap), so an event exactly `gap`

@@ -34,10 +34,8 @@ object Experiment {
   /** Experiment start: events before this are the CUPED pre-period. */
   val SplitDate = "2024-01-16"
 
-  /** Per-user frame: arm, pre-period covariate x, experiment metric y.
-    * The (x, y) sums are MERGEABLE states (plain addition), which is what
-    * lets [[graft.streaming.ExperimentStreams]] maintain this frame
-    * incrementally and re-serve the readout without rescanning history. */
+  /** Per-user frame: arm, pre-period covariate x, experiment metric y —
+    * shared by [[abCupedLift]], [[abDiffInDiff]] and [[abSrmCheck]]. */
   private[graft] def perUser(ev: DataFrame): DataFrame = {
     val dec = "cast(0.00 as decimal(15,2))"
     val isPurchase = col("event_type") === "purchase"
@@ -61,8 +59,7 @@ object Experiment {
   def abCupedLiftFrom(ev: DataFrame): DataFrame =
     readoutFrom(perUser(ev))
 
-  /** The 2-row CUPED readout from a per-user (arm, x, y) frame — split
-    * out so the streaming maintainer can serve it from its stored state. */
+  /** The 2-row CUPED readout from a per-user (arm, x, y) frame. */
   private[graft] def readoutFrom(pu: DataFrame): DataFrame = {
     val pooled = pu.agg(
       count(lit(1)).as("n_all"),

@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Append-only incremental maintenance for the PQ/ADC index family.
   *
-  * The round-10 serving loop ([[graft.streaming.VectorStreams.adcServe]])
-  * re-fits codebooks and re-encodes the WHOLE corpus on every refresh —
-  * correct, but at 100 TB a full re-encode per refresh is the cost of
-  * rebuilding the index from scratch while the typical refresh only adds
-  * an ingest batch that is orders of magnitude smaller than the corpus.
+  * A PQ index rebuilt on every refresh re-fits codebooks and re-encodes
+  * the WHOLE corpus — correct, but at 100 TB a full re-encode per refresh
+  * is the cost of rebuilding the index from scratch while the typical
+  * refresh only adds an ingest batch that is orders of magnitude smaller
+  * than the corpus.
   * This is the `incremental_near_dup` shape applied to the vector index:
   * work is proportional to the INCOMING batch, history is never
   * re-processed — until measured drift says the frozen model no longer
@@ -60,10 +60,10 @@ object IncrementalIndex {
     * Round-11 lesson: a `persist()`ed (or `localCheckpoint`ed) frame is
     * not a durable index artifact over a LIVE corpus directory —
     * persist's lineage can silently re-derive from the current directory
-    * (observed under the foreachBatch-cloned session: the new-vector
-    * anti-join saw everything as indexed), and localCheckpoint is
-    * non-fault-tolerant (one executor loss kills serving) with no prompt
-    * release path. Writing the codes and reading them back gives exactly
+    * (a new-vector anti-join against it then sees everything as
+    * indexed), and localCheckpoint is non-fault-tolerant (one executor
+    * loss kills serving) with no prompt release path. Writing the codes
+    * and reading them back gives exactly
     * the production contract the scale note below promises: the index IS
     * a table — immutable listing (a later corpus append cannot leak in),
     * recomputable after executor loss, appendable in place (the no-drift
@@ -192,18 +192,12 @@ object IncrementalIndex {
     * corpus — the caller's ingest contract). No drift → frozen-books
     * encode STAGED then promoted into the index directory (work ∝ batch —
     * the production `INSERT INTO` shape), with an appends-gated compaction
-    * ([[CompactEvery]]). Drift → full deterministic re-fit over `grown`
-    * into a fresh directory, the superseded one deleted only after its
-    * replacement is live. */
+    * ([[CompactEvery]]). Drift → full deterministic re-fit over the
+    * grown corpus into a fresh directory, the superseded one deleted only
+    * after its replacement is live. */
   def append(idx: PqIndex, batch: DataFrame, driftFactor: Double = 1.5,
-      compactEvery: Int = CompactEvery): PqIndex =
-    appendWith(idx, batch, idx.corpus.unionByName(batch), driftFactor, compactEvery)
-
-  /** [[append]] with the grown corpus supplied explicitly — the streaming
-    * refresh path already holds a fresh read of the live table and must
-    * not union a stale file-listing snapshot. */
-  def appendWith(idx: PqIndex, batch: DataFrame, grown: DataFrame,
-      driftFactor: Double = 1.5, compactEvery: Int = CompactEvery): PqIndex = {
+      compactEvery: Int = CompactEvery): PqIndex = {
+    val grown = idx.corpus.unionByName(batch)
     // materialize the incoming batch ONCE (bounded, transient): `batch`
     // may be a lazy anti-join over the LIVE corpus directory, and without
     // this the emptiness check, the drift gate, and the encode would each
@@ -246,7 +240,7 @@ object IncrementalIndex {
     * (same-filesystem moves — no data copy). Names are prefixed with the
     * staging id so a resident file can never be overwritten; if any move
     * fails, the files promoted so far are pulled back out before the
-    * staging cleanup in [[appendWith]]'s catch deletes them with the rest.
+    * staging cleanup in [[append]]'s catch deletes them with the rest.
     */
   private[ops] def promoteStaged(staging: String, dest: String): Unit = {
     val stamp = staging.substring(staging.lastIndexOf('-') + 1)
@@ -317,8 +311,8 @@ object IncrementalIndex {
     // Materialize the erasure targets BEFORE the old snapshot is deleted:
     // if `ids` was derived lazily from idx.codes (the natural way to pick
     // targets), any later evaluation of the retained `corpus` — e.g. the
-    // drift re-fit in a subsequent appendWith — would re-read the deleted
-    // snapshot directory and fail. Mirrors appendWith's batch checkpoint.
+    // drift re-fit in a subsequent append — would re-read the deleted
+    // snapshot directory and fail. Mirrors append's batch checkpoint.
     val gone = ids.select("vec_id").localCheckpoint(true)
     val path = snapshotDir()
     try idx.codes.join(gone, Seq("vec_id"), "left_anti")

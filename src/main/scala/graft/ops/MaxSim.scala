@@ -59,9 +59,8 @@ object MaxSim {
 
   /** The MaxSim serve's STATIC index state: the chunk table and the
     * chunk-level LSH index with the doc key attached (bare ids, the
-    * annLshTopK discipline; persisted — it feeds the candidate join of
-    * every batch). Built ONCE per serving query, the adcServe
-    * index-outside-the-loop discipline. */
+    * annLshTopK discipline; persisted — it feeds the candidate join).
+    * [[maxSimAdcTopK]] reuses its chunk table for the exact re-rank. */
   private[graft] final case class MaxSimIndex(chunks: DataFrame, banded: DataFrame)
 
   private def bucketsOf(v: Column): Seq[Column] =
@@ -78,19 +77,11 @@ object MaxSim {
     MaxSimIndex(chunks, banded)
   }
 
-  /** Release the index's cached state (stream teardown). */
-  private[graft] def releaseMaxSimIndex(ix: MaxSimIndex): Unit = {
-    ix.banded.unpersist(); ()
-  }
-
   /** The MaxSim serving core for an ARBITRARY `(q_doc, qi, q_v)` chunk
-    * frame — one-shot form, shared with the batch registered query. A
-    * serving LOOP holds a [[buildMaxSimIndex]] result and calls
-    * [[maxSimTopKAgainst]] per batch instead
-    * ([[graft.streaming.VectorStreams.maxSimServe]]), so stream/batch
-    * parity is structural. Query buckets derive from the chunk vectors
-    * through the same seeded planes as the stored index, so a query doc
-    * need not BE in the corpus. */
+    * frame — one-shot form: builds the index, then [[maxSimTopKAgainst]].
+    * Query buckets derive from the chunk vectors through the same seeded
+    * planes as the stored index, so a query doc need not BE in the
+    * corpus. */
   private[graft] def maxSimTopKFor(
       spark: SparkSession, dir: String, qChunks: DataFrame, k: Int = 10): DataFrame =
     maxSimTopKAgainst(buildMaxSimIndex(spark, dir), qChunks, k)

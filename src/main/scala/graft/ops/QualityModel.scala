@@ -135,11 +135,9 @@ object QualityModel {
   private[graft] def fitCached(spark: SparkSession, dir: String): Array[Double] =
     lrCache.getOrElseUpdate(dir, fitFrom(Tables(spark, dir, "documents")))
 
-  /** The fitted logit over a `text` column — the SHARED projection of the
-    * batch query and the streaming ingest twin
-    * ([[graft.streaming.DocStreams.qualityFiltered]]): per-row literal
-    * arithmetic carries over to streams unchanged, so batch/stream parity
-    * is structural. */
+  /** The fitted logit over a `text` column — the projection every
+    * quality-model query shares: per-row literal arithmetic, so the
+    * score, sample, eval and calibration queries cannot drift apart. */
   private[graft] def logitCol(w: Array[Double]): Column =
     featureCols.zipWithIndex
       .map { case (c, i) => lit(w(i)) * c }
@@ -550,47 +548,6 @@ object QualityModel {
        |FROM bt JOIN model USING (b)
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
-  }
-
-
-  /** Fit the [[dsirWeights]] bucket model and return it DRIVER-SIDE as
-    * (bucket → log-ratio, default-for-unseen-bucket) — at most
-    * [[DsirBuckets]] entries, the bounded-fit discipline. The default is
-    * the zero-count smoothed ratio, what a bucket absent from the fit
-    * corpus scores. This is the plan-literal form the streaming twin
-    * ([[graft.streaming.DocStreams.dsirScored]]) embeds: serving needs
-    * no model runtime and no join, just a map literal.
-    */
-  def dsirModel(spark: SparkSession, dir: String,
-      targetSource: String = DsirTargetSource): (Map[Long, Double], Double) = {
-    val aB = DsirAlpha * DsirBuckets
-    val docs = Tables(spark, dir, "documents")
-    val bt = docs.select(col("source"),
-        explode(Dedup.tokens(col("text"))).as("tok"))
-      .select(col("source"),
-        (conv(substring(md5(col("tok").cast("binary")), 1, 4), 16, 10)
-          .cast("long") % DsirBuckets).as("b"))
-    val raw = bt.groupBy("b").agg(count(lit(1)).as("rc"))
-    val tgt = bt.filter(col("source") === targetSource)
-      .groupBy("b").agg(count(lit(1)).as("tc"))
-    val tot = raw.agg(sum("rc").as("raw_tot"))
-      .crossJoin(tgt.agg(sum("tc").as("tgt_tot")))
-    val rows = raw.join(tgt, Seq("b"), "left").na.fill(0L, Seq("tc"))
-      .crossJoin(broadcast(tot))
-      .select(col("b"),
-        (log((col("tc") + lit(DsirAlpha)) / (col("tgt_tot") + lit(aB)))
-          - log((col("rc") + lit(DsirAlpha)) / (col("raw_tot") + lit(aB))))
-          .as("lw"),
-        col("tgt_tot"), col("raw_tot"))
-      .collect() // bounded: at most DsirBuckets rows
-    val model = rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val default =
-      if (rows.isEmpty) 0.0
-      else {
-        val (tt, rt) = (rows.head.getLong(2).toDouble, rows.head.getLong(3).toDouble)
-        math.log(DsirAlpha / (tt + aB)) - math.log(DsirAlpha / (rt + aB))
-      }
-    (model, default)
   }
 
   /** Oracle context — the [[Similarity.setOracleContext]] mechanism. */

@@ -552,9 +552,7 @@ object Similarity {
       cent, k, minProbe, alpha)
 
   /** [[adaptiveProbes]] for an ARBITRARY `(q_id, q_v, label)` query frame —
-    * the form the streaming filtered serve
-    * ([[graft.streaming.VectorStreams.filteredAdcServe]]) feeds each
-    * micro-batch through, so stream/batch parity is structural. */
+    * the form [[ivfPqFilteredTopKAgainst]] feeds its query frame through. */
   private[graft] def adaptiveProbesFor(
       assigned: DataFrame, queries: DataFrame, cent: Array[Array[Double]],
       k: Int, minProbe: Int, alpha: Int): DataFrame = {
@@ -1249,9 +1247,9 @@ object Similarity {
       books, k)
   }
 
-  /** The ADC scan+rank tail shared by [[pqAdcTopK]] and the stream-static
-    * serving twin ([[graft.streaming.VectorStreams]]): score an arbitrary
-    * query batch (`q_id`, `q_v`) against an already-CODED corpus. The
+  /** The ADC scan+rank tail shared by [[pqAdcTopK]] and
+    * [[IncrementalIndex.topK]]: score an arbitrary query batch
+    * (`q_id`, `q_v`) against an already-CODED corpus. The
     * query side collapses to (id, LUT) before the broadcast — the full
     * vector never crosses the exchange.
     */
@@ -1507,11 +1505,7 @@ object Similarity {
 
   /** The filtered serve's STATIC index state — fitted models, the
     * persisted cell assignment (which the probe budget's count directory
-    * and the candidate scan both read), and the coded corpus. Built ONCE
-    * per serving query (the [[graft.streaming.VectorStreams.adcServe]]
-    * index-outside-the-loop discipline): a per-micro-batch rebuild would
-    * re-fit and re-assign the whole corpus every batch and leak one
-    * persisted frame per batch. */
+    * and the candidate scan both read), and the coded corpus. */
   private[graft] final case class FilteredIndex(
       cent: Array[Array[Double]], books: Array[Array[Array[Double]]],
       assigned: DataFrame, codes: DataFrame)
@@ -1528,16 +1522,10 @@ object Similarity {
       assignCodes(assigned, books, Seq("vec_id", "cell", "label")))
   }
 
-  /** Release the filtered-serve index's cached state (stream teardown). */
-  private[graft] def releaseFilteredIndex(ix: FilteredIndex): Unit = {
-    ix.assigned.unpersist(); ()
-  }
-
   /** [[ivfPqFilteredTopK]] for an ARBITRARY `(q_id, q_v, label)` query
     * frame — one-shot form: builds the index state and scores (the
     * registered batch query is exactly this under the served-batch
-    * filter). A serving LOOP holds a [[buildFilteredIndex]] result and
-    * calls [[ivfPqFilteredTopKAgainst]] per batch instead. */
+    * filter). */
   private[graft] def ivfPqFilteredTopKFor(
       spark: SparkSession, dir: String, qFrame: DataFrame, k: Int = 10,
       nCentroids: Int = NCentroids, minProbe: Int = NProbe,
@@ -2509,10 +2497,8 @@ object Similarity {
     mmrRerankFor(spark, dir, queries, k, nCand)
   }
 
-  /** [[mmrRerankTopK]]'s core over ANY `(q_id, q_v)` query frame — the
-    * serving surface ([[graft.streaming.VectorStreams.mmrServe]] feeds
-    * micro-batches of query vectors through it against the static
-    * corpus; per-query independence makes stream ≡ batch exact). */
+  /** [[mmrRerankTopK]]'s core over ANY `(q_id, q_v)` query frame. Each
+    * query re-ranks independently of the others in the frame. */
   def mmrRerankFor(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 8, nCand: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1170,20 +1170,10 @@ object TableChecks {
     * 6. Scale shape: corpus scanned once per column into bucket-domain
     * aggregates (≤ 10 rows each); everything after is bounded.
     */
-  /** The monitored-column bucket projections, shared with the streaming
-    * monitor ([[graft.streaming.DriftStreams]]). */
+  /** The monitored-column bucket projections [[psiDrift]] counts over. */
   private[graft] val PsiColumns: Seq[(String, String)] = Seq(
     "value" -> "cast(cast(least(floor(value / 20.0), 9.0) as int) as string)",
     "event_type" -> "event_type")
-
-  /** Per-(column, bucket) counts of an events-shaped frame — the
-    * mergeable state the streaming monitor folds (integer adds). */
-  private[graft] def bucketCounts(ev: DataFrame): DataFrame =
-    PsiColumns.map { case (name, bucket) =>
-      ev.groupBy(expr(bucket).as("bucket"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("col_name", lit(name))
-    }.reduce(_ unionByName _)
 
   /** The PSI rollup over a (col_name, bucket, ce, ca) cell frame. */
   private[graft] def psiOfCells(cells: DataFrame): DataFrame = {
@@ -1272,8 +1262,8 @@ object TableChecks {
     * dropped row per ~1499 — the audit must flag exactly those buckets.
     */
   /** Canonicalized per-bucket (count, checksum) sums of an orders-shaped
-    * frame. Counts AND checksums are both additive, so the bucket state is
-    * MERGEABLE — the streaming integrity monitor folds it incrementally. */
+    * frame. Counts AND checksums are both additive, so bucket states of
+    * disjoint row sets merge by addition. */
   private[graft] def bucketSums(df: DataFrame, n: String, s: String): DataFrame =
     df.select(expr(s"o_orderkey div $ReplicaBucketKeys").as("bucket"),
         concat_ws(":", col("o_orderkey"), col("o_custkey"),
@@ -1285,8 +1275,7 @@ object TableChecks {
       .groupBy("bucket")
       .agg(count(lit(1)).as(n), sum(col("h")).as(s))
 
-  /** The divergent-buckets readout over two bucket-sum frames — shared
-    * verbatim by the batch audit and the streaming integrity monitor. */
+  /** The divergent-buckets readout over two bucket-sum frames. */
   private[graft] def bucketDiffOf(a: DataFrame, b: DataFrame): DataFrame =
     a.join(b, Seq("bucket"), "full_outer")
       .filter(coalesce(col("n_a"), lit(0L)) =!= coalesce(col("n_b"), lit(0L)) ||

@@ -632,16 +632,15 @@ object TextAnalysis {
     // materialize it eagerly and release the tf cache NOW — otherwise
     // repeated ad-hoc calls accumulate persisted tf frames for the
     // session lifetime. Callers that score many batches against one
-    // corpus should hold a [[bm25BuildIndex]] + [[bm25Score]] instead.
+    // corpus should score against [[servedBm25Model]] with [[bm25Score]]
+    // instead.
     val out = bm25Against(tf, queries, k, k1, b).localCheckpoint(true)
     tf.unpersist()
     out
   }
 
   /** BM25 scoring against a PREBUILT term-frequency index — the serving
-    * core under [[bm25TopKFor]] (which builds `tf` per call) and the
-    * streaming [[graft.streaming.TextStreams]] (which persists `tf` once
-    * and re-scores every micro-batch against it). `tf` is the
+    * core under [[bm25TopKFor]], which builds `tf` per call. `tf` is the
     * `(doc_id, tok, tf)` aggregate; dl/df/(N, avgdl) re-derive from it —
     * from a cached index those are bounded re-scans, and at serving time
     * the only per-batch work is the query tokenize + the broadcast
@@ -662,9 +661,9 @@ object TextAnalysis {
     *    query-term leg is one bounded join — no per-pass (N, avgdl)
     *    scalar-combine rebuild.
     *
-    * A serving loop that re-derived these per micro-batch would pay
-    * corpus-scale shuffles per batch for statistics that never change —
-    * [[graft.streaming.TextStreams]] persists both legs and leaves only
+    * A serve that re-derived these per query batch would pay corpus-scale
+    * shuffles per batch for statistics that never change —
+    * [[servedBm25Model]] holds both legs written to disk and leaves only
     * the query tokenize + broadcast candidate join as per-batch work.
     *
     * r18 adjudication note (verdict item 1, "the one-shot serves may have
@@ -715,10 +714,11 @@ object TextAnalysis {
       df.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** Derive the two serving legs from a postings frame — the shared
-    * constructor of the one-shot paths ([[bm25Against]], per call) and
-    * the persisted builders. Same expressions as always (`b·dl/avgdl`,
-    * `ln((N−df+0.5)/(df+0.5)+1)`), just attached at build instead of
-    * re-joined per pass — identical doubles, identical releases. The
+    * constructor of the one-shot path ([[bm25Against]], per call) and
+    * [[bm25PrfTopK]]'s persisted legs. Same expressions as always
+    * (`b·dl/avgdl`, `ln((N−df+0.5)/(df+0.5)+1)`), just attached at build
+    * instead of re-joined per pass — identical doubles, identical
+    * releases. The
     * postings ride the single pinned doc_id partitioning (doc above), so
     * dl, the norms re-attach, and every downstream scoring pass's
     * (q, doc) aggregate run exchange-free and scan-parallel. */
@@ -735,13 +735,6 @@ object TextAnalysis {
       .select(col("tok"), col("df"),
         log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1).as("idf"))
     Bm25Index(tfb, dfi)
-  }
-
-  private[graft] def bm25BuildIndex(docs: DataFrame, b: Double = 0.75): Bm25Index = {
-    val ix = bm25IndexOf(docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")), b)
-    Bm25Index(ix.tfb.persist(), ix.dfi.persist())
   }
 
   /** The lexical model tables a serving node holds NEXT TO the postings
@@ -2009,8 +2002,8 @@ object TextAnalysis {
     * |queries|-bounded rollup. Queries with zero firing docs survive via
     * the left re-attach (null first/last doc).
     */
-  /** Per-doc distinct token stream — shared by the batch query and the
-    * streaming percolator (map-side `array_distinct`, no shuffle). */
+  /** Per-doc distinct token stream — shared by the conjunctive and the
+    * boolean percolator (map-side `array_distinct`, no shuffle). */
   private[graft] def docTokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       explode(array_distinct(Dedup.tokens(col("text")))).as("token"))
@@ -2029,9 +2022,7 @@ object TextAnalysis {
   }
 
   /** The conjunctive match core — (query_id, doc_id) pairs where the doc
-    * holds BOTH query terms. Shared VERBATIM by the batch rollup and the
-    * streaming percolator, so the streamed alert set is definitionally
-    * the batch predicate. */
+    * holds BOTH query terms. */
   private[graft] def firedPairs(docTok: DataFrame, queries: DataFrame): DataFrame = {
     val qterms = queries.select(col("query_id"),
       explode(array(col("term_a"), col("term_b"))).as("token"))

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.Overlap.overlap
 
 /** Append-only incremental maintenance for the INVERTED text index — the
-  * BM25 sibling of [[IncrementalIndex]] (vectors). The serving loops
-  * ([[TextAnalysis.bm25TopKFor]], the streaming scorer) rebuild or cache
-  * the `(doc_id, tok, tf)` postings aggregate per context; at 100 TB the
-  * tokenize-and-count pass over the corpus is the expensive leg, and an
-  * ingest batch should pay it only for ITSELF.
+  * BM25 sibling of [[IncrementalIndex]] (vectors). A one-shot serve
+  * ([[TextAnalysis.bm25TopKFor]]) rebuilds the `(doc_id, tok, tf)`
+  * postings aggregate per call; at 100 TB the tokenize-and-count pass
+  * over the corpus is the expensive leg, and an ingest batch should pay
+  * it only for ITSELF.
   *
   * The key contrast with the PQ index, worth stating because it changes
   * the maintenance contract: PQ serving depends on a FROZEN fitted model

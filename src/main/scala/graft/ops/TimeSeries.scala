@@ -144,12 +144,8 @@ object TimeSeries {
     * exact twin is spec-pinned in TimeSeriesSpec.
     */
   /** Per-(type, day) HLL user sketches from a raw event frame — the ONE
-    * corpus-touching aggregate, shared by the batch query and the
-    * streaming MV maintainer ([[graft.streaming.SketchStreams]]): a
-    * micro-batch's sketches merge into the stored daily-sketch view with
-    * `hll_union_agg`, which is register-wise max — associative and
-    * commutative, so batch/stream estimates agree EXACTLY, not just in
-    * envelope. */
+    * corpus-touching aggregate; the rolling windows merge these with
+    * `hll_union_agg` (register-wise max). */
   private[graft] def dailySketches(ev: DataFrame): DataFrame =
     ev.groupBy(col("event_type"), to_date(col("ts")).as("aday"))
       .agg(hll_sketch_agg(col("user_id")).as("sk"))
@@ -462,8 +458,7 @@ object TimeSeries {
     *
     * The corpus is touched ONCE by the (type, day, segment) `bit_or`
     * aggregate (map-side combinable: OR is associative/commutative/
-    * idempotent, the same algebra that makes the HLL twin merge — so this
-    * view also maintains incrementally under streaming ingest). The
+    * idempotent, the same algebra that makes the HLL twin merge). The
     * rolling union then ORs 7 words per segment and popcounts —
     * calendar × ⌈|users|/32⌉ work, never raw events. The dense-ID
     * assumption is the honest bound (segment count ∝ max(user_id)/32,
@@ -474,11 +469,7 @@ object TimeSeries {
     * bit-exact equality to an independent formulation IS the claim.
     */
   /** Per-(type, day, segment) bitmap words from a raw event frame — the
-    * ONE corpus-touching aggregate, shared by the batch query and the
-    * streaming MV maintainer ([[graft.streaming.SketchStreams]]): OR is
-    * associative, commutative, and IDEMPOTENT, so micro-batch words merge
-    * into the stored view with `bit_or` and batch/stream counts agree
-    * exactly — replayed batches are absorbed, not double-counted. */
+    * ONE corpus-touching aggregate; the rolling union ORs these. */
   private[graft] def dailyBitmapWords(ev: DataFrame): DataFrame =
     ev.select(col("event_type"), to_date(col("ts")).as("aday"),
         expr("user_id DIV 32").as("seg"),
@@ -664,9 +655,8 @@ object TimeSeries {
     * seasonality-cancellation property). */
   val CusumBaselineDays = 7
 
-  /** The (type, day) count aggregate both the batch query and the
-    * streaming monitor fold over — counts are mergeable by addition, so
-    * a live monitor can maintain this frame incrementally. */
+  /** The (type, day) count aggregate [[forecastBacktest]] and
+    * [[cusumChangepoints]] read. */
   private[graft] def dailyTypeCounts(ev: DataFrame): DataFrame =
     ev.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
@@ -742,10 +732,8 @@ object TimeSeries {
         date_add(min(col("d0")), CusumBaselineDays).as("cut"))
   }
 
-  /** The CUSUM decision rule over a daily frame against a (frozen)
-    * baseline — shared verbatim by [[cusumChangepoints]] and the
-    * streaming monitor, so the streamed readout is DEFINITIONALLY the
-    * batch metric. */
+  /** The CUSUM decision rule of [[cusumChangepoints]] over a daily frame
+    * against a (frozen) baseline. */
   private[graft] def cusumAlarms(daily: DataFrame, base: DataFrame): DataFrame = {
     val d = CusumSlackDen
     val w = Window.partitionBy("event_type").orderBy("day")
