@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -11,30 +11,16 @@ import graft.functions.{CosineSimilarity, DotProduct, HilbertIndex, HtmlUnescape
 
 /** SQL surface for the engine's custom Catalyst expressions, so
   * `spark.sql("SELECT html_unescape(title) ...")` works alongside the
-  * Column API.
-  *
-  * Two registration paths, same function list:
-  *
-  *  - `spark.sql.extensions=graft.GraftExtensions` (or
-  *    `builder.withExtensions(new GraftExtensions)`) — the standard
-  *    SparkSessionExtensions plugin hook, applied at session build;
-  *  - [[GraftFunctions.register]] — post-hoc injection into a live
-  *    session's function registry (useful in shells and tests where the
-  *    session already exists).
+  * Column API. Installed as the standard SparkSessionExtensions plugin:
+  * `spark.sql.extensions=graft.GraftExtensions` (or
+  * `builder.withExtensions(new GraftExtensions)`), applied at session
+  * build.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (ident, info, builder) =>
       ext.injectFunction((ident, info, builder))
     }
-    // optimizer rules (each opt-in via its own session conf): naive range
-    // joins → bucketized equi-joins; exact COUNT(DISTINCT) → HLL++ sketch;
-    // skewed aggregations → salted two-phase (key, salt) aggregates.
-    // For a live session (tests, shells) use
-    // `spark.experimental.extraOptimizations :+= <rule>`.
-    ext.injectOptimizerRule(_ => graft.plans.BucketedRangeJoin)
-    ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.SaltedAggRewrite)
     // whole-operator extension: the native as-of merge join (custom
     // LogicalPlan + SparkStrategy + SparkPlan). For a live session use
     // `GraftPlanBridge.addStrategy` (the Column API does it implicitly).
@@ -115,10 +101,4 @@ object GraftFunctions {
         case _ => throw new IllegalArgumentException(
           "top_k_by_score(score, token, tf, df, k) requires four columns and an integer literal")
       }))
-
-  /** Register every custom function into an existing session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }

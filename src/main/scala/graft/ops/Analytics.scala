@@ -144,20 +144,6 @@ object Analytics {
       |GROUP BY event_type, quartile
       |ORDER BY event_type, quartile""".stripMargin
 
-  /** The 100-TB quartile path [[valueQuartiles]]'s scale note promises:
-    * bucket boundaries from a one-pass `percentile_approx` sketch (fixed
-    * memory per group, mergeable across partitions), broadcast back, and
-    * bucket membership decided by three comparisons — two hash aggregates
-    * and zero sorts, where the exact `ntile` sorts ~1/|types| of the table
-    * on a single task per event type.
-    *
-    * Semantics delta vs the exact form, by construction: boundaries carry
-    * the sketch's ≤ n/accuracy rank error, and ties AT a boundary all land
-    * in the lower bucket (ntile splits equal values to keep buckets
-    * exactly even). Both effects are bounded and spec-pinned
-    * (AnalyticsSpec); sketch internals are engine-specific → rows-only
-    * oracle.
-    */
   /** The ranking-function family with REAL ties: rank, dense_rank,
     * percent_rank, cume_dist over the integer value bucket within
     * (event_type, day). Ordering by the (tied) bucket rather than a
@@ -266,6 +252,20 @@ object Analytics {
        |FROM seg
        |ORDER BY user_id, seg_no""".stripMargin
 
+  /** The 100-TB quartile path [[valueQuartiles]]'s scale note promises:
+    * bucket boundaries from a one-pass `percentile_approx` sketch (fixed
+    * memory per group, mergeable across partitions), broadcast back, and
+    * bucket membership decided by three comparisons — two hash aggregates
+    * and zero sorts, where the exact `ntile` sorts ~1/|types| of the table
+    * on a single task per event type.
+    *
+    * Semantics delta vs the exact form, by construction: boundaries carry
+    * the sketch's ≤ n/accuracy rank error, and ties AT a boundary all land
+    * in the lower bucket (ntile splits equal values to keep buckets
+    * exactly even). Both effects are bounded and spec-pinned
+    * (AnalyticsSpec); sketch internals are engine-specific → rows-only
+    * oracle.
+    */
   def valueQuartilesApprox(spark: SparkSession, dir: String,
       accuracy: Int = 10000): DataFrame = {
     val ev = Tables(spark, dir, "events")
@@ -474,29 +474,6 @@ object Analytics {
       |WHERE cum * 2 >= t
       |ORDER BY rk LIMIT 1""".stripMargin
 
-  /** Skyline (Pareto frontier) of orders under "cheaper is better, newer
-    * is better": the non-dominated set — no other order is both
-    * cheaper-or-equal AND newer-or-equal with one strict. The classic
-    * multi-criteria operator (Börzsönyi et al., ICDE'01) vanilla SQL can
-    * only state as a quadratic NOT EXISTS.
-    *
-    * Dominance collapse: within one day only the day's cheapest order can
-    * survive (any same-day cheaper row dominates on the strict price), so
-    * phase 1 reduces the corpus to one (day, min_price) point per calendar
-    * day — a hash aggregate, after which the frontier test runs on a
-    * CALENDAR-BOUNDED frame (the [[TimeSeries]] discipline): point r
-    * survives iff its price undercuts every strictly-newer day's minimum,
-    * i.e. `price < min(price) OVER (ORDER BY day DESC … 1 PRECEDING)`.
-    * The skyline days then re-attach to the corpus by (day, price)
-    * equi-join (broadcast: |skyline| ≤ |days|) to report multiplicity.
-    *
-    * General-dimension note (in-code contract): when NEITHER dimension has
-    * a bounded domain, phase 1 becomes grid-cell local skylines (bucket by
-    * one dim, window within cell, prefix-min across the O(cells) summary —
-    * the [[Sampling.sizeBalancedShards]] two-phase shape). The calendar
-    * dimension here makes that machinery unnecessary: the post-aggregate
-    * frame IS the bounded summary.
-    */
   /** SLA breach threshold for [[fulfillmentSla]], in days. */
   val SlaDays = 30
 
@@ -548,23 +525,39 @@ object Analytics {
        |FROM per_order GROUP BY 1
        |ORDER BY o_orderpriority""".stripMargin
 
-  /** The (day, min price) collapse the frontier is taken over. */
-  private[graft] def dailyMinPrice(orders: DataFrame): DataFrame =
-    orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(min(col("o_totalprice")).as("price"))
-
-  /** The frontier filter over a (day, price) frame. */
-  private[graft] def frontierOf(pts: DataFrame): DataFrame = {
-    val wNewer = Window.orderBy(col("day").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    pts.withColumn("best_newer", min(col("price")).over(wNewer))
-      .filter(col("best_newer").isNull || col("price") < col("best_newer"))
-      .select("day", "price")
-  }
-
+  /** Skyline (Pareto frontier) of orders under "cheaper is better, newer
+    * is better": the non-dominated set — no other order is both
+    * cheaper-or-equal AND newer-or-equal with one strict. The classic
+    * multi-criteria operator (Börzsönyi et al., ICDE'01) vanilla SQL can
+    * only state as a quadratic NOT EXISTS.
+    *
+    * Dominance collapse: within one day only the day's cheapest order can
+    * survive (any same-day cheaper row dominates on the strict price), so
+    * phase 1 reduces the corpus to one (day, min_price) point per calendar
+    * day — a hash aggregate, after which the frontier test runs on a
+    * CALENDAR-BOUNDED frame (the [[TimeSeries]] discipline): point r
+    * survives iff its price undercuts every strictly-newer day's minimum,
+    * i.e. `price < min(price) OVER (ORDER BY day DESC … 1 PRECEDING)`.
+    * The skyline days then re-attach to the corpus by (day, price)
+    * equi-join (broadcast: |skyline| ≤ |days|) to report multiplicity.
+    *
+    * General-dimension note (in-code contract): when NEITHER dimension has
+    * a bounded domain, phase 1 becomes grid-cell local skylines (bucket by
+    * one dim, window within cell, prefix-min across the O(cells) summary —
+    * the [[Sampling.sizeBalancedShards]] two-phase shape). The calendar
+    * dimension here makes that machinery unnecessary: the post-aggregate
+    * frame IS the bounded summary.
+    */
   def skylineOrders(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables(spark, dir, "orders")
-    val sky = frontierOf(dailyMinPrice(orders))
+    // the frontier filter over the (day, min price) collapse
+    val wNewer = Window.orderBy(col("day").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val sky = orders.groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg(min(col("o_totalprice")).as("price"))
+      .withColumn("best_newer", min(col("price")).over(wNewer))
+      .filter(col("best_newer").isNull || col("price") < col("best_newer"))
+      .select("day", "price")
     orders
       .join(broadcast(sky),
         to_date(col("o_orderdate")) === col("day") &&

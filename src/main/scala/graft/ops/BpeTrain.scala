@@ -268,15 +268,6 @@ object BpeTrain {
     s"WITH ${(v0 +: stages).mkString(",\n")}\nSELECT * FROM (\n$union\n) ORDER BY rank"
   }
 
-  /** Literal-free generated oracle: stage k recomputes pair counts from
-    * the stage-k vocabulary, takes the identical (count desc, left, right)
-    * argmax, and applies the merge with the bracket-encoded replace.
-    * `chr(30)`/`chr(31)` are the open/close wrappers; replacing
-    * `⟨a⟩⟨b⟩` → `⟨ab⟩` can never match inside a symbol or consume a
-    * neighbour's bracket, so DuckDB's left-to-right `replace` is exactly
-    * the fold in [[mergePair]]. CTEs are MATERIALIZED — inlined CTEs would
-    * expand the v-chain exponentially.
-    */
   /** The shared CTE chain: v0 = char-split word counts, then per merge k a
     * pair-count argmax (b_k) and the merged vocabulary (v_{k+1}). The
     * final v_N is the learned SEGMENTATION of every distinct word — which
@@ -312,6 +303,15 @@ object BpeTrain {
     (v0 +: stages).mkString(",\n")
   }
 
+  /** Literal-free generated oracle: stage k recomputes pair counts from
+    * the stage-k vocabulary, takes the identical (count desc, left, right)
+    * argmax, and applies the merge with the bracket-encoded replace.
+    * `chr(30)`/`chr(31)` are the open/close wrappers; replacing
+    * `⟨a⟩⟨b⟩` → `⟨ab⟩` can never match inside a symbol or consume a
+    * neighbour's bracket, so DuckDB's left-to-right `replace` is exactly
+    * the fold in `mergePair`. CTEs are MATERIALIZED — inlined CTEs would
+    * expand the v-chain exponentially.
+    */
   val bpeMergesSql: String = {
     val union = (0 until DefaultMerges).map { k =>
       s"SELECT ${k + 1} AS rank, a AS left_sym, b AS right_sym, cnt::BIGINT AS pair_n FROM b$k"

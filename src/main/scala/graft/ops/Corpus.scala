@@ -289,37 +289,6 @@ object Corpus {
        |FROM spans ORDER BY doc_id""".stripMargin
   }
 
-  /** Single-pass pipeline observability: run the quality-filter funnel as
-    * ONE job — the action that consumes the kept documents — and collect
-    * the funnel counters (total / kept / per-reason drops) as a SIDE
-    * EFFECT of that same pass via `Dataset.observe` (a CollectMetrics
-    * node: accumulator-backed aggregates evaluated while rows stream
-    * through). The alternative every naive pipeline ships — one `.count()`
-    * per stage plus a reason histogram query — re-scans a 100-TB corpus
-    * once per metric; observe() prices the whole dashboard at zero extra
-    * scans.
-    *
-    * Returns (kept row count, metrics). The metrics map carries exactly
-    * the counters the article pipeline's report needs; parity with
-    * independently-computed aggregates is spec-pinned.
-    */
-  def qualityFunnelObserved(docs: DataFrame): (Long, Map[String, Long]) = {
-    val obs = new org.apache.spark.sql.Observation()
-    def reasonCount(r: String) =
-      sum(when(col("reason") === r, 1L).otherwise(0L)).as(s"n_$r")
-    val observed = qualityFilterOf(docs).observe(
-      obs,
-      count(lit(1)).as("n_total"),
-      sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-      reasonCount("too_short"),
-      reasonCount("too_long"),
-      reasonCount("bad_word_length"),
-      reasonCount("low_stopword"),
-      reasonCount("repetitive"))
-    val kept = observed.filter(col("keep")).count()
-    (kept, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }.toMap)
-  }
-
   /** Tokens per boilerplate segment and the doc-frequency threshold above
     * which a segment counts as boilerplate. */
   val BoilerplateChunkTokens = 4

@@ -245,8 +245,8 @@ object Dedup {
     * Produces the same result set as [[ngramJaccardPairs]] whenever no
     * true pair sits in the LSH miss zone; the testdata's planted dups are
     * at j ≈ 0.99 where miss probability is ≈ 0.
-    */
-  /** Execution shape (the 100-TB design, and why it is NOT the array-column
+    *
+    * Execution shape (the 100-TB design, and why it is NOT the array-column
     * one-liner):
     *
     *  1. band hashes = ONE map-side pass per document

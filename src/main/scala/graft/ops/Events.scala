@@ -895,21 +895,6 @@ object Events {
       |ORDER BY n3 DESC, t.a, t.b, t.c
       |LIMIT 20""".stripMargin
 
-  /** Grouped least-squares regression — value against hour-of-day per
-    * event type (the "is there a time-of-day effect" screen): slope and
-    * intercept from the closed-form normal equations, computed EXACTLY.
-    * The built-in `regr_slope` accumulates floating moments in
-    * partition order (not reproducible across engines, or across two
-    * runs at different parallelism); here every aggregate moment is an
-    * integer or exact DECIMAL (Sx, Sxx integer; Sy, Sxy decimal), and
-    * the slope/intercept are fixed scalar expression trees over those
-    * exact moments — IEEE ops on identical inputs in identical order are
-    * bit-identical everywhere, because reassociation only ever enters
-    * through SUM ordering, which the exact moments eliminate.
-    *
-    * Scale shape: one hash aggregate (map-side partials), output one row
-    * per group. The regression itself costs nothing beyond the sums.
-    */
   /** Debounce window: events of the same (user, type) closer than this
     * are one burst; only the burst's first event survives. */
   val DebounceMicros = 60L * 1000000L
@@ -979,9 +964,7 @@ object Events {
     * volume, breadth, recency span, intensity, monetary aggregates)
     * computed in ONE keyed aggregate pass, not one job per feature. The
     * two exact distinct-counts ride the same aggregate via Expand (the
-    * [[graft.ops.TableChecks]] profile discipline; under the
-    * [[graft.plans.ApproxDistinctRewrite]] conf they become fixed-memory
-    * sketches when approximate features are acceptable). Intensity is
+    * [[graft.ops.TableChecks]] profile discipline). Intensity is
     * integer-exact (×1000 fixed point); money stays DECIMAL until the
     * final rounded cast.
     *
@@ -1015,6 +998,21 @@ object Events {
       |FROM events GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
+  /** Grouped least-squares regression — value against hour-of-day per
+    * event type (the "is there a time-of-day effect" screen): slope and
+    * intercept from the closed-form normal equations, computed EXACTLY.
+    * The built-in `regr_slope` accumulates floating moments in
+    * partition order (not reproducible across engines, or across two
+    * runs at different parallelism); here every aggregate moment is an
+    * integer or exact DECIMAL (Sx, Sxx integer; Sy, Sxy decimal), and
+    * the slope/intercept are fixed scalar expression trees over those
+    * exact moments — IEEE ops on identical inputs in identical order are
+    * bit-identical everywhere, because reassociation only ever enters
+    * through SUM ordering, which the exact moments eliminate.
+    *
+    * Scale shape: one hash aggregate (map-side partials), output one row
+    * per group. The regression itself costs nothing beyond the sums.
+    */
   def hourValueRegression(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir, "events")
       .select(col("event_type"), hour(col("ts")).cast("long").as("x"),

@@ -52,15 +52,9 @@ object Experiment {
           .between("0", "7"), "control").otherwise("treatment"))
   }
 
-  def abCupedLift(spark: SparkSession, dir: String): DataFrame =
-    abCupedLiftFrom(Tables(spark, dir, "events"))
-
-  /** [[abCupedLift]] over any events-shaped frame. */
-  def abCupedLiftFrom(ev: DataFrame): DataFrame =
-    readoutFrom(perUser(ev))
-
-  /** The 2-row CUPED readout from a per-user (arm, x, y) frame. */
-  private[graft] def readoutFrom(pu: DataFrame): DataFrame = {
+  /** The 2-row CUPED readout from the per-user (arm, x, y) frame. */
+  def abCupedLift(spark: SparkSession, dir: String): DataFrame = {
+    val pu = perUser(Tables(spark, dir, "events"))
     val pooled = pu.agg(
       count(lit(1)).as("n_all"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -389,26 +383,6 @@ object Experiment {
           .stripMargin), 6).as("z"))
   }
 
-  /** Scale twin of [[abRankTest]] — the documented two-phase bucketed
-    * prefix sum replacing the anchor's single unpartitioned cumulative
-    * window over distinct metric values (the [[Sampling.sizeBalancedShards]]
-    * convention, where the construction and its provable equality to the
-    * global cumsum are spelled out). For a continuous metric the
-    * distinct-value table approaches the user count, so here:
-    *  1. the value domain buckets by `cents div B` (decimal(…,2) cents are
-    *     exact integers; truncating div is monotonic for the non-negative
-    *     revenue metric), B sized from the value SPAN so the bucket count
-    *     is bounded by cluster parallelism ([[Sampling.shardBucketWidth]]);
-    *  2. per-bucket tie totals → cumulative offsets over O(parallelism)
-    *     rows — the ONLY unpartitioned window — broadcast back;
-    *  3. within-bucket running sums (window PARTITIONED by bucket) + the
-    *     bucket offset give each distinct value its exact doubled rank;
-    *  4. the rank join back to users is a plain shuffle hash join — the
-    *     anchor's rank broadcast would not hold when |ranks| ≈ |users|.
-    * The distinct-value table persists because the span aggregate and the
-    * rank pipeline both consume it. Oracle: [[abRankTestSql]] verbatim —
-    * the twin is exact, not approximate.
-    */
   /** FLOOR-division bucket key over the `cents` column. SQL `div`
     * truncates toward zero, so with any NEGATIVE metric value (refunds)
     * two adjacent value ranges around zero would collapse into bucket 0
@@ -420,6 +394,26 @@ object Experiment {
     expr(s"(cents div $width) - (CASE WHEN cents < 0 AND cents % $width != 0 " +
       "THEN 1 ELSE 0 END)")
 
+  /** Scale twin of [[abRankTest]] — the documented two-phase bucketed
+    * prefix sum replacing the anchor's single unpartitioned cumulative
+    * window over distinct metric values (the [[Sampling.sizeBalancedShards]]
+    * convention, where the construction and its provable equality to the
+    * global cumsum are spelled out). For a continuous metric the
+    * distinct-value table approaches the user count, so here:
+    *  1. the value domain buckets by `cents div B` (decimal(…,2) cents are
+    *     exact integers; truncating div is monotonic for the non-negative
+    *     revenue metric), B sized from the value SPAN so the bucket count
+    *     is bounded by cluster parallelism (`Sampling.shardBucketWidth`);
+    *  2. per-bucket tie totals → cumulative offsets over O(parallelism)
+    *     rows — the ONLY unpartitioned window — broadcast back;
+    *  3. within-bucket running sums (window PARTITIONED by bucket) + the
+    *     bucket offset give each distinct value its exact doubled rank;
+    *  4. the rank join back to users is a plain shuffle hash join — the
+    *     anchor's rank broadcast would not hold when |ranks| ≈ |users|.
+    * The distinct-value table persists because the span aggregate and the
+    * rank pipeline both consume it. Oracle: [[abRankTestSql]] verbatim —
+    * the twin is exact, not approximate.
+    */
   def abRankTestBucketed(spark: SparkSession, dir: String,
       bucket: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -54,20 +54,22 @@ object MaxSim {
     val qChunks = e.filter(expr(s"vec_id div $MaxSimFan") <= queryMaxDoc)
       .select(expr(s"vec_id div $MaxSimFan").as("q_doc"),
         (col("vec_id") % MaxSimFan).as("qi"), col("v").as("q_v"))
-    maxSimTopKFor(spark, dir, qChunks, k)
+    val ix = buildMaxSimIndex(spark, dir)
+    exactTail(candidatesOf(ix, qChunks), qChunks,
+      ix.chunks.select(col("doc").as("d_doc"), col("v").as("d_v")), k)
   }
 
   /** The MaxSim serve's STATIC index state: the chunk table and the
     * chunk-level LSH index with the doc key attached (bare ids, the
     * annLshTopK discipline; persisted — it feeds the candidate join).
     * [[maxSimAdcTopK]] reuses its chunk table for the exact re-rank. */
-  private[graft] final case class MaxSimIndex(chunks: DataFrame, banded: DataFrame)
+  private final case class MaxSimIndex(chunks: DataFrame, banded: DataFrame)
 
   private def bucketsOf(v: Column): Seq[Column] =
     (0 until Similarity.LshTables)
       .map(t => Similarity.lshBucket(v, Similarity.LshBits, Similarity.LshDims, t))
 
-  private[graft] def buildMaxSimIndex(spark: SparkSession, dir: String): MaxSimIndex = {
+  private def buildMaxSimIndex(spark: SparkSession, dir: String): MaxSimIndex = {
     val e = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val chunks = e.select(expr(s"vec_id div $MaxSimFan").as("doc"), col("vec_id"), col("v"))
@@ -76,15 +78,6 @@ object MaxSim {
       .persist()
     MaxSimIndex(chunks, banded)
   }
-
-  /** The MaxSim serving core for an ARBITRARY `(q_doc, qi, q_v)` chunk
-    * frame — one-shot form: builds the index, then [[maxSimTopKAgainst]].
-    * Query buckets derive from the chunk vectors through the same seeded
-    * planes as the stored index, so a query doc need not BE in the
-    * corpus. */
-  private[graft] def maxSimTopKFor(
-      spark: SparkSession, dir: String, qChunks: DataFrame, k: Int = 10): DataFrame =
-    maxSimTopKAgainst(buildMaxSimIndex(spark, dir), qChunks, k)
 
   /** Candidate DOC pairs for a query-chunk frame: any query chunk
     * colliding with any corpus chunk in the banded index, aggregated to
@@ -101,7 +94,7 @@ object MaxSim {
   }
 
   /** The EXACT late-interaction scoring tail over a given candidate pair
-    * set — shared verbatim by the one-pass serve ([[maxSimTopKAgainst]],
+    * set — shared verbatim by the one-pass serve ([[maxSimTopK]],
     * LSH candidates) and the quantized cascade ([[maxSimAdcTopK]], ADC
     * shortlist), so the re-rank arithmetic can never drift between them:
     * per (pair, query-chunk) the ORDER-FREE max over the candidate's
@@ -132,12 +125,6 @@ object MaxSim {
       .select(col("q_doc"), col("d_doc"), col("rank"), col("maxsim"))
       .orderBy("q_doc", "rank")
   }
-
-  /** The scoring core over an already-built [[MaxSimIndex]]. */
-  private[graft] def maxSimTopKAgainst(
-      ix: MaxSimIndex, qChunks: DataFrame, k: Int = 10): DataFrame =
-    exactTail(candidatesOf(ix, qChunks), qChunks,
-      ix.chunks.select(col("doc").as("d_doc"), col("v").as("d_v")), k)
 
   /** Shortlist size of the quantized cascade's ADC tier (PLAID re-ranks
     * generously — the exact tail costs |batch|·shortlist·fan² cosines, so

@@ -157,9 +157,6 @@ object QualityModel {
       .orderBy("doc_id")
   }
 
-  /** Generated-literal oracle: features re-derived exactly (the
-    * `quality_score` oracle's token arithmetic), logit re-stated as the
-    * same left-associative chain over the fitted literals. */
   /** The fitted logit as DuckDB SQL over the tokenized column `t` — ONE
     * definition feeding BOTH generated oracles; the exactness contract
     * requires them to state the identical left-associative chain, so the
@@ -173,6 +170,9 @@ object QualityModel {
     terms.mkString(" + ") + s" + ${w(4)}"
   }
 
+  /** Generated-literal oracle: features re-derived exactly (the
+    * `quality_score` oracle's token arithmetic), logit re-stated as the
+    * same left-associative chain over the fitted literals. */
   private[ops] def qualityLrScoreSql(w: Array[Double]): String = {
     val logit = logitSql(w)
     s"""SELECT doc_id, round(logit, 6) AS lr_logit, logit > 0 AS keep

@@ -49,27 +49,6 @@ object Sampling {
       |GROUP BY 1, 2
       |ORDER BY lang, split""".stripMargin
 
-  /** Seeded stratified sample: per-language fractions via `sampleBy`
-    * (Bernoulli per row, deterministic for a fixed seed and partitioning).
-    * Engine-specific RNG → no value oracle; the spec pins determinism and
-    * per-stratum bounds. The REGISTERED stratified sample is
-    * [[stratifiedSampleHash]], whose membership is a pure function of the
-    * key and therefore oracle-checkable — the property [[withSplit]]
-    * argues for anyway (re-runs and other engines must agree on what was
-    * held out). This RNG variant stays as the library surface for the
-    * case where the key itself must not bias selection.
-    */
-  def stratifiedSample(
-      spark: SparkSession,
-      dir: String,
-      fractions: Map[String, Double] = Map(
-        "en" -> 0.5, "de" -> 0.5, "es" -> 0.5, "fr" -> 0.5, "zh" -> 0.5),
-      seed: Long = 42L): DataFrame =
-    Tables(spark, dir, "documents")
-      .stat.sampleBy("lang", fractions, seed)
-      .select("doc_id", "lang")
-      .orderBy("doc_id")
-
   private val HashFractions: Seq[(String, Double)] = Seq(
     "en" -> 0.5, "de" -> 0.5, "es" -> 0.25, "fr" -> 0.25, "zh" -> 0.75)
 

@@ -208,6 +208,11 @@ object Similarity {
         lit(i).as("cell"))
     }
 
+  /** Default `ev` CTE body: the raw embeddings. The rotated-space chain
+    * ([[opqIvfPqTopKSql]]) substitutes a rotated projection with the same
+    * (vec_id, v) shape. */
+  private val RawEvSql = "  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+
   /** The `ev` + `cent` + `scored` + `cells` CTE prefix shared by the two
     * generated quantizer oracles: every vector's cell under the FITTED
     * centroids, embedded as DOUBLE[] literals (Java shortest-repr
@@ -216,11 +221,6 @@ object Similarity {
     * the identical literal. `list_dot_product` accumulates left-to-right
     * exactly like the codegen'd [[graft.functions.DotProduct]] loop.
     */
-  /** Default `ev` CTE body: the raw embeddings. The rotated-space chain
-    * ([[opqIvfPqTopKSql]]) substitutes a rotated projection with the same
-    * (vec_id, v) shape. */
-  private val RawEvSql = "  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
-
   private[ops] def cellsSqlCtes(cent: Array[Array[Double]], evSql: String = RawEvSql): String = {
     val rows = cent.zipWithIndex.map { case (c, i) =>
       val halfNormSq = c.map(x => x * x).sum / 2.0
@@ -552,7 +552,7 @@ object Similarity {
       cent, k, minProbe, alpha)
 
   /** [[adaptiveProbes]] for an ARBITRARY `(q_id, q_v, label)` query frame —
-    * the form [[ivfPqFilteredTopKAgainst]] feeds its query frame through. */
+    * the form [[ivfPqFilteredTopK]] feeds its query frame through. */
   private[graft] def adaptiveProbesFor(
       assigned: DataFrame, queries: DataFrame, cent: Array[Array[Double]],
       k: Int, minProbe: Int, alpha: Int): DataFrame = {
@@ -709,20 +709,6 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  /** EXACT DuckDB oracle for [[annLshTopK]], generated from the SAME seeded
-    * plane generator the query plans with: the 12×5 hyperplanes are emitted
-    * as DOUBLE[] literals (Java shortest-repr `toString` round-trips to the
-    * identical bits through DuckDB's correctly-rounded parser), each sign
-    * bit is `list_dot_product(v, plane) >= 0`, and DuckDB's
-    * `list_dot_product` accumulates left-to-right exactly like the
-    * codegen'd [[graft.functions.DotProduct]] loop (verified with a
-    * catastrophic-cancellation probe: `[1e16, 1, -1e16]·[1,1,1]` returns 0,
-    * the left-to-right result), so every bucket id — and therefore the
-    * candidate set, the exact-cosine ranking, and the top-k — is
-    * reproduced bit-exactly. This retires the recall-floor-only check:
-    * LSH internals ARE cross-engine derivable when the projection
-    * arithmetic is pinned.
-    */
   /** The `ev` + `banded` CTE prefix shared by the generated LSH oracles:
     * every vector's 12 bucket ids, computed from the embedded plane
     * literals. */
@@ -861,9 +847,6 @@ object Similarity {
       when(element_at(v, off + j + 1) >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
     }.reduce[Column](_.bitwiseOR(_))
 
-  /** The packed binary code table: `(vec_id, w0, w1)` — 64 dims → two
-    * 32-bit sign words, 16 bytes of scanned payload per vector vs 512 for
-    * raw doubles (FAISS `IndexBinaryFlat`'s storage shape). */
   /** Pinned code-table partitioning (r18; the lexical
     * [[TextAnalysis]].postingsParallelism rationale): quantized code
     * columns are EXPENSIVE projections (per-subspace argmins / packed
@@ -881,6 +864,9 @@ object Similarity {
     math.max(df.sparkSession.sparkContext.defaultParallelism,
       df.sparkSession.sessionState.conf.numShufflePartitions)
 
+  /** The packed binary code table: `(vec_id, w0, w1)` — 64 dims → two
+    * 32-bit sign words, 16 bytes of scanned payload per vector vs 512 for
+    * raw doubles (FAISS `IndexBinaryFlat`'s storage shape). */
   private def bqCodes(e: DataFrame, dims: Int = LshDims): DataFrame =
     e.select(col("vec_id"),
       signWord(col("v"), 0, dims / 2).as("w0"),
@@ -1497,51 +1483,19 @@ object Similarity {
       m: Int = PqM, ks: Int = PqKs, alpha: Int = FilteredAlpha): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
-    ivfPqFilteredTopKFor(spark, dir,
-      e.filter(col("vec_id") <= TextAnalysis.ServeBatchMaxId)
-        .select(col("vec_id").as("q_id"), col("v").as("q_v"), col("label")),
-      k, nCentroids, minProbe, m, ks, alpha)
-  }
-
-  /** The filtered serve's STATIC index state — fitted models, the
-    * persisted cell assignment (which the probe budget's count directory
-    * and the candidate scan both read), and the coded corpus. */
-  private[graft] final case class FilteredIndex(
-      cent: Array[Array[Double]], books: Array[Array[Array[Double]]],
-      assigned: DataFrame, codes: DataFrame)
-
-  private[graft] def buildFilteredIndex(
-      spark: SparkSession, dir: String, nCentroids: Int = NCentroids,
-      m: Int = PqM, ks: Int = PqKs): FilteredIndex = {
-    val e = Tables(spark, dir, "embeddings")
+    val qFrame = e.filter(col("vec_id") <= TextAnalysis.ServeBatchMaxId)
+      .select(col("vec_id").as("q_id"), col("v").as("q_v"), col("label"))
+    // the index state: fitted models, the persisted cell assignment (which
+    // the probe budget's count directory and the candidate scan both
+    // read), and the coded corpus
+    val corpus = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
     val cent = fitCentroids(spark, dir, nCentroids)
     val books = fitPq(spark, dir, m, ks)
-    val assigned = assignCells(e, cent).persist()
-    FilteredIndex(cent, books, assigned,
-      assignCodes(assigned, books, Seq("vec_id", "cell", "label")))
-  }
-
-  /** [[ivfPqFilteredTopK]] for an ARBITRARY `(q_id, q_v, label)` query
-    * frame — one-shot form: builds the index state and scores (the
-    * registered batch query is exactly this under the served-batch
-    * filter). */
-  private[graft] def ivfPqFilteredTopKFor(
-      spark: SparkSession, dir: String, qFrame: DataFrame, k: Int = 10,
-      nCentroids: Int = NCentroids, minProbe: Int = NProbe,
-      m: Int = PqM, ks: Int = PqKs, alpha: Int = FilteredAlpha): DataFrame =
-    ivfPqFilteredTopKAgainst(
-      buildFilteredIndex(spark, dir, nCentroids, m, ks), qFrame, k, minProbe, alpha)
-
-  /** The scoring core over an already-built [[FilteredIndex]]. */
-  private[graft] def ivfPqFilteredTopKAgainst(
-      ix: FilteredIndex, qFrame: DataFrame, k: Int = 10,
-      minProbe: Int = NProbe, alpha: Int = FilteredAlpha): DataFrame = {
-    val m = ix.books.length
-    val ks = ix.books(0).length
-    val codes = ix.codes
-    val queries = adaptiveProbesFor(ix.assigned, qFrame, ix.cent, k, minProbe, alpha)
-      .select(col("q_id"), col("label"), adcLut(ix.books).as("lut"), col("cell"))
+    val assigned = assignCells(corpus, cent).persist()
+    val codes = assignCodes(assigned, books, Seq("vec_id", "cell", "label"))
+    val queries = adaptiveProbesFor(assigned, qFrame, cent, k, minProbe, alpha)
+      .select(col("q_id"), col("label"), adcLut(books).as("lut"), col("cell"))
     // + 0.0 normalizes IEEE −0.0: a tiny negative ADC sum rounding to
     // zero keeps its sign bit on some engines (the community_modularity
     // lesson — observed live at sf0.01 on this query's batch)
@@ -2139,6 +2093,20 @@ object Similarity {
        |WHERE rank <= 10
        |ORDER BY q_id, rank""".stripMargin
 
+  /** EXACT DuckDB oracle for [[annLshTopK]], generated from the SAME seeded
+    * plane generator the query plans with: the 12×5 hyperplanes are emitted
+    * as DOUBLE[] literals (Java shortest-repr `toString` round-trips to the
+    * identical bits through DuckDB's correctly-rounded parser), each sign
+    * bit is `list_dot_product(v, plane) >= 0`, and DuckDB's
+    * `list_dot_product` accumulates left-to-right exactly like the
+    * codegen'd [[graft.functions.DotProduct]] loop (verified with a
+    * catastrophic-cancellation probe: `[1e16, 1, -1e16]·[1,1,1]` returns 0,
+    * the left-to-right result), so every bucket id — and therefore the
+    * candidate set, the exact-cosine ranking, and the top-k — is
+    * reproduced bit-exactly. This retires the recall-floor-only check:
+    * LSH internals ARE cross-engine derivable when the projection
+    * arithmetic is pinned.
+    */
   def annLshTopKSql: String = annLshTopKSqlFor("q.vec_id % 50 = 0")
 
   /** [[annLshTopKSql]] with the query-set predicate parameterized (the

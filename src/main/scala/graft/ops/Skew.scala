@@ -110,11 +110,6 @@ object Skew {
       |GROUP BY host
       |ORDER BY host""".stripMargin
 
-  /** HLL-sketch distinct counts — the 100-TB substitute for exact
-    * count(DISTINCT): one pass, fixed memory per group, no Expand blow-up.
-    * Approximate by construction → no value oracle; a spec pins relative
-    * error vs the exact variant.
-    */
   /** Keys reported by the skew diagnostic. */
   val SkewTopK = 10
 
@@ -165,6 +160,11 @@ object Skew {
        |WHERE rank <= $SkewTopK
        |ORDER BY rank""".stripMargin
 
+  /** HLL-sketch distinct counts — the 100-TB substitute for exact
+    * count(DISTINCT): one pass, fixed memory per group, no Expand blow-up.
+    * Approximate by construction → no value oracle; a spec pins relative
+    * error vs the exact variant.
+    */
   def distinctPartsApprox(spark: SparkSession, dir: String, rsd: Double = 0.02): DataFrame =
     Tables(spark, dir, "lineitem")
       .groupBy("l_returnflag")

@@ -317,8 +317,6 @@ object StorageLayout {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  /** Morton restated as exact integer arithmetic (bit i of v ≙
-    * `(v // 2^i) % 2`; position p ≙ `· 2^p`). */
   /** Hilbert-curve clustering manifest — the locality-tightest variant of
     * [[zorderChunks]], same (user bucket, value bucket) grid and chunk
     * granularity so the two manifests are directly comparable. Z-order
@@ -382,6 +380,8 @@ object StorageLayout {
        |ORDER BY chunk""".stripMargin
   }
 
+  /** Morton restated as exact integer arithmetic (bit i of v ≙
+    * `(v // 2^i) % 2`; position p ≙ `· 2^p`). */
   val zorderChunksSql: String = {
     val terms = (0 until ZBits).flatMap { i =>
       Seq(s"((ux // ${1L << i}) % 2) * ${1L << (2 * i)}",
@@ -398,37 +398,6 @@ object StorageLayout {
        |    FROM events))
        |GROUP BY chunk
        |ORDER BY chunk""".stripMargin
-  }
-
-  /** Generic small-file compaction — the lake-maintenance job every
-    * long-running ingest needs (the [[IncrementalIndex]] appends-gated
-    * compaction, generalized to any table): streaming sinks, incremental
-    * MERGEs, and per-batch appends each leave a trickle of small files;
-    * thousands of them turn every scan into a task-scheduling and
-    * footer-read storm. Compaction rewrites the table into
-    * ⌈rows/target⌉ range-partitioned, internally-sorted files — restoring
-    * both file sizing AND the sort-column clustering (footer min/max
-    * ranges disjoint across files) that data skipping depends on, so a
-    * compacted table prunes exactly like a freshly Z-/range-written one.
-    *
-    * Scale shape: the row count is a parquet METADATA read (count()
-    * pushes to footers — no data scan; at catalog scale use table stats),
-    * then one range shuffle + local sort. `maxRecordsPerFile` caps any
-    * file a skewed range would overstuff by splitting it — sorted order
-    * makes the splits still range-disjoint. Write to a NEW directory and
-    * swap atomically (the [[IncrementalIndex]] `compact` staging
-    * discipline) so readers never see a half-compacted table.
-    */
-  def compactTo(df: DataFrame, outPath: String, sortCol: String,
-      targetRecordsPerFile: Long): Int = {
-    val n = df.count()
-    val nFiles = math.max(1L, (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    df.repartitionByRange(nFiles, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", targetRecordsPerFile)
-      .parquet(outPath)
-    nFiles
   }
 
   /** Ring topology: shard count before the change, virtual nodes per

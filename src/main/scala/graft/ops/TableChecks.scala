@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: every single-table constraint folds into ONE aggregate
   * over one scan of `orders` (conditional counts side by side; the
   * uniqueness check is the only one that must see the key's distinct set,
-  * and it rides the same aggregate as a count-distinct — under the
-  * [[graft.plans.ApproxDistinctRewrite]] conf even that becomes a
-  * fixed-memory sketch when an approximate gate is acceptable). The one
+  * and it rides the same aggregate as a count-distinct). The one
   * cross-table constraint (FK orphans) is a single broadcast/SMJ anti-join
   * aggregate. A 100-TB nightly QA pass is therefore two jobs, not one per
   * constraint.
@@ -800,11 +798,8 @@ object TableChecks {
     * stats side by side; the row-per-column shape is a `stack` (unpivot)
     * of the 1-row result — 6 rows, no second scan. The multi-column
     * exact COUNT(DISTINCT) is the one Expand in the plan — the honest
-    * price of exact cardinalities, and precisely what the engine's
-    * [[graft.plans.ApproxDistinctRewrite]] session conf converts into
-    * fixed-memory HLL sketches for the 100-TB profile run (spec-pinned:
-    * under the flipped conf the plan loses the Expand and the
-    * cardinalities land inside the sketch envelope).
+    * price of exact cardinalities; [[profileColumnsApprox]] is the
+    * fixed-memory HLL form for the 100-TB profile run.
     */
   def profileColumns(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables(spark, dir, "orders")
@@ -842,10 +837,9 @@ object TableChecks {
   }
 
   /** The 100-TB profile: identical report shape with `n_distinct` from
-    * the HLL++ sketch (`approx_count_distinct`) — what the exact query
-    * becomes under the [[graft.plans.ApproxDistinctRewrite]] conf, stated
-    * directly so the sweep times the plan a production profile run ships:
-    * ONE hash-friendly pass, no Expand, fixed-size sketch partials.
+    * the HLL++ sketch (`approx_count_distinct`), so the sweep times the
+    * plan a production profile run ships: ONE hash-friendly pass, no
+    * Expand, fixed-size sketch partials.
     * Rows-only (sketch internals are engine-specific); the envelope vs
     * the exact anchor is spec-pinned. Everything except `n_distinct`
     * stays exact.
@@ -1155,21 +1149,6 @@ object TableChecks {
   val PsiSplitDate = "2024-01-16"
   val PsiBar = "0.2"
 
-  /** Population-stability-index drift audit — the monitoring metric a
-    * production scoring pipeline computes nightly over every model input:
-    * PSI = Σ_buckets (p_actual − p_expected)·ln(p_actual/p_expected)
-    * between a baseline period and the current one (here: events before /
-    * after [[PsiSplitDate]]). Monitored columns: `value` (10 fixed-width
-    * buckets — fixed, not quantile, so bucketing is a pure projection)
-    * and `event_type` (categorical). Laplace +1 on every bucket keeps PSI
-    * total when a bucket empties on one side.
-    *
-    * Exactness: counts are integers; each bucket term is one fixed-shape
-    * IEEE tree cast to DECIMAL(24,12) before the ORDER-FREE decimal sum
-    * (the [[graft.ops.TextAnalysis.langSourceMiOf]] discipline), rounded
-    * 6. Scale shape: corpus scanned once per column into bucket-domain
-    * aggregates (≤ 10 rows each); everything after is bounded.
-    */
   /** The monitored-column bucket projections [[psiDrift]] counts over. */
   private[graft] val PsiColumns: Seq[(String, String)] = Seq(
     "value" -> "cast(cast(least(floor(value / 20.0), 9.0) as int) as string)",
@@ -1195,6 +1174,21 @@ object TableChecks {
       .orderBy("col_name")
   }
 
+  /** Population-stability-index drift audit — the monitoring metric a
+    * production scoring pipeline computes nightly over every model input:
+    * PSI = Σ_buckets (p_actual − p_expected)·ln(p_actual/p_expected)
+    * between a baseline period and the current one (here: events before /
+    * after [[PsiSplitDate]]). Monitored columns: `value` (10 fixed-width
+    * buckets — fixed, not quantile, so bucketing is a pure projection)
+    * and `event_type` (categorical). Laplace +1 on every bucket keeps PSI
+    * total when a bucket empties on one side.
+    *
+    * Exactness: counts are integers; each bucket term is one fixed-shape
+    * IEEE tree cast to DECIMAL(24,12) before the ORDER-FREE decimal sum
+    * (the [[graft.ops.TextAnalysis.langSourceMiOf]] discipline), rounded
+    * 6. Scale shape: corpus scanned once per column into bucket-domain
+    * aggregates (≤ 10 rows each); everything after is bounded.
+    */
   def psiDrift(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir, "events")
     val pre = col("ts") < lit(PsiSplitDate).cast("timestamp")
@@ -1242,25 +1236,6 @@ object TableChecks {
   /** Key-range width of one checksum bucket in [[replicaBucketDiff]]. */
   val ReplicaBucketKeys = 500L
 
-  /** Replica anti-entropy via bucket checksums — the Merkle-tree-style
-    * repair discipline (Cassandra/Dynamo): two replicas of a table are
-    * compared by ONE (count, checksum) row per key-range bucket, and only
-    * buckets that disagree ever need a row-level diff ([[snapshotDiff]]).
-    * At 10¹² rows that is N/[[ReplicaBucketKeys]] comparison rows instead
-    * of N — the difference between a nightly audit and an impossible one.
-    *
-    * Row fingerprint: a 60-bit integer from md5 over a CANONICALIZED
-    * column rendering (integer cents for the price, fixed date format —
-    * never raw double→string, whose formatting is engine-specific).
-    * Bucket checksum = SUM of fingerprints carried as DECIMAL(38,0):
-    * integer addition is order-free, so the checksum is partition- and
-    * engine-independent, and any single-row change moves it (adversarial
-    * collisions are not the threat model — bit rot and missed writes are).
-    *
-    * The "replica" here is planted from the same table so both engines
-    * derive it identically: one corrupted price per ~997 keys, one
-    * dropped row per ~1499 — the audit must flag exactly those buckets.
-    */
   /** Canonicalized per-bucket (count, checksum) sums of an orders-shaped
     * frame. Counts AND checksums are both additive, so bucket states of
     * disjoint row sets merge by addition. */
@@ -1285,6 +1260,25 @@ object TableChecks {
         coalesce(col("n_b"), lit(0L)).as("n_b"))
       .orderBy("bucket")
 
+  /** Replica anti-entropy via bucket checksums — the Merkle-tree-style
+    * repair discipline (Cassandra/Dynamo): two replicas of a table are
+    * compared by ONE (count, checksum) row per key-range bucket, and only
+    * buckets that disagree ever need a row-level diff ([[snapshotDiff]]).
+    * At 10¹² rows that is N/[[ReplicaBucketKeys]] comparison rows instead
+    * of N — the difference between a nightly audit and an impossible one.
+    *
+    * Row fingerprint: a 60-bit integer from md5 over a CANONICALIZED
+    * column rendering (integer cents for the price, fixed date format —
+    * never raw double→string, whose formatting is engine-specific).
+    * Bucket checksum = SUM of fingerprints carried as DECIMAL(38,0):
+    * integer addition is order-free, so the checksum is partition- and
+    * engine-independent, and any single-row change moves it (adversarial
+    * collisions are not the threat model — bit rot and missed writes are).
+    *
+    * The "replica" here is planted from the same table so both engines
+    * derive it identically: one corrupted price per ~997 keys, one
+    * dropped row per ~1499 — the audit must flag exactly those buckets.
+    */
   def replicaBucketDiff(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables(spark, dir, "orders")
     val replica = orders

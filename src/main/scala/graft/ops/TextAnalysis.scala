@@ -424,17 +424,6 @@ object TextAnalysis {
       |  ON h.lang = t.lang
       |ORDER BY h.lang, bucket""".stripMargin
 
-  /** Distinctive terms per document: top-3 tokens ranked by tf/df — term
-    * frequency in the document over corpus document frequency, the
-    * TF-IDF deployment shape (ranking by tf/df is idf-monotone for fixed
-    * tf and avoids `ln`, whose libm rounding is not cross-engine exact;
-    * IEEE division IS correctly rounded, so the scores hash identically).
-    *
-    * Scale shape: (doc, token) counts → per-token df aggregate (the small
-    * side, broadcast back) → per-doc top-k window partitioned by doc_id.
-    * The window partitions by the HIGH-cardinality key, so no task ever
-    * sorts more than one document's terms.
-    */
   /** Phrases reported by [[rakeKeyphrases]]. */
   val RakeTopK = 20
 
@@ -527,6 +516,17 @@ object TextAnalysis {
        |ORDER BY score DESC, phrase LIMIT $RakeTopK""".stripMargin
   }
 
+  /** Distinctive terms per document: top-3 tokens ranked by tf/df — term
+    * frequency in the document over corpus document frequency, the
+    * TF-IDF deployment shape (ranking by tf/df is idf-monotone for fixed
+    * tf and avoids `ln`, whose libm rounding is not cross-engine exact;
+    * IEEE division IS correctly rounded, so the scores hash identically).
+    *
+    * Scale shape: (doc, token) counts → per-token df aggregate (the small
+    * side, broadcast back) → per-doc top-k window partitioned by doc_id.
+    * The window partitions by the HIGH-cardinality key, so no task ever
+    * sorts more than one document's terms.
+    */
   def distinctiveTerms(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val docTerm = Tables(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
@@ -569,24 +569,6 @@ object TextAnalysis {
       |WHERE rank <= 3
       |ORDER BY doc_id, rank""".stripMargin
 
-  /** The winnow scheme rebuilt in SQL, position by position:
-    *
-    *  - k-gram hash = Σ code(p+j)·257^(7−j) in HUGEINT, one mod 2⁶⁴ at the
-    *    end — identical to the Scala loop's wrapping-long arithmetic (the
-    *    constants are 257^j; the largest term stays under 2⁶⁴ for ASCII,
-    *    and the sum under 2⁶⁷, so nothing wraps early). The unsigned
-    *    residue then maps to the signed-long value Spark emits.
-    *  - window selection: `min(struct(h, -p))` over a w-row frame picks
-    *    each window's RIGHTMOST minimum (ties → larger p → smaller -p),
-    *    exactly the `<=` scan in Winnow.compute; the selected set is the
-    *    union over valid window starts (p ≤ m−w+1), with the m ≤ w branch
-    *    reducing to one fingerprint per document.
-    *
-    * Valid for BMP text only (DuckDB `ord` = codepoint, Scala `charAt` =
-    * UTF-16 unit — equal below U+10000; the corpus is ASCII). Verified
-    * branch-by-branch against a reference implementation including the
-    * short-document cases the corpus never hits.
-    */
   /** BM25 "more-like-this" retrieval: for each sampled query document
     * (doc_id ≡ 0 mod 50 — the ANN query-set convention), the top-k other
     * documents by Okapi BM25 over the query's distinct terms. The lexical
@@ -1426,6 +1408,24 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** The winnow scheme rebuilt in SQL, position by position:
+    *
+    *  - k-gram hash = Σ code(p+j)·257^(7−j) in HUGEINT, one mod 2⁶⁴ at the
+    *    end — identical to the Scala loop's wrapping-long arithmetic (the
+    *    constants are 257^j; the largest term stays under 2⁶⁴ for ASCII,
+    *    and the sum under 2⁶⁷, so nothing wraps early). The unsigned
+    *    residue then maps to the signed-long value Spark emits.
+    *  - window selection: `min(struct(h, -p))` over a w-row frame picks
+    *    each window's RIGHTMOST minimum (ties → larger p → smaller -p),
+    *    exactly the `<=` scan in Winnow.compute; the selected set is the
+    *    union over valid window starts (p ≤ m−w+1), with the m ≤ w branch
+    *    reducing to one fingerprint per document.
+    *
+    * Valid for BMP text only (DuckDB `ord` = codepoint, Scala `charAt` =
+    * UTF-16 unit — equal below U+10000; the corpus is ASCII). Verified
+    * branch-by-branch against a reference implementation including the
+    * short-document cases the corpus never hits.
+    */
   val winnowFingerprintsSql: String =
     """WITH grams AS (
       |  SELECT doc_id, length(text) - 7 AS m, text,
@@ -1987,6 +1987,12 @@ object TextAnalysis {
     * (one pass, broadcast query terms) is what scales, not m. */
   val PercolateQueries = 10
 
+  /** Per-doc distinct token stream — shared by the conjunctive and the
+    * boolean percolator (map-side `array_distinct`, no shuffle). */
+  private[graft] def docTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(array_distinct(Dedup.tokens(col("text")))).as("token"))
+
   /** Percolation / reverse search — M STORED queries matched against the
     * corpus in ONE pass (the Elasticsearch-percolator / alerting shape:
     * "which standing alerts does each incoming document trigger?"). The
@@ -2002,42 +2008,26 @@ object TextAnalysis {
     * |queries|-bounded rollup. Queries with zero firing docs survive via
     * the left re-attach (null first/last doc).
     */
-  /** Per-doc distinct token stream — shared by the conjunctive and the
-    * boolean percolator (map-side `array_distinct`, no shuffle). */
-  private[graft] def docTokens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(array_distinct(Dedup.tokens(col("text")))).as("token"))
-
-  /** Register the stored-query set off a corpus: the top-2m df terms
-    * paired rank i / i+m. Bounded deterministic driver fit (2m rows). */
-  private[graft] def percolateQuerySet(spark: SparkSession,
-      docTok: DataFrame, m: Int = PercolateQueries): DataFrame = {
+  def percolateAlerts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val docTok = docTokens(Tables(spark, dir, "documents"))
+    // the stored-query set, registered off the corpus: the top-2m df terms
+    // paired rank i / i+m (a bounded deterministic driver fit, 2m rows).
+    // It becomes PLAN LITERALS — no window, no tiny-frame self-join
+    val m = PercolateQueries
     val top = docTok.groupBy("token").agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("token")).limit(2 * m)
       .collect().map(r => (r.getString(0), r.getLong(1)))
       .sortBy { case (t, df) => (-df, t) }.map(_._1)
-    (0 until m).map(i => (i.toLong, top(i), top(i + m)))
+    val queries = (0 until m).map(i => (i.toLong, top(i), top(i + m)))
       .toDF("query_id", "term_a", "term_b")
-  }
-
-  /** The conjunctive match core — (query_id, doc_id) pairs where the doc
-    * holds BOTH query terms. */
-  private[graft] def firedPairs(docTok: DataFrame, queries: DataFrame): DataFrame = {
+    // conjunctive match: a query fires for a doc holding BOTH its terms
     val qterms = queries.select(col("query_id"),
       explode(array(col("term_a"), col("term_b"))).as("token"))
-    docTok.join(broadcast(qterms), Seq("token"))
+    val fired = docTok.join(broadcast(qterms), Seq("token"))
       .groupBy("query_id", "doc_id").agg(count(lit(1)).as("matched"))
       .filter(col("matched") === 2)
       .select("query_id", "doc_id")
-  }
-
-  def percolateAlerts(spark: SparkSession, dir: String): DataFrame = {
-    val docTok = docTokens(Tables(spark, dir, "documents"))
-    // the registered query set becomes PLAN LITERALS — no window, no
-    // tiny-frame self-join
-    val queries = percolateQuerySet(spark, docTok)
-    val fired = firedPairs(docTok, queries)
       .groupBy("query_id").agg(count(lit(1)).as("n_docs"),
         min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
     // no broadcast hint: the preserved side of a left-outer cannot build

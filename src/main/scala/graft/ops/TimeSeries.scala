@@ -133,16 +133,6 @@ object TimeSeries {
       |GROUP BY s.event_type, s.day
       |ORDER BY s.event_type, s.day""".stripMargin
 
-  /** Sketch-merged trailing 7-day distinct — the 100-TB form of
-    * [[rollingDau7d]]. The corpus is scanned ONCE into per-(type, day)
-    * HLL sketches (|types| × |days| rows, ~KB each); the rolling union
-    * merges 7 sketches per output row and never re-touches events. The
-    * exact form re-ships each (user, day) row ×7 through a distinct
-    * aggregate — corpus-sized work per window length; the sketch form's
-    * rolling cost is calendar-sized. Rows-only by necessity (DataSketches
-    * HLL binary layout is engine-specific); the error envelope vs the
-    * exact twin is spec-pinned in TimeSeriesSpec.
-    */
   /** Per-(type, day) HLL user sketches from a raw event frame — the ONE
     * corpus-touching aggregate; the rolling windows merge these with
     * `hll_union_agg` (register-wise max). */
@@ -163,6 +153,16 @@ object TimeSeries {
       .orderBy("event_type", "day")
   }
 
+  /** Sketch-merged trailing 7-day distinct — the 100-TB form of
+    * [[rollingDau7d]]. The corpus is scanned ONCE into per-(type, day)
+    * HLL sketches (|types| × |days| rows, ~KB each); the rolling union
+    * merges 7 sketches per output row and never re-touches events. The
+    * exact form re-ships each (user, day) row ×7 through a distinct
+    * aggregate — corpus-sized work per window length; the sketch form's
+    * rolling cost is calendar-sized. Rows-only by necessity (DataSketches
+    * HLL binary layout is engine-specific); the error envelope vs the
+    * exact twin is spec-pinned in TimeSeriesSpec.
+    */
   def rollingDau7dHll(spark: SparkSession, dir: String): DataFrame =
     rollingFromDailySketches(dailySketches(Tables(spark, dir, "events")))
 
@@ -450,24 +450,6 @@ object TimeSeries {
       |FROM by_dow JOIN overall USING (event_type)
       |ORDER BY event_type, dow""".stripMargin
 
-  /** Trailing 7-day distinct users via SEGMENT BITMAPS — the exact
-    * mergeable twin of [[rollingDau7dHll]], completing the rolling-distinct
-    * triad: exact re-ship ([[rollingDau7d]], per-user rows ×7 through a
-    * distinct agg), approximate mergeable (HLL, KB per cell, ±2%), exact
-    * mergeable (this — user IDs packed as bits, 32 users per int64 word).
-    *
-    * The corpus is touched ONCE by the (type, day, segment) `bit_or`
-    * aggregate (map-side combinable: OR is associative/commutative/
-    * idempotent, the same algebra that makes the HLL twin merge). The
-    * rolling union then ORs 7 words per segment and popcounts —
-    * calendar × ⌈|users|/32⌉ work, never raw events. The dense-ID
-    * assumption is the honest bound (segment count ∝ max(user_id)/32,
-    * the roaring-bitmap regime); for sparse 64-bit key spaces the HLL twin
-    * is the right leg.
-    *
-    * Oracle: [[rollingDau7dSql]] verbatim — the textbook spine range-join;
-    * bit-exact equality to an independent formulation IS the claim.
-    */
   /** Per-(type, day, segment) bitmap words from a raw event frame — the
     * ONE corpus-touching aggregate; the rolling union ORs these. */
   private[graft] def dailyBitmapWords(ev: DataFrame): DataFrame =
@@ -492,6 +474,24 @@ object TimeSeries {
       .orderBy("event_type", "day")
   }
 
+  /** Trailing 7-day distinct users via SEGMENT BITMAPS — the exact
+    * mergeable twin of [[rollingDau7dHll]], completing the rolling-distinct
+    * triad: exact re-ship ([[rollingDau7d]], per-user rows ×7 through a
+    * distinct agg), approximate mergeable (HLL, KB per cell, ±2%), exact
+    * mergeable (this — user IDs packed as bits, 32 users per int64 word).
+    *
+    * The corpus is touched ONCE by the (type, day, segment) `bit_or`
+    * aggregate (map-side combinable: OR is associative/commutative/
+    * idempotent, the same algebra that makes the HLL twin merge). The
+    * rolling union then ORs 7 words per segment and popcounts —
+    * calendar × ⌈|users|/32⌉ work, never raw events. The dense-ID
+    * assumption is the honest bound (segment count ∝ max(user_id)/32,
+    * the roaring-bitmap regime); for sparse 64-bit key spaces the HLL twin
+    * is the right leg.
+    *
+    * Oracle: [[rollingDau7dSql]] verbatim — the textbook spine range-join;
+    * bit-exact equality to an independent formulation IS the claim.
+    */
   def rollingDau7dBitmap(spark: SparkSession, dir: String): DataFrame =
     rollingFromDailyWords(dailyBitmapWords(Tables(spark, dir, "events")))
 
@@ -718,23 +718,39 @@ object TimeSeries {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  /** Frozen CUSUM baseline: per-type integer moments over the first
-    * [[CusumBaselineDays]] of the daily frame's calendar, carrying `cut`
-    * (the first monitoring day) so consumers need no second look at the
-    * calendar origin. */
-  private[graft] def cusumBaseline(daily: DataFrame): DataFrame = {
+  /** Tabular CUSUM changepoint detection over per-type daily counts — the
+    * pipeline-health monitor "did this event type's volume shift after the
+    * baseline month?". Classic two-sided CUSUM: S⁺_t = max(0, S⁺_{t−1} +
+    * (x_t − μ_b − κ)), S⁻ mirrored, alarm when either exceeds h·σ_b. The
+    * max(0,·) recursion is NOT a plain running sum, but it has the exact
+    * prefix form S⁺_t = C_t − min(0, min_{j≤t} C_j) with C the cumulative
+    * sum of the centered series — two windows, no recursion.
+    *
+    * Exactness: with κ = μ_b/D (D = [[CusumSlackDen]]) every term scales to
+    * integers by D·k_b: y⁺_t = D·k_b·x_t − (D+1)·S_b, and the alarm
+    * S⁺ > h·σ_b·D·k_b squares to S⁺² > h²·D²·(k_b·S₂_b − S_b²) — divisions
+    * and square roots multiplied away (the [[dailyCountAnomalies]] moment
+    * discipline), so the flag set is exact and engine-independent. Products
+    * are carried as DECIMAL(38,0): at 1e9 events/day the cumulative term
+    * reaches ~1e16 and its square ~1e32 — inside decimal's 38 digits.
+    *
+    * Scale shape: one corpus scan into the (type, day) hash aggregate;
+    * the baseline moments aggregate over ≤ `CusumBaselineDays` rows per
+    * type and broadcast back; both cumsum windows partition by type over
+    * calendar-bounded frames (O(days), never O(corpus)).
+    */
+  def cusumChangepoints(spark: SparkSession, dir: String): DataFrame = {
+    val daily = dailyTypeCounts(Tables(spark, dir, "events"))
+    // frozen baseline: per-type integer moments over the first
+    // CusumBaselineDays of the calendar, carrying `cut` (the first
+    // monitoring day)
     val b0 = daily.agg(min(col("day")).as("d0"))
-    daily.crossJoin(broadcast(b0))
+    val base = daily.crossJoin(broadcast(b0))
       .filter(datediff(col("day"), col("d0")) < CusumBaselineDays)
       .groupBy("event_type").agg(
         count(lit(1)).as("kb"), sum(col("n")).as("sb"),
         sum(expr("CAST(n AS DECIMAL(38,0)) * n")).as("s2b"),
         date_add(min(col("d0")), CusumBaselineDays).as("cut"))
-  }
-
-  /** The CUSUM decision rule of [[cusumChangepoints]] over a daily frame
-    * against a (frozen) baseline. */
-  private[graft] def cusumAlarms(daily: DataFrame, base: DataFrame): DataFrame = {
     val d = CusumSlackDen
     val w = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -762,32 +778,6 @@ object TimeSeries {
             .otherwise(lit("high")))
           .otherwise(lit("low")).as("side"))
       .orderBy("event_type", "day")
-  }
-
-  /** Tabular CUSUM changepoint detection over per-type daily counts — the
-    * pipeline-health monitor "did this event type's volume shift after the
-    * baseline month?". Classic two-sided CUSUM: S⁺_t = max(0, S⁺_{t−1} +
-    * (x_t − μ_b − κ)), S⁻ mirrored, alarm when either exceeds h·σ_b. The
-    * max(0,·) recursion is NOT a plain running sum, but it has the exact
-    * prefix form S⁺_t = C_t − min(0, min_{j≤t} C_j) with C the cumulative
-    * sum of the centered series — two windows, no recursion.
-    *
-    * Exactness: with κ = μ_b/D (D = [[CusumSlackDen]]) every term scales to
-    * integers by D·k_b: y⁺_t = D·k_b·x_t − (D+1)·S_b, and the alarm
-    * S⁺ > h·σ_b·D·k_b squares to S⁺² > h²·D²·(k_b·S₂_b − S_b²) — divisions
-    * and square roots multiplied away (the [[dailyCountAnomalies]] moment
-    * discipline), so the flag set is exact and engine-independent. Products
-    * are carried as DECIMAL(38,0): at 1e9 events/day the cumulative term
-    * reaches ~1e16 and its square ~1e32 — inside decimal's 38 digits.
-    *
-    * Scale shape: one corpus scan into the (type, day) hash aggregate;
-    * the baseline moments aggregate over ≤ `CusumBaselineDays` rows per
-    * type and broadcast back; both cumsum windows partition by type over
-    * calendar-bounded frames (O(days), never O(corpus)).
-    */
-  def cusumChangepoints(spark: SparkSession, dir: String): DataFrame = {
-    val daily = dailyTypeCounts(Tables(spark, dir, "events"))
-    cusumAlarms(daily, cusumBaseline(daily))
   }
 
   val cusumChangepointsSql: String = {

@@ -393,7 +393,6 @@ object Tpch {
       |    AND l_shipdate < TIMESTAMP '2000-01-01')
       |ORDER BY s_suppkey""".stripMargin
 
-  /** Distinct aggregation: distinct parts and suppliers per return flag. */
   /** Market-basket co-occurrence with lift — "orders containing part A
     * also contain part B": candidate pairs form ONLY inside an order
     * (equi-join on the order key, fan-out bounded by basket size — never
@@ -447,6 +446,7 @@ object Tpch {
       |JOIN marg mb ON mb.l_partkey = p2, tot
       |ORDER BY lift DESC, p1, p2 LIMIT 50""".stripMargin
 
+  /** Distinct aggregation: distinct parts and suppliers per return flag. */
   def distinctParts(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "lineitem")
       .groupBy("l_returnflag")

@@ -3,7 +3,6 @@ package graft
 class GraftExtensionsSpec extends SparkSuite {
 
   test("custom expressions are callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT
         |  html_unescape('AI &amp; ML &apos;26') AS s,
@@ -36,7 +35,6 @@ class GraftExtensionsSpec extends SparkSuite {
   }
 
   test("generator and aggregate surfaces work from SQL") {
-    GraftFunctions.register(spark)
     // generator in the SELECT list: one row per chunk
     val chunks = spark.sql(
       """SELECT sliding_chunks(split('a b c d e', ' '), 3, 2)
@@ -58,9 +56,12 @@ class GraftExtensionsSpec extends SparkSuite {
       2 -> Seq(("z", 1.0))), s"got ${top.toSeq}")
   }
 
-  test("registration is idempotent and survives re-registration") {
-    GraftFunctions.register(spark)
-    GraftFunctions.register(spark)
-    assert(spark.sql("SELECT html_unescape('&lt;x&gt;')").head().getString(0) == "<x>")
+  test("the plugin injects the SQL functions and the as-of strategy, and no optimizer rule") {
+    val rules = spark.sessionState.optimizer.batches.flatMap(_.rules).map(_.getClass.getName)
+    assert(!rules.exists(_.startsWith("graft.")), s"graft optimizer rules: ${rules.filter(_.startsWith("graft."))}")
+    assert(spark.sessionState.planner.strategies.contains(graft.plans.AsofJoinStrategy))
+    val registry = spark.sessionState.functionRegistry
+    for ((ident, _, _) <- GraftFunctions.all)
+      assert(registry.functionExists(ident), s"${ident.funcName} is not registered")
   }
 }

@@ -533,9 +533,8 @@ class PlanShapeSpec extends SparkSuite {
     // ever sees an unbounded partition
     "sorted_neighborhood_pairs" -> (0, 0, 0, 1, 12, 4),
     // ONE scan computes every column's stats side by side (the Expand
-    // inside is the exact multi-distinct price; the ApproxDistinctRewrite
-    // conf converts it to sketches — spec-pinned); stack() unpivots the
-    // 1-row result
+    // inside is the exact multi-distinct price; profile_columns_approx
+    // below is the sketch form); stack() unpivots the 1-row result
     "profile_columns" -> (0, 0, 0, 1, 2, 0),
     // the benched sketch profile: one hash-friendly pass, no Expand,
     // fixed-size HLL partials — what the exact anchor becomes at 100 TB

@@ -14,12 +14,8 @@ object SparkSuite {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
-      // the engine's extension plugin, as a production session would carry
-      // it; every injected rule is conf-gated (default off), so suites see
-      // stock behavior unless they opt in. The extension POSITION matters:
-      // injected optimizer rules run before RewriteDistinctAggregates, so
-      // the approx rewrite reaches multi-distinct aggregates that the
-      // post-hoc extraOptimizations path (end of optimizer) cannot.
+      // the engine's extension plugin: the SQL functions and the as-of
+      // planner strategy (it injects no optimizer rule)
       .withExtensions(new graft.GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

@@ -63,7 +63,6 @@ class TopKByScoreSpec extends SparkSuite {
   test("wrong argument types fail at analysis, not execution") {
     // an int tf (not long) via the SQL surface must raise an analysis error
     // naming the offending argument — not a ClassCastException mid-task
-    graft.GraftFunctions.register(spark)
     Seq((1, "a", 2, 3)).toDF("g", "token", "tf", "df")
       .createOrReplaceTempView("topk_badtypes")
     val e = intercept[Exception] {

@@ -338,20 +338,6 @@ class CorpusSpec extends SparkSuite {
     assert(out(6L) == "repetitive")
   }
 
-  test("qualityFunnelObserved: one-pass observe() metrics equal independent aggregates") {
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val (kept, m) = Corpus.qualityFunnelObserved(docs)
-    val flags = Corpus.qualityFilterOf(docs).collect()
-    val reasons = flags.groupBy(_.getAs[String]("reason")).view.mapValues(_.length.toLong).toMap
-    assert(m("n_total") == flags.length.toLong)
-    assert(m("n_kept") == flags.count(_.getAs[Boolean]("keep")).toLong)
-    assert(kept == m("n_kept"), "action result and observed counter diverged")
-    for (r <- Seq("too_short", "too_long", "bad_word_length", "low_stopword", "repetitive"))
-      assert(m(s"n_$r") == reasons.getOrElse(r, 0L), s"$r: ${m(s"n_$r")} vs ${reasons.get(r)}")
-    // the funnel must drop something real for the metrics to mean anything
-    assert(m("n_kept") < m("n_total"))
-  }
-
   test("qualityFilter: keep is exactly reason == ok and the funnel drops something real") {
     val out = Corpus.qualityFilter(spark, "/root/testdata/sf0.001")
     val bad = out.filter(col("keep") =!= (col("reason") === "ok")).count()

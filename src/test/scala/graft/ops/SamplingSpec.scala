@@ -111,15 +111,6 @@ class SamplingSpec extends SparkSuite {
       s"limiting stratum $limiting lost rows: ${out(limiting)._1} of ${byLang(limiting)}")
   }
 
-  test("stratified sample: deterministic for a seed, fractions roughly honored") {
-    val s1 = Sampling.stratifiedSample(spark, dir).collect().toSeq
-    val s2 = Sampling.stratifiedSample(spark, dir).collect().toSeq
-    assert(s1 == s2)
-    val total = Tables(spark, dir, "documents").count()
-    val frac = s1.size.toDouble / total
-    assert(frac > 0.3 && frac < 0.7, s"sample fraction $frac far from 0.5")
-  }
-
   test("shuffleShards: every doc lands once, positions dense per shard, order deterministic") {
     val out = Sampling.shuffleShards(spark, dir).collect()
     val total = Tables(spark, dir, "documents").count()

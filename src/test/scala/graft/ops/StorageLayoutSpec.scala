@@ -171,46 +171,6 @@ class StorageLayoutSpec extends SparkSuite {
     assert(hs <= zs, s"hilbert spans ($hs) should not exceed morton's ($zs)")
   }
 
-  test("compactTo: fragmented table -> bounded file count, content-equal, range-disjoint files") {
-    import java.nio.file.Files
-    val work = Files.createTempDirectory("graft_compact").toString
-    val fragged = s"$work/fragged"
-    val compacted = s"$work/compacted"
-    // simulate an append-trickled table: 64 small unsorted files
-    val ev = Tables(spark, dir, "events")
-    ev.repartition(64).write.parquet(fragged)
-    val before = new java.io.File(fragged).listFiles.count(_.getName.endsWith(".parquet"))
-    assert(before >= 32, s"fixture should be fragmented, got $before files")
-
-    val n = ev.count()
-    val target = 2000L
-    val planned = StorageLayout.compactTo(
-      spark.read.parquet(fragged), compacted, "event_id", target)
-    val files = new java.io.File(compacted).listFiles
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
-    assert(planned == ((n + target - 1) / target).toInt)
-    // file count: one per range partition, plus at most one overflow split
-    // each (maxRecordsPerFile) — bounded, and far below the fragment count
-    assert(files.length >= planned && files.length <= 2 * planned,
-      s"expected ~$planned files, got ${files.length}")
-    assert(files.length < before / 4)
-
-    // content equality (no row lost or duplicated by the rewrite)
-    val a = spark.read.parquet(compacted).collect().map(_.toString).sorted
-    val b = ev.collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-
-    // clustering restored: per-file [min,max] of the sort column disjoint,
-    // so footer stats prune like a freshly range-written table
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax, col}
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f).agg(fmin(col("event_id")), fmax(col("event_id"))).head
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    for (Seq((_, hi), (lo2, _)) <- ranges.toSeq.sliding(2))
-      assert(hi < lo2, s"file ranges overlap: $ranges")
-  }
-
   test("zorder_pruned_scan result equals the plain-parquet aggregate, and the box predicate reaches the scan pushed down") {
     val df = StorageLayout.zorderPrunedScan(spark, dir)
     val got = df.collect()

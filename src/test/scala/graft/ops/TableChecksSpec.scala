@@ -198,30 +198,6 @@ class TableChecksSpec extends SparkSuite {
     assert(out("o_orderkey").getDouble(4) <= out("o_orderkey").getDouble(5))
   }
 
-  test("profileColumns under the approx rewrite: Expand gone, cardinalities in envelope") {
-    val dir = "/root/testdata/sf0.001"
-    val exact = TableChecks.profileColumns(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(3)).toMap
-    // the suite session carries GraftExtensions, whose injected position
-    // (before RewriteDistinctAggregates) reaches this SIX-distinct
-    // aggregate — the post-hoc extraOptimizations path runs too late for
-    // multi-distinct plans
-    spark.conf.set(graft.plans.ApproxDistinctRewrite.EnabledConf, "true")
-    try {
-      val df = TableChecks.profileColumns(spark, dir)
-      df.collect()
-      val phys = df.queryExecution.executedPlan.toString
-      assert(!phys.contains("Expand"),
-        s"the approximation-mode profile must lose the multi-distinct Expand:\n$phys")
-      val approx = df.collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-      for ((c, nd) <- exact)
-        assert(math.abs(approx(c) - nd) <= math.max(2.0, 0.1 * nd),
-          s"$c: sketch $approx($c) vs exact $nd")
-    } finally {
-      spark.conf.unset(graft.plans.ApproxDistinctRewrite.EnabledConf)
-    }
-  }
-
   test("profileColumnsApprox: exact everywhere but n_distinct, which stays in envelope") {
     val dir = "/root/testdata/sf0.001"
     val exact = TableChecks.profileColumns(spark, dir).collect()

@@ -10,9 +10,8 @@ import graft.ops.Tables
   * BEFORE its shuffle — the engine-native form of semi-join reduction, and
   * the mechanism that makes selective shuffle joins survive 100 TB (the
   * fact side ships `bloom_hit` rows, not the whole table, into the
-  * exchange). Complements [[BucketedRangeJoinSpec]] (plan rewrite we own)
-  * and the DPP leg (partition-level pruning): this is ROW-level runtime
-  * pruning on a non-partition key.
+  * exchange). Complements the DPP leg (partition-level pruning): this is
+  * ROW-level runtime pruning on a non-partition key.
   *
   * At bench scale the application-side threshold (10 GB default) would
   * never trigger, so the spec pins the MECHANISM with thresholds floored —
