@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * `PlanDump`, `Probe`, `ScaleData` and the two pipeline CLIs), so a dumped
   * plan or a verified result is the benched one:
   *  - `local[cpus]` with `cpus` shuffle partitions, where `cpus` is
-  *    `$SPARK_GRAFT_CPUS`, else every available core; `$SPARK_MASTER`
+  *    `SPARK_GRAFT_CPUS`, else every available core; `SPARK_MASTER`
   *    overrides the master;
   *  - parquet nanosecond timestamps read as longs (the nanos-era
   *    `events.ts`), session time zone UTC, UI off, log level WARN.

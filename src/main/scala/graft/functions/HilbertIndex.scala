@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Hilbert-curve index of a 2-D grid cell — the locality-tightest
   * space-filling curve, as a codegen'd Catalyst expression next to the
-  * Morton interleave ([[graft.ops.StorageLayout.mortonKey]]).
+  * Morton interleave (`graft.ops.StorageLayout.mortonKey`).
   *
   * Z-order's weakness is its seams: consecutive Morton codes jump across
   * half the grid every time a high bit flips, so a chunk of contiguous

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructFie
   * and `1 + ceil(max(0, n − width) / stride)` chunks, the
   * [[graft.ops.Corpus.chunkDocumentsOf]] contract.
   *
-  * Why a custom [[Generator]] and not `explode(sequence(...))` + `slice`:
+  * Why a custom `Generator` and not `explode(sequence(...))` + `slice`:
   * the declarative form materializes an index ARRAY per document, explodes
   * it through a Generate of `sequence`, and then re-evaluates a `slice`
   * projection per emitted row — three expression trees and an intermediate

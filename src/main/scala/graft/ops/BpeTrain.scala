@@ -511,7 +511,7 @@ object BpeTrain {
       |)""".stripMargin
 
   /** Literal-free generated oracle for [[bpeByteMerges]]: the SAME merge
-    * stages as the char-level chain ([[chainCtesFrom]]) seeded with the
+    * stages as the char-level chain (`chainCtesFrom`) seeded with the
     * hex-byte symbolization — `hex(word::BLOB)` emits the identical
     * uppercase hex text as Spark's `hex(encode(word, 'UTF-8'))`, split
     * into byte pairs by the same `..` regex. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Distributed k-means over the embeddings table — the CORPUS-SCALE
   * clustering primitive next to the bounded driver-side fit the ANN stack
-  * uses ([[Similarity.fitCentroidsFrom]] caps its Lloyd at a 50k hash-ordered
+  * uses (`Similarity.fitCentroidsFrom` caps its Lloyd at a 50k hash-ordered
   * sample because it only needs a coarse quantizer). Training-data curation
   * wants the full-corpus partition itself: cluster-balanced mixtures,
   * SemDeDup-style per-cluster pruning, per-cluster quality audits, and

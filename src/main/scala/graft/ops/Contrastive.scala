@@ -127,7 +127,7 @@ object Contrastive {
   }
 
   /** Generated exact oracle: the shared banded CTE (embedded plane
-    * literals — [[Similarity.bandedSqlCtes]]) with the label-exclusion
+    * literals — `Similarity.bandedSqlCtes`) with the label-exclusion
     * predicate in the candidate join. */
   def hardNegativesLshSql: String =
     s"""${Similarity.bandedSqlCtes}, lab AS (

@@ -677,7 +677,7 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist, blocked on
-    * 16-bit fingerprint segments ([[hammingBlockedPairs]]), so the
+    * 16-bit fingerprint segments (`hammingBlockedPairs`), so the
     * candidate join is an equi-join, not O(n²).
     */
   def simhashNearDup(spark: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.TextClean.isBlank
+import graft.functions.{CollapseWhitespace, IsBlank}
 
 /** The reference's cleaning/validation operator family (SURVEY.md §2: O4/O5,
   * O6, O8/O9, O11–O15) re-targeted at the `documents` testdata table so every
@@ -27,7 +27,7 @@ object DocValidation {
   /** O4/O5: required-field filter — keep rows where text and lang present. */
   def filterIncomplete(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents")
-      .filter(!isBlank(col("text")) && !isBlank(col("lang")))
+      .filter(!IsBlank(col("text")) && !IsBlank(col("lang")))
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")
 
@@ -40,7 +40,7 @@ object DocValidation {
 
   /** O8/O9: validation flags + first-failure reason code, as pure column
     * expressions (reference does a Python row loop, validator.py:151).
-    * Sorted for the oracle compare; aggregation consumers use [[flags]].
+    * Sorted for the oracle compare; aggregation consumers use `flags`.
     */
   def validateFlags(spark: SparkSession, dir: String): DataFrame =
     flags(spark, dir).orderBy("doc_id") // the oracle ends ORDER BY doc_id
@@ -50,11 +50,11 @@ object DocValidation {
     */
   private def flags(spark: SparkSession, dir: String): DataFrame = {
     val df = Tables(spark, dir, "documents")
-    val textBlank = isBlank(col("text"))
+    val textBlank = IsBlank(col("text"))
     val tooShort  = length(col("text")) < MinTextLength
     val tooLong   = length(col("text")) > MaxTextLength
-    val langBad   = isBlank(col("lang")) || !col("lang").isin(KnownLangs: _*)
-    val srcBad    = isBlank(col("source")) || !col("source").rlike("^src[0-9]+$")
+    val langBad   = IsBlank(col("lang")) || !col("lang").isin(KnownLangs: _*)
+    val srcBad    = IsBlank(col("source")) || !col("source").rlike("^src[0-9]+$")
     // Check order fixed (reference validator.py:55-89 pattern): presence →
     // length → auxiliary fields. Reason = FIRST failing check; errors = ALL.
     val reason = when(textBlank, "missing_text")
@@ -137,7 +137,7 @@ object DocValidation {
     // count(when(...)) not sum(when(...)) — keeps the type BIGINT in both
     // engines (DuckDB widens integer sums to HUGEINT).
     val aggs = cols.flatMap { c =>
-      val ok = count(when(!isBlank(col(c)), 1))
+      val ok = count(when(!IsBlank(col(c)), 1))
       Seq(ok.as(s"${c}_ok"),
           round(ok.cast("double") / count(lit(1)), 4).as(s"${c}_ratio"))
     } :+ count(lit(1)).as("n_rows")
@@ -186,7 +186,7 @@ object DocValidation {
   def cleanText(spark: SparkSession, dir: String): DataFrame = {
     val messy = concat(lit("  "), regexp_replace(col("text"), " ", "\t \t"), lit(" \t"))
     Tables(spark, dir, "documents")
-      .select(col("doc_id"), graft.pipeline.TextClean.collapseWs(messy).as("cleaned"))
+      .select(col("doc_id"), CollapseWhitespace(messy).as("cleaned"))
       .orderBy("doc_id")
   }
 
@@ -216,17 +216,17 @@ object DocValidation {
     val doubled = Dedup.doubledWithShift(docs)
     val loadStats = doubled.agg(
       count(lit(1)).as("n_loaded"),
-      count(when(isBlank(col("text")) || isBlank(col("lang")), 1)).as("n_incomplete"))
+      count(when(IsBlank(col("text")) || IsBlank(col("lang")), 1)).as("n_incomplete"))
     val kept = doubled
-      .filter(!isBlank(col("text")) && !isBlank(col("lang")))
+      .filter(!IsBlank(col("text")) && !IsBlank(col("lang")))
       .groupBy(md5(col("text")).as("k"))
       .agg(min_by(struct(col("doc_id"), col("text"), col("lang"), col("source")),
         col("doc_id")).as("r"))
       .select("r.*")
-    val passed = (!isBlank(col("text"))) &&
+    val passed = (!IsBlank(col("text"))) &&
       length(col("text")) >= MinTextLength && length(col("text")) <= MaxTextLength &&
-      !isBlank(col("lang")) && col("lang").isin(KnownLangs: _*) &&
-      !isBlank(col("source")) && col("source").rlike("^src[0-9]+$")
+      !IsBlank(col("lang")) && col("lang").isin(KnownLangs: _*) &&
+      !IsBlank(col("source")) && col("source").rlike("^src[0-9]+$")
     val keptStats = kept.agg(
       count(lit(1)).as("n_after_cleaning"),
       count(when(passed, 1)).as("n_valid"))

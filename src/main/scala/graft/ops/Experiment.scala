@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * variance, so the same data decides faster).
   *
   * Everything upstream of the final scalar arithmetic is EXACT: the arm
-  * is a pure function of (seed, user_id) (the [[Sampling.seededKey]]
+  * is a pure function of (seed, user_id) (the `Sampling.seededKey`
   * md5 discipline — re-runs and other engines assign identically), the
   * per-user pre/post purchase sums ride DECIMAL(15,2) (`value` carries
   * two decimals, so sums are exact integers in cents), and the pooled

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * do:
   *
   *  - '''Init''': within-cell top-G neighbors under the fitted coarse
-  *    quantizer ([[Similarity.fitCentroids]] — the same KMeans the IVF
+  *    quantizer (`Similarity.fitCentroids` — the same KMeans the IVF
   *    family plans with). A bucketed equi-join on the cell id, never an
   *    all-pairs product: cost is Σ|cell|². NOTE the scaling CONTRACT:
   *    at a FIXED cell count that sum is O(N²/cells) — the cell count is
@@ -47,11 +47,11 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: init order never matters (all steps are set-shaped with
   * explicit (score DESC, id) tie-breaks), the quantizer fit is the
-  * bit-reproducible [[Similarity.fitCentroidsFrom]], and every cosine is
+  * bit-reproducible `Similarity.fitCentroidsFrom`, and every cosine is
   * the same left-to-right accumulation DuckDB's `list_cosine_similarity`
-  * performs — which is what lets [[knnGraphTopKSql]] restate the whole
+  * performs — which is what lets `knnGraphTopKSql` restate the whole
   * construction + search as an EXACT unrolled oracle under the fitted
-  * centroid literals (the [[Similarity.annIvfTopKSql]] pattern).
+  * centroid literals (the `Similarity.annIvfTopKSql` pattern).
   *
   * Unlike the PQ/OPQ family, candidates are scored with EXACT cosine
   * (the graph bounds exploration instead of quantizing the metric), so
@@ -65,7 +65,7 @@ object GraphAnn {
   /** NN-Descent refinement rounds after the bucketed init. */
   val KnnRounds = 2
   /** Id-chunk size for the diversification links in the init (see
-    * [[knnGraphEdges]]): vectors sharing `vec_id div KnnChunk` are initial
+    * `knnGraphEdges`): vectors sharing `vec_id div KnnChunk` are initial
     * candidates regardless of their cell. */
   val KnnChunk = 12
   /** Per-query beam width during search. */
@@ -216,7 +216,7 @@ object GraphAnn {
 
   /** Graph-ANN top-k for the standard sampled query set (vec_id ≡ 0 mod
     * 50): NN-Descent graph + beam search over the duplicate-collapsed
-    * representatives ([[repsOf]] — the measured sf1 degeneration is the
+    * representatives (`repsOf` — the measured sf1 degeneration is the
     * rationale), output shape identical to the rest of the ANN family
     * `(q_id, n_id, rank, cos)`.
     */

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Mechanics:
   *  - `build` fits codebooks (bounded driver-side sample, the
-  *    [[Similarity.fitPqFrom]] discipline), encodes the corpus, WRITES
+  *    `Similarity.fitPqFrom` discipline), encodes the corpus, WRITES
   *    the code table as an on-disk parquet snapshot (see [[build]] for
   *    why a cached plan is not an index artifact), and records the
   *    corpus' mean quantization error as the drift baseline.
@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *    the grown corpus instead — deterministic, so the result is
   *    bit-identical to `build` on that corpus.
   *  - `topK` serves queries through the SHARED batch scoring tail
-  *    ([[Similarity.adcTopKAgainst]]), so incremental/full index parity is
+  *    (`Similarity.adcTopKAgainst`), so incremental/full index parity is
   *    structural.
   *
   * Scale shape: the drift statistic is one scan-and-aggregate over the
@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
 object IncrementalIndex {
 
   /** The served index artifact. `codes` is an immutable read over
-    * `codesPath` — the ON-DISK code table (see [[snapshotDir]]); `corpus`
+    * `codesPath` — the ON-DISK code table (see `snapshotDir`); `corpus`
     * is the raw `(vec_id, v)` source the index derives from (needed only
     * on the re-fit path); `baseErr` is the fit-time mean quantization
     * error the drift test compares against; `appends` counts no-refit
@@ -289,7 +289,7 @@ object IncrementalIndex {
     * store — the [[graft.ops.TableChecks]] erasure-cascade family's
     * reach into the ANN stack): delete `ids` from the code table WITHOUT
     * a rebuild or re-fit. The snapshot is rewritten minus the erased
-    * rows into a fresh directory and swapped (the [[compact]]
+    * rows into a fresh directory and swapped (the `compact`
     * discipline), so the erased vectors' code BYTES leave disk — a
     * tombstone filter would serve correctly but retain the 8-byte codes,
     * which still leak coarse geometry of the erased vectors (their cell

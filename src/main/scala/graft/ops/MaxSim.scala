@@ -137,7 +137,7 @@ object MaxSim {
     * similarity is an ADC lookup-table sum, never a raw-vector cosine),
     * the per-pair quantized MaxSim takes a [[AdcShortlist]]-deep
     * shortlist, and only the survivors re-attach raw vectors for the
-    * exact re-rank ([[exactTail]], shared with the one-pass serve). At
+    * exact re-rank (`exactTail`, shared with the one-pass serve). At
     * 100 TB the candidate scoring pass reads 8 bytes per chunk instead of
     * 512 — the decompression-free first tier PLAID exists for — and the
     * raw corpus is touched only for |batch| × shortlist docs.
@@ -325,7 +325,7 @@ object MaxSim {
   /** Retrieval-quality metrics of the LSH-shortlisted MaxSim serve
     * against the brute late-interaction truth — closes the multi-vector
     * stack (index → serve → eval) the way `filtered_retrieval_eval`
-    * closes the filtered stack. Shares [[Similarity.evalTailOf]]'s exact
+    * closes the filtered stack. Shares `Similarity.evalTailOf`'s exact
     * bitmask/DECIMAL discipline. Bench-excluded: the truth leg IS the
     * brute anchor. Reads 1.0/1.0/1.0 at both test SFs — the chunk-level
     * banding admits a pair on ANY of fan×tables collisions; the row

@@ -157,7 +157,7 @@ object Multimodal {
 
   /** Perceptual near-dup pairs over any `(doc_id, payload)` frame: dHash
     * fingerprints through the shared segment-blocked Hamming join
-    * ([[Dedup.hammingBlockedPairs]] — exhaustive for maxDist ≤ 3, refused
+    * (`Dedup.hammingBlockedPairs` — exhaustive for maxDist ≤ 3, refused
     * above), so the candidate join is an equi-join, never O(n²).
     */
   def mediaNearDupFrom(media: DataFrame, maxDist: Int = 3): DataFrame = {
@@ -381,7 +381,7 @@ object Multimodal {
   /** The codec boundary — REAL since round 11 (was a PRNG stub through
     * round 10). `decode` computes an actual content-derived descriptor from
     * the payload bytes; `project` applies the learned PCA reduction fitted
-    * by [[fitPcaFrom]]. A production pipeline swaps `decode` for a heavier
+    * by `fitPcaFrom`. A production pipeline swaps `decode` for a heavier
     * image/audio decoder + model; everything around it (per-partition
     * batching, bounded fit sample, literal-embedded oracle) stays as-is.
     */
@@ -592,7 +592,7 @@ object Multimodal {
   /** The registered query surface over [[extractFeatures]]: each projected
     * component as its own rounded scalar column (an `array<double>` cell is
     * not hashable by the driver's pandas-side compare) — oracle-exact since
-    * round 11 via [[extractFeaturesSql]]. Library callers wanting vectors
+    * round 11 via `extractFeaturesSql`. Library callers wanting vectors
     * use [[extractFeatures]] directly.
     */
   def extractFeaturesScalars(spark: SparkSession, dir: String): DataFrame = {

@@ -317,8 +317,8 @@ object PageRank {
     triangleCounts(linkGraph(Tables(spark, dir, "documents")))
 
   /** Weakly-connected components of the link graph — the third member of
-    * the graph-analytics family (authority = [[docPageRank]], clustering
-    * = [[docTriangles]], components = here): a component is a
+    * the graph-analytics family (authority = [[docPageRank]], clustering =
+    * [[docTriangles]], components = here): a component is a
     * syndication/duplication NEIGHBORHOOD, the unit a curation pass
     * samples from so one viral cluster can't dominate a training mix.
     * Closure via the shared [[Dedup.clusterPairs]] machinery (gated
@@ -557,8 +557,8 @@ object PageRank {
   val LpaRounds = 5
 
   /** Label-propagation communities over the link graph — the fourth
-    * member of the graph family (authority = [[docPageRank]], clustering
-    * = [[docTriangles]], reachability = [[docComponents]], communities =
+    * member of the graph family (authority = [[docPageRank]], clustering =
+    * [[docTriangles]], reachability = [[docComponents]], communities =
     * here). Components answer "what is CONNECTED"; communities answer
     * "what is DENSE" — the curation unit for mixing caps when one
     * syndication network spans an entire component but contains several

@@ -489,7 +489,7 @@ object Sampling {
     * instead:
     *  1. bucket docs by `doc_id div B`, where B is sized from the id SPAN
     *    so the bucket count is bounded by cluster parallelism
-    *    ([[shardBucketWidth]]; the span comes from one min/max aggregate —
+    *    (`shardBucketWidth`; the span comes from one min/max aggregate —
     *    a parquet-stats-assisted narrow pass) and the manifest is
     *    provably independent of the choice of B;
     *  2. per-bucket totals via one hash aggregate (≤ bucket-count rows);
@@ -664,7 +664,7 @@ object Sampling {
     *
     * Exactness: shares reduce to count ratios, so the acceptance test is
     * `draw · C_b·T_{b*} < T_b·C_{b*} · 65536` — pure integer cross-
-    * multiplication against the engine's standard 16-bit [[seededKey]]
+    * multiplication against the engine's standard 16-bit `seededKey`
     * draw; products carried as DECIMAL(38,0) (≤ ~1e27 at 10¹¹ docs).
     * The argmax bucket b* orders by the IEEE-double quotient tb/cb —
     * both inputs are exact integers < 2⁵³, so the rounded quotient is

@@ -335,7 +335,7 @@ object Similarity {
     oracleCtx = Some((spark, dir))
 
   /** `ann_ivf_topk` + `semdedup_clusters` oracle entries for the context
-    * dir, or empty when no context is set. The [[fitCentroids]] cache makes
+    * dir, or empty when no context is set. The `fitCentroids` cache makes
     * this at most one fit per (dir, k) per session, shared with the queries
     * themselves.
     */
@@ -463,9 +463,9 @@ object Similarity {
     * so a filtered probe stays a partition-pruned scan; the alternative —
     * filtering AFTER an unfiltered top-k — silently returns < k results
     * whenever fewer than k of the unfiltered top-k share the query's label
-    * (the recall contrast [[graft.ops.SimilaritySpec]] documents).
+    * (the recall contrast `graft.ops.SimilaritySpec` documents).
     *
-    * Probe budgeting is LABEL-AWARE and adaptive ([[adaptiveProbes]]): a
+    * Probe budgeting is LABEL-AWARE and adaptive (`adaptiveProbes`): a
     * fixed nProbe is calibrated for the UNfiltered corpus, but the label
     * cut shrinks each probed cell by ~1/|labels|, so fixed probing starved
     * the candidate pool (measured recall@10 0.41/0.46 at 4/16 probes in
@@ -950,7 +950,7 @@ object Similarity {
     * the re-rank is the standard rounded-cosine release — so the whole
     * composition carries a static EXACT oracle. (The three-tier
     * binary → ADC → exact form composes the same shortlist with
-    * [[adcTopKAgainst]]; the recall bottleneck is the binary tier pinned
+    * `adcTopKAgainst`; the recall bottleneck is the binary tier pinned
     * here, so the two-tier form is what the registry prices.)
     */
   def bqRerankTopK(
@@ -975,7 +975,7 @@ object Similarity {
 
   /** Static EXACT oracle for [[bqRerankTopK]]: the Hamming shortlist CTE
     * (integer window) + the exact-cosine re-rank tail of
-    * [[pqRerankTopKSql]]. */
+    * `pqRerankTopKSql`. */
   def bqRerankTopKSql(k: Int = 10, shortlist: Int = 50): String =
     s"""WITH ev AS (
        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -1213,7 +1213,7 @@ object Similarity {
     * 8-byte code table instead of the 512-byte vectors — scoring is m
     * LUT reads per candidate instead of a 64-dim cosine. Approximate by
     * construction (quantization error), so the spec pins a recall floor
-    * against the brute anchor; the oracle ([[pqAdcTopKSql]]) is
+    * against the brute anchor; the oracle (`pqAdcTopKSql`) is
     * nonetheless EXACT, because both engines quantize and score from the
     * identical codebook literals.
     *
@@ -1465,7 +1465,7 @@ object Similarity {
 
   /** [[annFilteredTopK]]'s ADC tier — metadata-filtered serving over the
     * CODES table: the same fixed ≤100-query batch, the same label-aware
-    * ADAPTIVE probe budget ([[adaptiveProbes]] — probe score-ranked cells
+    * ADAPTIVE probe budget (`adaptiveProbes` — probe score-ranked cells
     * until k·α same-label candidates are in reach), and the per-query
     * label predicate pruned through the (cell, label) candidate equi-join
     * BEFORE any ADC arithmetic, then scored by LUT reads exactly as
@@ -1543,7 +1543,7 @@ object Similarity {
 
   /** IVF+PQ with RESIDUAL encoding — the production IndexIVFPQ layout:
     * [[ivfPqTopK]] PQ-encodes raw vectors, this encodes
-    * `r = v − centroid(cell(v))` (codebooks from [[fitPqResidual]]), and the
+    * `r = v − centroid(cell(v))` (codebooks from `fitPqResidual`), and the
     * reconstruction is `v̂ = c + r̂`, so the ADC score is
     * `⟨q, c(cell)⟩ + ⟨q, r̂⟩ ≈ ⟨q, v⟩` — the per-probed-cell constant plus
     * the standard LUT of RAW-query·residual-codeword dots. (This is the
@@ -1556,7 +1556,7 @@ object Similarity {
     * this same `⟨q, c⟩ + ⟨q, r̂⟩` estimator (raw-query LUT + per-cell
     * constant, identical add order) with the residual column and both
     * fitted models re-derived from embedded literals
-    * ([[ivfPqResidualTopKSql]]).
+    * (`ivfPqResidualTopKSql`).
     */
   def ivfPqResidualTopK(
       spark: SparkSession, dir: String, k: Int = 10,
@@ -1626,9 +1626,9 @@ object Similarity {
     * scan + `shortlist` (not corpus-sized) exact cosines per query; the
     * final ordering is exact over whatever the index recalled — the spec
     * pins that re-ranking dominates the raw residual ADC against the
-    * brute anchor. Oracle is EXACT: the [[ivfPqResidualTopKSql]] CTEs
+    * brute anchor. Oracle is EXACT: the `ivfPqResidualTopKSql` CTEs
     * produce the identical rounded-ADC shortlist, and the re-rank is the
-    * same `list_cosine_similarity` tail as [[pqRerankTopKSql]].
+    * same `list_cosine_similarity` tail as `pqRerankTopKSql`.
     */
   def ivfPqResidualRerankTopK(
       spark: SparkSession, dir: String, k: Int = 10, shortlist: Int = 50,
@@ -1838,7 +1838,7 @@ object Similarity {
 
   /** OPQ-ADC top-k: [[pqAdcTopK]] with the learned rotation applied to
     * corpus and queries before encoding/LUT — same 8-byte-code scan, same
-    * ADC tail ([[adcTopKAgainst]] is shared), strictly better-or-equal
+    * ADC tail (`adcTopKAgainst` is shared), strictly better-or-equal
     * codebook fit. Scale shape identical to [[pqAdcTopK]]: the rotation
     * is a per-row projection (64 codegen dot products) folded into the
     * encode pass, not a separate job.
@@ -1864,12 +1864,12 @@ object Similarity {
     * budget on within-cell signal. Orthogonality makes the rotated-space
     * estimator `⟨Rq, c⟩ + ⟨Rq, r̂⟩` an estimator of `⟨q, v⟩` directly.
     * The models fit jointly on the rotated bounded sample (rotation from
-    * [[fitOpqFrom]], whose plain-PQ objective is the standard OPQ
+    * `fitOpqFrom`, whose plain-PQ objective is the standard OPQ
     * pre-transform training; cells + residual books then fit downstream
     * of it), cached per (dir, geometry) so query and oracle share one
     * fit. Plan and scale shape are [[ivfPqResidualTopK]]'s verbatim —
     * the rotation is a projection on the scan, everything downstream
-    * identical ([[ivfPqResidualTopKFrom]] is literally shared).
+    * identical (`ivfPqResidualTopKFrom` is literally shared).
     *
     * Measured honestly (sf0.01, recall@10 vs brute): chain 0.23 vs
     * residual-without-rotation 0.26 vs flat OPQ 0.36 — on THIS corpus
@@ -2021,9 +2021,9 @@ object Similarity {
   /** INDEXED hybrid serving — [[hybridRrfServed]]'s exact twin with BOTH
     * retriever legs riding session-held index artifacts: the lexical leg
     * scores the pinned query batch against the BM25 model derived from the
-    * WRITTEN postings snapshot ([[TextAnalysis.servedBm25Model]] /
+    * WRITTEN postings snapshot (`TextAnalysis.servedBm25Model` /
     * [[TextIndex.servingIndex]]), the dense leg probes the persisted LSH
-    * band table ([[servedLshIndex]]). Per-query cost is the two serving
+    * band table (`servedLshIndex`). Per-query cost is the two serving
     * tails + the RRF fuse — the corpus-scale model builds (tokenize,
     * bucket projection) happen at index build, never at query time, which
     * is the only shape that survives 100 TB. Fusion arithmetic is

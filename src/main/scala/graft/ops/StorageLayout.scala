@@ -58,7 +58,7 @@ object StorageLayout {
 
   /** Revenue by order priority off a co-located orders⋈lineitem join: both
     * sides bucketed on the order key with the same bucket count, so the join
-    * itself needs no Exchange (pinned by [[graft.StorageLayoutSpec]]); the
+    * itself needs no Exchange (pinned by `graft.StorageLayoutSpec`); the
     * only shuffle left is the 5-group aggregate above it. The merge hint
     * keeps the plan on the bucket-aligned sort-merge path even at test SF,
     * where the optimizer would otherwise broadcast `orders` and the
@@ -109,7 +109,7 @@ object StorageLayout {
 
   /** Seven-day activity summary over the date-partitioned events sink. The
     * `day` predicate is a partition filter: the scan lists 7 of the 30 day
-    * directories and reads nothing else ([[graft.StorageLayoutSpec]] pins
+    * directories and reads nothing else (`graft.StorageLayoutSpec` pins
     * `PartitionFilters` non-empty and the pruned-partition count).
     * `day` is cast back to string because partition-column type inference
     * may surface ISO dates as DATE; the cast renders the same ISO form
@@ -147,8 +147,8 @@ object StorageLayout {
   /** Z-ORDER clustering manifest — the third leg of the layout family
     * (bucketing co-locates joins, partitioning prunes one column,
     * Z-order makes data skipping work on TWO columns at once): events
-    * keyed by the Morton interleave of (user bucket, value bucket), chunk
-    * = the key's top bits, reported as per-chunk min/max of BOTH
+    * keyed by the Morton interleave of (user bucket, value bucket), chunk =
+    * the key's top bits, reported as per-chunk min/max of BOTH
     * dimensions. Because a Z-chunk fixes the high bits of each dim, every
     * chunk's footprint is a small axis-aligned box (≤ 2^(ZBits−4) per dim
     * at the default shift) — so when chunks become output files
@@ -216,7 +216,7 @@ object StorageLayout {
     * predicate on (ux, vy) — both plain min/max comparisons that push to
     * the parquet scan, where the clustered files' tight footer stats turn
     * them into file/row-group SKIPS rather than reads
-    * ([[graft.ops.StorageLayoutSpec]] measures the file-footprint
+    * (`graft.ops.StorageLayoutSpec` measures the file-footprint
     * contrast vs an event_id-ordered layout of the same rows). The
     * aggregate itself is layout-independent, which is exactly what the
     * oracle (raw events, ux/vy re-derived inline) checks.
@@ -281,7 +281,7 @@ object StorageLayout {
     * exist — instead Spark plants a `dynamicpruningexpression` on the
     * fact scan's PartitionFilters (reusing the join's broadcast of the
     * dim), and the 100-TB event log still lists only the qualifying day
-    * directories. [[graft.ops.StorageLayoutSpec]] pins the pruning
+    * directories. `graft.ops.StorageLayoutSpec` pins the pruning
     * expression in the executed plan.
     *
     * The dim side casts to the fact's partition-column dtype (partition

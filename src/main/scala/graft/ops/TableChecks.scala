@@ -456,7 +456,7 @@ object TableChecks {
     *
     * Determinism convention: production DP draws from a secret RNG; here
     * the draw is the engine's standard seeded md5 surrogate
-    * ([[graft.ops.Sampling.seededKey]] argument — re-runs and other
+    * (`graft.ops.Sampling.seededKey` argument — re-runs and other
     * engines must agree on the released table, which is also what makes
     * the mechanism oracle-checkable). u = (k + ½)/2¹⁶ from the first 4
     * hex nibbles of md5("dp1:" ‖ cell key) is a dyadic rational, so

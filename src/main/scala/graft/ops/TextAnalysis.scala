@@ -211,7 +211,7 @@ object TextAnalysis {
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents").select(
       col("doc_id"),
-      md5(lower(graft.pipeline.TextClean.collapseWs(col("text")))).as("fp"))
+      md5(lower(graft.functions.CollapseWhitespace(col("text")))).as("fp"))
       .orderBy("doc_id")
 
   val fingerprintSql: String =
@@ -1168,7 +1168,7 @@ object TextAnalysis {
 
   /** INDEXED PRF serving — [[bm25PrfTopK]]'s exact twin riding the
     * session-held model over the written postings snapshot
-    * ([[servedBm25Model]]): both scoring passes, the feedback join, and
+    * (`servedBm25Model`): both scoring passes, the feedback join, and
     * the expansion ranking run against stored-index aggregates, never a
     * corpus text scan — the production shape where a PRF query's cost is
     * the serving tail only, with the index build paid once at ingest.
@@ -1280,7 +1280,7 @@ object TextAnalysis {
   /** INDEXED QLD serving — [[qldTopK]]'s exact twin riding the
     * session-held model over the written postings snapshot: the language
     * model's statistics (cf, C, dl) are mergeable aggregates of the
-    * postings stored by [[servedLexModel]] (dl attached to the stored
+    * postings stored by `servedLexModel` (dl attached to the stored
     * postings row), so the indexed serve is exact by construction and a
     * query pays only the serving tail. Same oracle as the one-shot form. */
   def qldTopKIndexed(spark: SparkSession, dir: String, k: Int = 10,

@@ -33,7 +33,7 @@ import graft.Overlap.overlap
   * an `INSERT INTO`, and df/dl/stats incrementally-maintained aggregate
   * tables; the serve-time re-derivation here is one index-sized (never
   * text-sized) aggregate pass, which the shared scoring tail
-  * ([[TextAnalysis.bm25Against]]) already performs.
+  * (`TextAnalysis.bm25Against`) already performs.
   */
 object TextIndex {
 
@@ -48,7 +48,7 @@ object TextIndex {
 
   /** Full build: tokenize + aggregate the corpus once, WRITE the postings
     * snapshot (with the scan-parallelism floor — the postings are every
-    * serve's scoring fan-out side, see [[IncrementalIndex.writeServing]]),
+    * serve's scoring fan-out side, see `IncrementalIndex.writeServing`),
     * read it back as the immutable serving frame. */
   def build(docs: DataFrame): InvertedIndex = {
     val (tf, path) =
@@ -179,13 +179,13 @@ object TextIndex {
     * indexed retrieval serve — [[TextAnalysis.bm25PrfTopKIndexed]],
     * [[TextAnalysis.qldTopKIndexed]], the hybrid's lexical leg. This is the
     * amortized-build convention the fitted-model caches
-    * ([[Similarity.fitPq]] etc.) already follow: in production the
+    * (`Similarity.fitPq` etc.) already follow: in production the
     * snapshot is a catalog table maintained by `append`/`remove`, and a
     * query NEVER pays the corpus tokenize — here the first call per
     * directory pays it and the session holds the artifact. (Keyed by dir;
     * assumes an immutable corpus table, exactly like the fit caches — a
     * LIVE corpus goes through the explicit build/append lifecycle instead.
-    * Session-guarded like [[TextAnalysis.servedBm25Model]]: an entry bound
+    * Session-guarded like `TextAnalysis.servedBm25Model`: an entry bound
     * to another session is rebuilt, never returned — and its superseded
     * snapshot is released ONLY once that session has STOPPED (a second
     * LIVE session must not delete files the first still reads; two live

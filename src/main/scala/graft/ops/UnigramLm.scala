@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * three choices:
   *  - piece scores are INTEGER-QUANTIZED negative log-probs,
   *    `cost(p) = round(ln(C/c_p)·10⁶)`, so Viterbi compares integers, not
-  *    floats; [[quantCost]]'s margin guard asserts every quantization sits ≥ 10⁻⁷
+  *    floats; `quantCost`'s margin guard asserts every quantization sits ≥ 10⁻⁷
   *    from a rounding boundary (libm vs JVM `ln` disagree by ≤ ~4·10⁻⁹ at
   *    this scale, 25× inside the margin), turning the one cross-engine
   *    float into a CHECKED invariant instead of a hope;
@@ -419,9 +419,9 @@ object UnigramLm {
        |FROM p$EmIters
        |ORDER BY n_piece DESC, piece""".stripMargin
 
-  /** The stats oracle runs one more Viterbi pass (best$EmIters) under the
-    * FINAL model — exactly what serving does — then joins the corpus
-    * tokens back on the distinct word. */
+  /** The stats oracle runs one more Viterbi pass (the `best<EmIters>` CTE)
+    * under the FINAL model — exactly what serving does — then joins the
+    * corpus tokens back on the distinct word. */
   val unigramSegmentStatsSql: String =
     s"""WITH RECURSIVE ${chainCtes(EmIters + 1)},
        |toks AS (

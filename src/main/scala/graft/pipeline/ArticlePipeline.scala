@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.Overlap.overlap
@@ -14,19 +15,36 @@ import graft.Overlap.overlap
   * The reference materializes a new frame after every step; here the whole
   * chain is ONE lazy logical plan, built in one place for both entry points
   * — the clean/date kernels run in one codegen'd stage after the scan's
-  * repartition, the validation kernels in one after dedup. `run` caches it
-  * twice: the cleaned and dated rows before the incomplete-row filter (the
-  * file is parsed once, and one aggregate over this cache gives the loaded
-  * and complete counts), and the validated frame, whose three readers — the
-  * statistics aggregate, the failed-row listing and the sink — run side by
-  * side on [[graft.Overlap]].
+  * repartition, the validation kernels in one after dedup. `run` stores it
+  * twice. The cleaned and dated rows before the incomplete-row filter are
+  * cached: the file is parsed once, and one aggregate over this cache gives
+  * the loaded and complete counts. The validated frame is an eager local
+  * checkpoint, built beside that aggregate. It holds rows as they are, so
+  * its readers skip the in-memory cache's columnar encode and decode; the
+  * statistics aggregate, the failed-row listing and the sink then run side
+  * by side on `graft.Overlap`.
   */
 object ArticlePipeline {
 
   private val flagCols = Seq("errors", "passed", "reason", "message", "row_id")
 
-  /** Result bundle: the cleaned+flagged frame, its stats, and the report. */
-  case class Result(cleaned: DataFrame, stats: QualityStats, report: String)
+  /** Result bundle: the cleaned+flagged frame, its stats, and the report.
+    *
+    * `cleaned` reads a local checkpoint: rows held in the executors' block
+    * managers, with no lineage behind them. A lost executor loses the rows
+    * for good, and `cleaned.unpersist()` does not free them; call
+    * [[release]] once the frame is no longer read.
+    */
+  case class Result(cleaned: DataFrame, stats: QualityStats, report: String) {
+
+    /** Frees the checkpoint's blocks now rather than when its RDD is
+      * garbage-collected. `cleaned` cannot be read afterwards. */
+    def release(): Unit =
+      cleaned.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+        case _ =>
+      }
+  }
 
   /** Build the cleaned + validation-flagged frame without any actions. */
   def cleanAndFlag(raw: DataFrame, cfg: ValidationConfig = ValidationConfig()): DataFrame =
@@ -69,10 +87,10 @@ object ArticlePipeline {
 
     val dated = datedRows(ArticleSchema.load(spark, inputPath)).cache()
     val kept = CleanSteps.completePredicate(dated).getOrElse(lit(true))
-    // the validated frame's plan is built and cached while the funnel runs
+    // the validated frame is checkpointed while the funnel runs
     val (funnel, flagged) = overlap(spark)(
       dated.agg(count(lit(1)), count(when(kept, 1))).head(),
-      flag(CleanSteps.dropIncomplete(dated), cfg).cache())
+      flag(CleanSteps.dropIncomplete(dated), cfg).localCheckpoint())
     val (originalCount, afterDrop) = (funnel.getLong(0), funnel.getLong(1))
 
     // Global sort only on the pretty-array (golden-parity, test-scale) path —

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import TextClean.isBlank
+import graft.functions.IsBlank
 
 /** Required-field filter (reference O5) and keep-first dedup (reference O6). */
 object CleanSteps {
@@ -14,7 +14,7 @@ object CleanSteps {
     * non-blank. `None` when no required column is present.
     */
   def completePredicate(df: DataFrame, required: Seq[String] = requiredCols): Option[Column] =
-    required.filter(df.columns.contains).map(c => !isBlank(col(c))).reduceOption(_ && _)
+    required.filter(df.columns.contains).map(c => !IsBlank(col(c))).reduceOption(_ && _)
 
   /** Drop rows where any present required column is blank
     * (cleaner.py:85-103). Absent columns are skipped silently, matching the

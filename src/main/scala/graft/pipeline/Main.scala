@@ -27,6 +27,7 @@ object Main {
     println(s"  Cleaned data:    $output (${s.passed} records)")
     println(s"  Quality report:  $report")
     println(s"  Summary: ${s.originalCount} loaded -> ${s.cleanedCount} after cleaning -> ${s.passed} valid (saved)")
+    result.release()
     spark.stop()
   }
 }

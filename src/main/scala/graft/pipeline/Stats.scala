@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Overlap.overlap
 
-import TextClean.isBlank
+import graft.functions.IsBlank
 
 case class ReasonCount(reason: String, count: Long, firstRowId: Long)
 case class FailedDetail(index: Long, reason: String, message: String)
@@ -41,8 +41,10 @@ case class QualityStats(
   * code plus the passed rows' null group — whose few rows are collected
   * and summed. The failure-detail listing and its positions run side by
   * side with it on [[graft.Overlap]]; the positions take one more job,
-  * only when the listing passes its gate (see `failureDetails`). Call on a
-  * cached flagged frame.
+  * only when the listing passes its gate (see `failureDetails`). The frame
+  * is read up to three times, so pass a stored one: `ArticlePipeline.run`
+  * passes its local checkpoint, which its readers scan as rows, with no
+  * columnar decode.
   */
 object Stats {
 
@@ -113,7 +115,7 @@ object Stats {
     // documented deviation (SURVEY.md §0 item 2 / H3), pinned in
     // GoldenPipelineSpec.
     val complAggs = dataColumns(flagged).map(c =>
-      count(when(!isBlank(col(c).cast("string")), 1)).as(s"_ok_$c"))
+      count(when(!IsBlank(col(c).cast("string")), 1)).as(s"_ok_$c"))
     val dateAggs = dateColumn(flagged).toSeq.flatMap { c =>
       // report re-parses with pandas to_datetime(errors="coerce"); the column
       // holds ISO strings (or raw `published`), so the pipeline's parser suffices

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.HtmlUnescape
+import graft.functions.{CollapseWhitespace, HtmlUnescape}
 
 /** Text normalization (reference O2, cleaner.py:23-48).
   *
@@ -11,32 +11,19 @@ import graft.functions.HtmlUnescape
   * whitespace run to a single ASCII space, strip. Pure column expressions —
   * the whole clean is one projection fused by whole-stage codegen.
   *
-  * Java-regex gotcha (SURVEY.md §2.2 item 5): `\s` in Java is ASCII-only, so
-  * `&nbsp;` → U+00A0 would survive without the `(?U)` (UNICODE_CHARACTER_CLASS)
-  * flag. Python's `\s+` is Unicode-aware by default; `(?U)` restores parity.
+  * Whitespace is Unicode whitespace, as Python's `\s` is (SURVEY.md §2.2
+  * item 5): `&nbsp;` decodes to U+00A0, which Java's ASCII-only `\s` would
+  * keep. The whitespace kernels (`CollapseWhitespace` here, and the blank
+  * test `IsBlank` and strip `StripWhitespace` the other steps use) are
+  * each one generated call that applies Java's `(?U)\s` predicate and
+  * returns what the `(?U)` regex form did, without running a regex per
+  * row.
   */
 object TextClean {
 
-  /** Missing-value predicate (reference O4, cleaner.py:73-82 /
-    * validator.py:26-35): null, empty, or whitespace-only. Whitespace means
-    * Python-`strip` whitespace (any Unicode space, tab, newline) — Spark's
-    * `trim` strips only 0x20, which would mis-classify a tab-only field.
-    */
-  def isBlank(c: Column): Column = c.isNull || c.rlike("(?U)^\\s*$")
-
-  /** Python `str.strip()` equivalent: strips *all* Unicode whitespace from
-    * both ends (Spark's `trim` handles only the ASCII space character).
-    */
-  def pyStrip(c: Column): Column =
-    regexp_replace(c, "(?U)^\\s+|(?U)\\s+$", "")
-
-  /** Unicode-aware whitespace collapse + trim, without entity decoding. */
-  def collapseWs(c: Column): Column =
-    trim(regexp_replace(c, "(?U)\\s+", " "))
-
   /** Full clean: null-safe, entity-decode, collapse, trim. Never null. */
   def cleanText(c: Column): Column =
-    collapseWs(HtmlUnescape(coalesce(c.cast("string"), lit(""))))
+    CollapseWhitespace(HtmlUnescape(coalesce(c.cast("string"), lit(""))))
 
   /** Columns the reference cleans when present (cleaner.py:317). */
   val defaultTextCols: Seq[String] = Seq("title", "content", "author", "source", "url")

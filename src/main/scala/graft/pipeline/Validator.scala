@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import TextClean.{isBlank, pyStrip}
+import graft.functions.{IsBlank, StripWhitespace}
 
 /** Validation thresholds (reference O21, validator.py:14-17).
   * README flags these as the customization surface.
@@ -49,18 +49,18 @@ object Validator {
     def colOr(name: String): Column =
       if (df.columns.contains(name)) col(name).cast("string") else lit(null).cast("string")
 
-    val title = pyStrip(colOr("title"))
-    val content = pyStrip(colOr("content"))
-    val url = pyStrip(colOr("url"))
+    val title = StripWhitespace(colOr("title"))
+    val content = StripWhitespace(colOr("content"))
+    val url = StripWhitespace(colOr("url"))
 
-    val titleMissing = isBlank(title)
+    val titleMissing = IsBlank(title)
     val titleTooLong = !titleMissing && length(title) > cfg.maxTitleLength
 
-    val contentMissing = isBlank(content)
+    val contentMissing = IsBlank(content)
     val contentShort = !contentMissing && length(content) < cfg.minContentLength
     val contentLong = !contentMissing && !contentShort && length(content) > cfg.maxContentLength
 
-    val urlMissing = isBlank(url)
+    val urlMissing = IsBlank(url)
     val urlBadScheme = !urlMissing &&
       !(url.startsWith("http://") || url.startsWith("https://"))
     val urlBadFormat = !urlMissing && !urlBadScheme && !url.rlike("(?i)^https?://.+")
@@ -71,7 +71,7 @@ object Validator {
     val pd = colOr("published_date")
     val pub = colOr("published")
     val chosen = when(pd.isNull || pd === lit(""), pub).otherwise(pd)
-    val publishedMissing = isBlank(chosen)
+    val publishedMissing = IsBlank(chosen)
 
     Seq(
       (titleMissing, "missing_title", lit("Title is missing or empty.")),

@@ -56,7 +56,7 @@ case class AsofJoinNode(
 
 /** Planner rule: [[AsofJoinNode]] → [[AsofMergeJoinExec]]. Registered via
   * `GraftExtensions` (injectPlannerStrategy) or post-hoc through
-  * [[GraftPlanBridge.addStrategy]].
+  * `GraftPlanBridge.addStrategy`.
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

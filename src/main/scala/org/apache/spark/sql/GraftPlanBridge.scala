@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one `private[sql]` seam the engine needs: turning a hand-built
-  * [[LogicalPlan]] node into a [[DataFrame]]. Spark's own surface for this
+  * `LogicalPlan` node into a [[DataFrame]]. Spark's own surface for this
   * (`Dataset.ofRows`) is package-private to `org.apache.spark.sql`, so this
   * bridge lives in that package — the standard pattern every Spark-native
   * library (Delta, Sedona, Iceberg's Spark module) uses to register custom

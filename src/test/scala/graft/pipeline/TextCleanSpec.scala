@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Arbitrary, Gen}
 
 import graft.SparkSuite
+import graft.functions.IsBlank
 
 class TextCleanSpec extends SparkSuite {
   import spark.implicits._
@@ -84,7 +85,7 @@ class TextCleanSpec extends SparkSuite {
     val df = Seq(("x", false), (" ", true), ("", true), (null, true),
       ("\t\n", true), (" ", true), (" .", false))
       .toDF("s", "expected")
-    val bad = df.filter(TextClean.isBlank($"s") =!= $"expected").count()
+    val bad = df.filter(IsBlank($"s") =!= $"expected").count()
     assert(bad == 0)
   }
 }
