@@ -58,7 +58,7 @@ object ScaleData {
       val maxShift = (copies - 1).toLong * KeyStride
       val maxRow = base.agg(
         max(col(keys.head)).cast("long").as(keys.head),
-        keys.tail.map(k => max(col(k)).cast("long").as(k)): _*).head
+        keys.tail.map(k => max(col(k)).cast("long").as(k)): _*).head()
       keys.foreach { k =>
         val headroom = base.schema(k).dataType match {
           case LongType    => Long.MaxValue - maxShift

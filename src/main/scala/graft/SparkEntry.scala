@@ -7,6 +7,7 @@ import graft.ops.{Analytics, AsofJoin, BpeTrain, Centroid, Clustering, Contrasti
   IncrementalAgg, MarketBasket, MaxSim, Multimodal, PageRank, QualityModel, RangeJoin, Sampling,
   SetSimJoin, SimHashOracle, Similarity, Skew, StorageLayout, TableChecks, TextAnalysis,
   TextIndex, TimeSeries, Tpch, TpchAdapted, TpchTail, UnigramLm}
+import graft.ops.Similarity.{fitCentroids, fitOpq, fitOpqIvf, fitPq, fitPqResidual}
 
 import QuerySpec.{Check, Fitted, Oracle, RowsOnly}
 
@@ -20,11 +21,11 @@ object QuerySpec {
   /** DuckDB SQL over the same parquet tables. A thunk, so listing the
     * registry never renders an oracle. */
   final case class Oracle(sql: () => String) extends Check
-  /** The oracle embeds a data-fitted model (centroids, codebooks, PCA, LR
-    * weights), so it exists only once the fitted-oracle contexts are bound:
-    * `Similarity`, `Multimodal` and `QualityModel.setOracleContext`, which
-    * `Verify` calls before its dump. */
-  case object Fitted extends Check
+  /** DuckDB SQL that embeds a model fitted on the sweep's data (centroids,
+    * codebooks, PCA, LR weights), rendered for a (session, sf dir). The
+    * fit comes from [[graft.Artifacts]], so the oracle embeds the very
+    * model the query builder plans with. */
+  final case class Fitted(sql: (SparkSession, String) => String) extends Check
   /** No oracle: the rows are checked by a spec instead, for this reason. */
   final case class RowsOnly(reason: String) extends Check
 }
@@ -51,6 +52,10 @@ object SparkEntry {
     Tpch.q5LocalSupplier(spark, "/root/testdata/sf0.001")
 
   private def oracle(sql: => String): Check = Oracle(() => sql)
+
+  /** A fitted oracle: `fit`'s model for the (session, dir), rendered by `sql`. */
+  private def fitted[M](fit: (SparkSession, String) => M)(sql: M => String): Check =
+    Fitted((spark, dir) => sql(fit(spark, dir)))
 
   /** Every registered query, in bench order. The bench set is every query
     * that is scale-shaped; each unbenched entry sits next to the benched
@@ -81,40 +86,57 @@ object SparkEntry {
     // below: the truth leg IS the brute anchor
     QuerySpec("retrieval_eval", Similarity.retrievalEval(_, _),
       oracle(Similarity.retrievalEvalSql()), benched = false),
-    QuerySpec("ann_ivf_topk", Similarity.annIvfTopK(_, _), Fitted),
-    QuerySpec("ivf_retrieval_eval", Similarity.ivfRetrievalEval(_, _), Fitted, benched = false),
-    QuerySpec("ann_filtered_topk", Similarity.annFilteredTopK(_, _), Fitted),
+    QuerySpec("ann_ivf_topk", Similarity.annIvfTopK(_, _),
+      fitted(fitCentroids(_, _))(Similarity.annIvfTopKSql(_))),
+    QuerySpec("ivf_retrieval_eval", Similarity.ivfRetrievalEval(_, _),
+      fitted(fitCentroids(_, _))(Similarity.ivfRetrievalEvalSql(_)), benched = false),
+    QuerySpec("ann_filtered_topk", Similarity.annFilteredTopK(_, _),
+      fitted(fitCentroids(_, _))(Similarity.annFilteredTopKSql(_))),
     // unbenched: the filtered stack's brute anchor
     QuerySpec("ann_filtered_brute", Similarity.annFilteredBrute(_, _),
       oracle(Similarity.annFilteredBruteSql), benched = false),
     QuerySpec("filtered_retrieval_eval", Similarity.filteredRetrievalEval(_, _),
-      Fitted, benched = false),
-    QuerySpec("ivf_pq_filtered_topk", Similarity.ivfPqFilteredTopK(_, _), Fitted),
-    QuerySpec("semdedup_clusters", Similarity.semDedup, Fitted),
-    QuerySpec("pq_adc_topk", Similarity.pqAdcTopK(_, _), Fitted),
-    QuerySpec("ivf_pq_topk", Similarity.ivfPqTopK(_, _), Fitted),
-    QuerySpec("ivf_pq_residual_topk", Similarity.ivfPqResidualTopK(_, _), Fitted),
-    QuerySpec("opq_topk", Similarity.opqTopK(_, _), Fitted),
-    QuerySpec("ivf_pq_residual_rerank_topk", Similarity.ivfPqResidualRerankTopK(_, _), Fitted),
-    QuerySpec("opq_ivf_pq_topk", Similarity.opqIvfPqTopK(_, _), Fitted),
-    QuerySpec("knn_graph_topk", GraphAnn.knnGraphTopK(_, _), Fitted),
+      fitted(fitCentroids(_, _))(Similarity.filteredRetrievalEvalSql(_)), benched = false),
+    QuerySpec("ivf_pq_filtered_topk", Similarity.ivfPqFilteredTopK(_, _),
+      Fitted((s, d) => Similarity.ivfPqFilteredTopKSql(fitCentroids(s, d), fitPq(s, d)))),
+    QuerySpec("semdedup_clusters", Similarity.semDedup,
+      fitted(fitCentroids(_, _))(Similarity.semDedupSql(_))),
+    QuerySpec("pq_adc_topk", Similarity.pqAdcTopK(_, _),
+      fitted(fitPq(_, _))(Similarity.pqAdcTopKSql(_))),
+    QuerySpec("ivf_pq_topk", Similarity.ivfPqTopK(_, _),
+      Fitted((s, d) => Similarity.ivfPqTopKSql(fitCentroids(s, d), fitPq(s, d)))),
+    QuerySpec("ivf_pq_residual_topk", Similarity.ivfPqResidualTopK(_, _),
+      Fitted((s, d) => Similarity.ivfPqResidualTopKSql(fitCentroids(s, d), fitPqResidual(s, d)))),
+    QuerySpec("opq_topk", Similarity.opqTopK(_, _), fitted(fitOpq(_, _)) {
+      case (rot, books) => Similarity.opqTopKSql(rot, books) }),
+    QuerySpec("ivf_pq_residual_rerank_topk", Similarity.ivfPqResidualRerankTopK(_, _),
+      Fitted((s, d) =>
+        Similarity.ivfPqResidualRerankTopKSql(fitCentroids(s, d), fitPqResidual(s, d)))),
+    QuerySpec("opq_ivf_pq_topk", Similarity.opqIvfPqTopK(_, _), fitted(fitOpqIvf(_, _)) {
+      case (rot, cent, books) => Similarity.opqIvfPqTopKSql(rot, cent, books) }),
+    QuerySpec("knn_graph_topk", GraphAnn.knnGraphTopK(_, _),
+      fitted(fitCentroids(_, _))(GraphAnn.knnGraphTopKSql(_))),
     QuerySpec("mmr_rerank_topk", Similarity.mmrRerankTopK(_, _),
       oracle(Similarity.mmrRerankTopKSql())),
-    QuerySpec("pq_rerank_topk", Similarity.pqRerankTopK(_, _), Fitted),
+    QuerySpec("pq_rerank_topk", Similarity.pqRerankTopK(_, _),
+      fitted(fitPq(_, _))(Similarity.pqRerankTopKSql(_))),
     QuerySpec("sq8_topk", Similarity.sq8TopK(_, _), oracle(Similarity.sq8TopKSql)),
     QuerySpec("bq_hamming_topk", Similarity.bqHammingTopK(_, _),
       oracle(Similarity.bqHammingTopKSql)),
     QuerySpec("bq_rerank_topk", Similarity.bqRerankTopK(_, _),
       oracle(Similarity.bqRerankTopKSql())),
-    QuerySpec("bq_adc_rerank_topk", Similarity.bqAdcRerankTopK(_, _), Fitted),
+    QuerySpec("bq_adc_rerank_topk", Similarity.bqAdcRerankTopK(_, _),
+      fitted(fitPq(_, _))(Similarity.bqAdcRerankTopKSql(_))),
     QuerySpec("maxsim_topk", MaxSim.maxSimTopK(_, _), oracle(MaxSim.maxSimTopKSql())),
     // unbenched: the multi-vector stack's brute anchor
     QuerySpec("maxsim_brute", MaxSim.maxSimBrute(_, _),
       oracle(MaxSim.maxSimBruteSql()), benched = false),
     QuerySpec("maxsim_retrieval_eval", MaxSim.maxSimRetrievalEval(_, _),
       oracle(MaxSim.maxSimRetrievalEvalSql()), benched = false),
-    QuerySpec("maxsim_adc_topk", MaxSim.maxSimAdcTopK(_, _), Fitted),
-    QuerySpec("maxsim_adc_eval", MaxSim.maxSimAdcEval(_, _), Fitted, benched = false),
+    QuerySpec("maxsim_adc_topk", MaxSim.maxSimAdcTopK(_, _),
+      fitted(fitPq(_, _))(MaxSim.maxSimAdcTopKSql(_))),
+    QuerySpec("maxsim_adc_eval", MaxSim.maxSimAdcEval(_, _),
+      fitted(fitPq(_, _))(MaxSim.maxSimAdcEvalSql(_)), benched = false),
     QuerySpec("containment_pairs", Dedup.containmentPairs(_, _), oracle(Dedup.containmentSql)),
     QuerySpec("simhash_near_dup", Dedup.simhashNearDup(_, _),
       oracle(SimHashOracle.simhashNearDupSql)),
@@ -405,11 +427,14 @@ object SparkEntry {
     QuerySpec("unigram_segment_stats", UnigramLm.unigramSegmentStats(_, _),
       oracle(UnigramLm.unigramSegmentStatsSql), benched = false),
     QuerySpec("quality_score", TextAnalysis.qualityScore, oracle(TextAnalysis.qualityScoreSql)),
-    QuerySpec("quality_lr_score", QualityModel.qualityLrScore, Fitted),
-    QuerySpec("lr_eval_metrics", QualityModel.lrEvalMetrics, Fitted),
+    QuerySpec("quality_lr_score", QualityModel.qualityLrScore,
+      fitted(QualityModel.fitCached)(QualityModel.qualityLrScoreSql)),
+    QuerySpec("lr_eval_metrics", QualityModel.lrEvalMetrics,
+      fitted(QualityModel.fitCached)(QualityModel.lrEvalMetricsSql)),
     QuerySpec("conformal_calibration", QualityModel.conformalCalibration(_, _),
       oracle(QualityModel.conformalCalibrationSql)),
-    QuerySpec("quality_weighted_sample", QualityModel.qualityWeightedSample(_, _), Fitted),
+    QuerySpec("quality_weighted_sample", QualityModel.qualityWeightedSample(_, _),
+      fitted(QualityModel.fitCached)(QualityModel.qualityWeightedSampleSql(_))),
     QuerySpec("dsir_weights", QualityModel.dsirWeights(_, _), oracle(QualityModel.dsirWeightsSql)),
     QuerySpec("lang_id", TextAnalysis.langId, oracle(TextAnalysis.langIdSql)),
     QuerySpec("lang_id_confusion", TextAnalysis.langIdConfusion,
@@ -494,7 +519,9 @@ object SparkEntry {
     QuerySpec("frame_sample_digest", Multimodal.frameSampleDigest(_, _),
       oracle(Multimodal.frameSampleDigestSql)),
     QuerySpec("frame_near_dup", Multimodal.frameNearDup(_, _), oracle(Multimodal.frameNearDupSql)),
-    QuerySpec("extract_features", Multimodal.extractFeaturesScalars(_, _), Fitted),
+    QuerySpec("extract_features", Multimodal.extractFeaturesScalars(_, _),
+      fitted(Multimodal.fitPcaCached) {
+        case (mean, comps) => Multimodal.extractFeaturesSql(mean, comps) }),
     // --- storage layout ---
     QuerySpec("bucketed_join_revenue", StorageLayout.bucketedJoinRevenue(_, _),
       oracle(StorageLayout.bucketedJoinRevenueSql)),
@@ -540,7 +567,8 @@ object SparkEntry {
       oracle(Corpus.boilerplateScrubSql)),
     QuerySpec("filter_agreement_kappa", Corpus.filterAgreementKappa,
       oracle(Corpus.filterAgreementKappaSql)),
-    QuerySpec("lr_calibration_bins", QualityModel.lrCalibrationBins, Fitted),
+    QuerySpec("lr_calibration_bins", QualityModel.lrCalibrationBins,
+      fitted(QualityModel.fitCached)(QualityModel.lrCalibrationBinsSql)),
     QuerySpec("decontaminate", Corpus.decontaminate(_, _), oracle(Corpus.decontaminateSql)),
     QuerySpec("decontaminate_bloom", Corpus.decontaminateBloom(_, _), RowsOnly(
       "Bloom bit pattern is engine-specific; superset of decontaminate + fpp bound spec-pinned")),
@@ -560,11 +588,14 @@ object SparkEntry {
 
   lazy val queries: Map[String, Build] = specs.iterator.map(q => q.name -> q.build).toMap
 
-  /** DuckDB oracle SQL per query: the literal oracles, plus the fitted ones
-    * once their contexts are bound (see [[QuerySpec.Fitted]]). */
-  def oracleSql: Map[String, String] =
-    specs.iterator.collect { case QuerySpec(name, _, Oracle(sql), _) => name -> sql() }.toMap ++
-      Similarity.quantizerOracles ++ Multimodal.codecOracles ++ QualityModel.modelOracles
+  /** DuckDB oracle SQL per query over the tables of `dir`: the literal
+    * oracles plus the fitted ones, each rendered from its model's fit for
+    * this (session, dir) (see [[QuerySpec.Fitted]]). */
+  def oracleSql(spark: SparkSession, dir: String): Map[String, String] =
+    specs.iterator.collect {
+      case QuerySpec(name, _, Oracle(sql), _) => name -> sql()
+      case QuerySpec(name, _, Fitted(sql), _) => name -> sql(spark, dir)
+    }.toMap
 
   /** The headline bench set, in sweep order. */
   val benchQueries: Seq[String] = specs.filter(_.benched).map(_.name)

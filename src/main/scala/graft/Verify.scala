@@ -22,12 +22,6 @@ object Verify {
     only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[verify] WARNING: '$n' matches no registered query — typo?")))
     val spark = GraftSession()
-    // the 22 fitted oracles embed models (centroids, codebooks, PCA, LR
-    // weights) fitted on THIS sweep's data — bind the contexts before the
-    // oracle dump below
-    graft.ops.Similarity.setOracleContext(spark, sfDir)
-    graft.ops.Multimodal.setOracleContext(spark, sfDir)
-    graft.ops.QualityModel.setOracleContext(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -61,7 +55,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql(spark, sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -75,7 +75,7 @@ object Dedup {
     */
   private[ops] def doubledWithShift(docs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
-    val maxId = Option(docs.agg(max(col(idCol)).cast("long")).head
+    val maxId = Option(docs.agg(max(col(idCol)).cast("long")).head()
       .getAs[java.lang.Long](0)).map(_.toLong).getOrElse(-1L)
     docs.unionAll(docs.withColumn(idCol, col(idCol) + lit(maxId + 1L)))
   }

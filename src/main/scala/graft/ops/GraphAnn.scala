@@ -318,7 +318,7 @@ object GraphAnn {
     * re-states the Spark window's `(score DESC, id)` tie-break; every
     * cosine is the same left-to-right accumulation on both engines.
     */
-  private[ops] def knnGraphTopKSql(cent: Array[Array[Double]], k: Int = 10,
+  private[graft] def knnGraphTopKSql(cent: Array[Array[Double]], k: Int = 10,
       g: Int = KnnDegree, rounds: Int = KnnRounds,
       beam: Int = KnnBeam, hops: Int = KnnHops): String = {
     val sb = new StringBuilder

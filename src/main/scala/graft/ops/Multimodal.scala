@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Artifacts
+
 /** Multimodal-column plumbing for a training-data pipeline: image/audio/video
   * payloads as opaque `binary` columns with a typed metadata struct, plus the
   * operations a 100-TB media pipeline runs over them — decode/feature-extract
@@ -550,15 +552,11 @@ object Multimodal {
     fitPca(sample, FeatureCodec.OutDims)
   }
 
-  /** One fit per sf-dir per session, shared by the query builder and the
-    * oracle generator (the [[Similarity.fitCentroids]] cache contract:
-    * tables under a dir are immutable for the session). */
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Double], Array[Array[Double]])]
-
-  private[ops] def fitPcaCached(spark: SparkSession, dir: String)
+  /** The PCA fit for `dir`, one per process in the [[graft.Artifacts]]
+    * store, shared by the query builder and the oracle generated from it. */
+  private[graft] def fitPcaCached(spark: SparkSession, dir: String)
       : (Array[Double], Array[Array[Double]]) =
-    pcaCache.getOrElseUpdate(dir,
+    Artifacts.fit("pca", dir)(
       fitPcaFrom(mediaTable(spark, dir).select(col("doc_id"), col("payload"))))
 
   /** Distributed feature extraction over the media table: decode each
@@ -612,7 +610,7 @@ object Multimodal {
     * accumulation order term for term, so the pre-rounding doubles are
     * bit-identical.
     */
-  private[ops] def extractFeaturesSql(
+  private[graft] def extractFeaturesSql(
       mean: Array[Double], comps: Array[Array[Double]]): String = {
     val hPivot = (0 until 16).map(b =>
       s"sum(CASE WHEN bin = $b THEN c ELSE 0 END) AS h$b").mkString(",\n    ")
@@ -665,20 +663,5 @@ object Multimodal {
        |SELECT doc_id, mime,
        |  $proj
        |FROM raw ORDER BY doc_id""".stripMargin
-  }
-
-  /** Oracle context — the [[Similarity.setOracleContext]] mechanism: the
-    * codec oracle embeds the DATA-fitted projection, so it exists only once
-    * a (session, dir) is bound (Verify binds it before the oracle dump). */
-  @volatile private var oracleCtx: Option[(SparkSession, String)] = None
-
-  def setOracleContext(spark: SparkSession, dir: String): Unit =
-    oracleCtx = Some((spark, dir))
-
-  def codecOracles: Map[String, String] = oracleCtx match {
-    case Some((spark, dir)) =>
-      val (mean, comps) = fitPcaCached(spark, dir)
-      Map("extract_features" -> extractFeaturesSql(mean, comps))
-    case None => Map.empty
   }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
+
 /** Model-based quality filtering — the classifier step of a production
   * LLM-data pipeline (the GPT-3/LLaMA recipe: hand rules label a seed
   * set, a cheap linear classifier generalizes them, and the MODEL — not
@@ -129,11 +131,9 @@ object QualityModel {
     fitLr(xs, ys)
   }
 
-  private val lrCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
-
+  /** The LR fit for `dir`, one per process in the [[graft.Artifacts]] store. */
   private[graft] def fitCached(spark: SparkSession, dir: String): Array[Double] =
-    lrCache.getOrElseUpdate(dir, fitFrom(Tables(spark, dir, "documents")))
+    Artifacts.fit("lr", dir)(fitFrom(Tables(spark, dir, "documents")))
 
   /** The fitted logit over a `text` column — the projection every
     * quality-model query shares: per-row literal arithmetic, so the
@@ -173,7 +173,7 @@ object QualityModel {
   /** Generated-literal oracle: features re-derived exactly (the
     * `quality_score` oracle's token arithmetic), logit re-stated as the
     * same left-associative chain over the fitted literals. */
-  private[ops] def qualityLrScoreSql(w: Array[Double]): String = {
+  private[graft] def qualityLrScoreSql(w: Array[Double]): String = {
     val logit = logitSql(w)
     s"""SELECT doc_id, round(logit, 6) AS lr_logit, logit > 0 AS keep
        |FROM (
@@ -212,7 +212,7 @@ object QualityModel {
 
   /** Generated oracle: the logit chain of [[qualityLrScoreSql]], the ramp,
     * and the identical hex-draw threshold compare. */
-  private[ops] def qualityWeightedSampleSql(w: Array[Double],
+  private[graft] def qualityWeightedSampleSql(w: Array[Double],
       seed: String = "qw42"): String = {
     val logit = logitSql(w)
     s"""SELECT doc_id, round(keep_p, 6) AS keep_p
@@ -309,7 +309,7 @@ object QualityModel {
   /** Generated-literal oracle: the served ramp over the [[logitSql]]
     * chain, the [[teacherSql]] label, and the identical decimal-grid
     * confidence sum. */
-  private[ops] def lrCalibrationBinsSql(w: Array[Double]): String = {
+  private[graft] def lrCalibrationBinsSql(w: Array[Double]): String = {
     val logit = logitSql(w)
     s"""SELECT bin, n, n_pos,
        |  round(conf_sum / n, 6) AS conf,
@@ -330,7 +330,7 @@ object QualityModel {
        |ORDER BY bin""".stripMargin
   }
 
-  private[ops] def lrEvalMetricsSql(w: Array[Double]): String = {
+  private[graft] def lrEvalMetricsSql(w: Array[Double]): String = {
     val logit = logitSql(w)
     s"""SELECT tp, fp, tn, fn,
        |  (tp + tn)::DOUBLE / (tp + fp + tn + fn) AS accuracy,
@@ -548,22 +548,5 @@ object QualityModel {
        |FROM bt JOIN model USING (b)
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
-  }
-
-  /** Oracle context — the [[Similarity.setOracleContext]] mechanism. */
-  @volatile private var oracleCtx: Option[(SparkSession, String)] = None
-
-  def setOracleContext(spark: SparkSession, dir: String): Unit =
-    oracleCtx = Some((spark, dir))
-
-  def modelOracles: Map[String, String] = oracleCtx match {
-    case Some((spark, dir)) =>
-      val w = fitCached(spark, dir)
-      Map(
-        "quality_lr_score" -> qualityLrScoreSql(w),
-        "quality_weighted_sample" -> qualityWeightedSampleSql(w),
-        "lr_eval_metrics" -> lrEvalMetricsSql(w),
-        "lr_calibration_bins" -> lrCalibrationBinsSql(w))
-    case None => Map.empty
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Overlap.overlap
 
 /** Similarity search over an embedding column (`embeddings.embedding`,
@@ -163,22 +164,16 @@ object Similarity {
     best
   }
 
-  /** Fitted centroids for the embeddings table of `dir`, cached so the
-    * query builder and the oracle generator share ONE fit per session.
-    * Keyed by (dir, k) only — like [[pqCache]], this assumes the table
-    * under a dir is immutable for the session's lifetime (true for the
-    * driver's generated testdata; a production deployment would version
-    * the model artifact with the data snapshot it was fitted on). */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Array[Array[Double]]]
-
-  private[ops] def fitCentroids(spark: SparkSession, dir: String, nCentroids: Int)
-      : Array[Array[Double]] =
-    centroidCache.getOrElseUpdate((dir, nCentroids), {
+  /** Fitted centroids for the embeddings table of `dir`: one fit per
+    * (dir, k) in the [[graft.Artifacts]] store, shared by the query
+    * builders and the oracles generated from it. */
+  private[graft] def fitCentroids(spark: SparkSession, dir: String,
+      nCentroids: Int = NCentroids): Array[Array[Double]] =
+    Artifacts.fit("centroids", dir, nCentroids) {
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       fitCentroidsFrom(e, nCentroids)
-    })
+    }
 
   /** Cell assignment as pure codegen'd column arithmetic (one
     * [[graft.functions.DotProduct]] per centroid against a plan-time
@@ -243,7 +238,7 @@ object Similarity {
   }
 
   /** EXACT DuckDB oracle for [[annIvfTopK]], generated from the FITTED
-    * centroids the query plans with (the [[fitCentroids]] session cache
+    * centroids the query plans with (the one [[fitCentroids]] fit
     * guarantees query and oracle quantize with identical literals — see
     * [[cellsSqlCtes]] for the bit-exactness argument). Re-states the plan
     * 1:1: probe ranking `score DESC, cell DESC` mirrors
@@ -252,7 +247,7 @@ object Similarity {
     * dedup is needed on either engine), and the final ranking is the same
     * exact-cosine window [[annTopKSql]] uses.
     */
-  private[ops] def annIvfTopKSql(
+  private[graft] def annIvfTopKSql(
       cent: Array[Array[Double]], k: Int = 10, nProbe: Int = NProbe): String =
     s"""${cellsSqlCtes(cent)}, probes AS (
        |  SELECT vec_id AS q_id, cell FROM (
@@ -283,7 +278,7 @@ object Similarity {
     * candidate step (`ne.label = p.q_label`), exactly where the Spark plan
     * carries it as an equi-join key.
     */
-  private[ops] def annFilteredTopKSql(
+  private[graft] def annFilteredTopKSql(
       cent: Array[Array[Double]], k: Int = 10,
       minProbe: Int = NProbe, alpha: Int = FilteredAlpha): String =
     s"""${cellsSqlCtes(cent, "  SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings")}${
@@ -310,7 +305,7 @@ object Similarity {
     * cosine ≥ τ — the `a_id < b_id` equi-join restated, with the keep flag
     * as a left-anti null test.
     */
-  private[ops] def semDedupSql(cent: Array[Array[Double]], tau: Double = SemDedupTau): String =
+  private[graft] def semDedupSql(cent: Array[Array[Double]], tau: Double = SemDedupTau): String =
     s"""${cellsSqlCtes(cent)}, dropped AS (
        |  SELECT DISTINCT b.vec_id
        |  FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -321,51 +316,6 @@ object Similarity {
        |SELECT c.vec_id, c.cell, (d.vec_id IS NULL) AS is_kept
        |FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id
        |ORDER BY c.vec_id""".stripMargin
-
-  /** The two quantizer oracles are DATA-dependent (fitted centroids), unlike
-    * every other generated oracle (seeded hyperplanes) — so they can only be
-    * emitted once the sweep's (session, data dir) is known. [[graft.Verify]]
-    * (and the registry spec) set this before reading
-    * [[SparkEntry.oracleSql]]; unset, the two queries simply publish no
-    * oracle (the pre-round-8 rows-only behavior).
-    */
-  @volatile private var oracleCtx: Option[(SparkSession, String)] = None
-
-  def setOracleContext(spark: SparkSession, dir: String): Unit =
-    oracleCtx = Some((spark, dir))
-
-  /** `ann_ivf_topk` + `semdedup_clusters` oracle entries for the context
-    * dir, or empty when no context is set. The `fitCentroids` cache makes
-    * this at most one fit per (dir, k) per session, shared with the queries
-    * themselves.
-    */
-  def quantizerOracles: Map[String, String] = oracleCtx match {
-    case Some((spark, dir)) =>
-      val cent = fitCentroids(spark, dir, NCentroids)
-      val books = fitPq(spark, dir, PqM, PqKs)
-      val residBooks = fitPqResidual(spark, dir, NCentroids, PqM, PqKs)
-      val (rot, opqBooks) = fitOpq(spark, dir, PqM, PqKs)
-      val (rotC, chainCent, chainBooks) = fitOpqIvf(spark, dir, NCentroids, PqM, PqKs)
-      Map(
-        "ann_ivf_topk"      -> annIvfTopKSql(cent),
-        "ann_filtered_topk" -> annFilteredTopKSql(cent),
-        "ivf_pq_filtered_topk" -> ivfPqFilteredTopKSql(cent, books),
-        "filtered_retrieval_eval" -> filteredRetrievalEvalSql(cent),
-        "ivf_retrieval_eval" -> ivfRetrievalEvalSql(cent),
-        "semdedup_clusters" -> semDedupSql(cent),
-        "pq_adc_topk"       -> pqAdcTopKSql(books),
-        "bq_adc_rerank_topk" -> bqAdcRerankTopKSql(books),
-        "pq_rerank_topk"    -> pqRerankTopKSql(books),
-        "ivf_pq_topk"       -> ivfPqTopKSql(cent, books),
-        "ivf_pq_residual_topk" -> ivfPqResidualTopKSql(cent, residBooks),
-        "ivf_pq_residual_rerank_topk" -> ivfPqResidualRerankTopKSql(cent, residBooks),
-        "opq_topk"          -> opqTopKSql(rot, opqBooks),
-        "maxsim_adc_topk"   -> MaxSim.maxSimAdcTopKSql(books),
-        "maxsim_adc_eval"   -> MaxSim.maxSimAdcEvalSql(books),
-        "opq_ivf_pq_topk"   -> opqIvfPqTopKSql(rotC, chainCent, chainBooks),
-        "knn_graph_topk"    -> GraphAnn.knnGraphTopKSql(cent))
-    case None => Map.empty
-  }
 
   val LshDims = 64 // embedding dimensionality in the testdata
 
@@ -634,14 +584,9 @@ object Similarity {
   /** The LSH bucket artifact for a corpus: the slim (vec_id, table,
     * bucket) band table — written, it IS the dense serving index — and
     * the vector frame candidates re-attach to for exact cosine.
-    * `bandPath` is the on-disk snapshot, kept for superseded-entry
-    * cleanup. */
+    * `bandPath` is the on-disk snapshot, deleted on release. */
   private[graft] final case class LshIndex(
       e: DataFrame, banded: DataFrame, bandPath: String)
-
-  private val lshIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, LshIndex]
-  private val lshIndexLock = new Object
 
   /** The session-held LSH index for a corpus directory (the
     * [[graft.ops.TextAnalysis.servedBm25Model]] discipline on the dense
@@ -650,38 +595,28 @@ object Similarity {
     * cosines. The band table is a WRITTEN parquet artifact (not a cached
     * plan), so a serve re-reads a slim stored table — at 100 TB this is
     * the persisted band artifact bucketed by (table, bucket) next to the
-    * embeddings table. Unlike the fit caches (plain driver arrays), this
-    * holds DataFrames BOUND to a session — entries from another session
-    * are rebuilt, never returned, and a superseded snapshot is deleted
-    * only once its session has stopped (the [[TextIndex.servingIndex]]
-    * lifecycle); the build-or-get is serialized against double-builds. */
+    * embeddings table. A served [[graft.Artifacts]] entry: one per
+    * (session, dir), its snapshot deleted once the session stops. */
   private[graft] def servedLshIndex(spark: SparkSession, dir: String): LshIndex =
-    lshIndexLock.synchronized {
-      lshIndexCache.get(dir).filter(_.e.sparkSession eq spark).getOrElse {
-        lshIndexCache.get(dir)
-          .filter(_.e.sparkSession.sparkContext.isStopped)
-          .foreach(old => IncrementalIndex.deleteDir(old.bandPath))
-        val e = Tables(spark, dir, "embeddings")
-          .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        val buckets = (0 until LshTables).map(l => lshBucket(col("v"), LshBits, LshDims, l))
-        // scan-parallelism floor on the band artifact: the bucket-probe
-        // join fans the band rows against the query batch, so a
-        // one-row-group snapshot would serialize every dense serve
-        // (IncrementalIndex.writeServing doc)
-        // NOT clusterBy("vec_id") (r18 adjudication): the posexplode write
-        // already lands each vector's 12 band rows adjacent inside scan-
-        // ordered files, so the (q_id, n_id) dedup collapses map-side as
-        // is — an explicit hash repartition only added a write-time
-        // exchange and measured neutral-to-negative back-to-back
-        val (banded, path) = IncrementalIndex.writeServing(
-          e.select(col("vec_id"),
-            posexplode(array(buckets: _*)).as(Seq("table", "bucket"))),
-          "graft_lsh_bands")
-        val built = LshIndex(e, banded, path)
-        lshIndexCache.put(dir, built)
-        built
-      }
-    }
+    Artifacts.served("lsh_index", dir, spark) {
+      val e = Tables(spark, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val buckets = (0 until LshTables).map(l => lshBucket(col("v"), LshBits, LshDims, l))
+      // scan-parallelism floor on the band artifact: the bucket-probe
+      // join fans the band rows against the query batch, so a
+      // one-row-group snapshot would serialize every dense serve
+      // (IncrementalIndex.writeServing doc)
+      // NOT clusterBy("vec_id") (r18 adjudication): the posexplode write
+      // already lands each vector's 12 band rows adjacent inside scan-
+      // ordered files, so the (q_id, n_id) dedup collapses map-side as
+      // is — an explicit hash repartition only added a write-time
+      // exchange and measured neutral-to-negative back-to-back
+      val (banded, path) = IncrementalIndex.writeServing(
+        e.select(col("vec_id"),
+          posexplode(array(buckets: _*)).as(Seq("table", "bucket"))),
+        "graft_lsh_bands")
+      LshIndex(e, banded, path)
+    }(ix => IncrementalIndex.deleteDir(ix.bandPath))
 
   /** The LSH scoring tail over a prebuilt [[LshIndex]] — shared verbatim
     * by the one-shot [[annLshTopK]] and the indexed hybrid leg, so parity
@@ -749,7 +684,7 @@ object Similarity {
     semDedupWith(e, fitCentroidsFrom(e, nCentroids), tau)
 
   /** [[semDedupFrom]] under ALREADY-FITTED centroids — the registered query
-    * goes through here with the session-cached [[fitCentroids]] result so
+    * goes through here with the stored [[fitCentroids]] result so
     * the query and its generated oracle ([[semDedupSql]]) quantize with the
     * identical literals.
     */
@@ -772,7 +707,7 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Registered query: SemDeDup over the embeddings table (session-cached
+  /** Registered query: SemDeDup over the embeddings table (one stored
     * fit — shared with the oracle generator). */
   def semDedup(spark: SparkSession, dir: String): DataFrame =
     semDedupWith(
@@ -1035,7 +970,7 @@ object Similarity {
   /** EXACT generated oracle for [[bqAdcRerankTopK]] — the three committed
     * tier templates chained: Hamming shortlist, ADC refine over shortlist
     * candidates only, exact-cosine tail. */
-  private[ops] def bqAdcRerankTopKSql(
+  private[graft] def bqAdcRerankTopKSql(
       books: Array[Array[Array[Double]]], k: Int = 10,
       short1: Int = 200, short2: Int = 50): String =
     s"""WITH ev AS (
@@ -1068,7 +1003,7 @@ object Similarity {
   // ---------------------------------------------------------------- PQ ---
 
   // The coarse-quantizer family's shared parameters: the registered queries,
-  // the session fit cache, AND the generated oracles all read these — a
+  // the fits' keys, AND the generated oracles all read these — a
   // drift between any two silently de-pairs a query from its oracle.
   val NCentroids = 16
   val NProbe = 4
@@ -1095,16 +1030,13 @@ object Similarity {
     Array.tabulate(m)(j => lloyd(sample.map(_.slice(j * dsub, (j + 1) * dsub)), ks))
   }
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Array[Array[Array[Double]]]]
-
-  private[graft] def fitPq(spark: SparkSession, dir: String, m: Int, ks: Int)
+  private[graft] def fitPq(spark: SparkSession, dir: String, m: Int = PqM, ks: Int = PqKs)
       : Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate((dir, m, ks), {
+    Artifacts.fit("pq", dir, m, ks) {
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       fitPqFrom(e, m, ks)
-    })
+    }
 
   /** RESIDUAL PQ codebooks — fitted on `v − centroid(cell(v))` instead of
     * the raw vectors. This is where IndexIVFPQ's recall at equal code size
@@ -1132,17 +1064,14 @@ object Similarity {
     Array.tabulate(m)(j => lloyd(residuals.map(_.slice(j * dsub, (j + 1) * dsub)), ks))
   }
 
-  private val pqResidualCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int), Array[Array[Array[Double]]]]
-
-  private[graft] def fitPqResidual(
-      spark: SparkSession, dir: String, nCentroids: Int, m: Int, ks: Int)
+  private[graft] def fitPqResidual(spark: SparkSession, dir: String,
+      nCentroids: Int = NCentroids, m: Int = PqM, ks: Int = PqKs)
       : Array[Array[Array[Double]]] =
-    pqResidualCache.getOrElseUpdate((dir, nCentroids, m, ks), {
+    Artifacts.fit("pq_residual", dir, nCentroids, m, ks) {
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       fitPqResidualFrom(e, fitCentroids(spark, dir, nCentroids), m, ks)
-    })
+    }
 
   /** `v − centroid(cell)` as pure column arithmetic: the centroid table is a
     * plan-time nested-array literal indexed by the row's cell id, and the
@@ -1300,7 +1229,7 @@ object Similarity {
     * shortlist ranking (same rounded-ADC window) capped at `shortlist`,
     * then the exact-cosine re-rank [[annIvfTopKSql]]-style.
     */
-  private[ops] def pqRerankTopKSql(
+  private[graft] def pqRerankTopKSql(
       books: Array[Array[Array[Double]]], k: Int = 10, shortlist: Int = 50): String =
     s"""WITH ev AS (
        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -1331,7 +1260,7 @@ object Similarity {
     * shape a 100 TB ANN service actually runs: the coarse quantizer prunes
     * the scan to `nProbe`/`nCentroids` of the corpus (cell equi-join on a
     * partitioning column), and PQ compresses what remains 64×. Shares both
-    * fitted models (and their session caches) with [[annIvfTopK]] /
+    * fitted models (one fit each) with [[annIvfTopK]] /
     * [[pqAdcTopK]], so the generated oracle composes their literal CTEs.
     */
   def ivfPqTopK(
@@ -1415,7 +1344,7 @@ object Similarity {
     * fitted codebook literals, ADC = SUM of the 8 LUT reads (rounded before
     * ranking — see [[adcScore]]), brute scan over the coded corpus.
     */
-  private[ops] def pqAdcTopKSql(books: Array[Array[Array[Double]]], k: Int = 10): String =
+  private[graft] def pqAdcTopKSql(books: Array[Array[Array[Double]]], k: Int = 10): String =
     s"""WITH ev AS (
        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
        |)${pqSqlCtes(books)}, adc AS (
@@ -1436,7 +1365,7 @@ object Similarity {
     * selection and cell-equi-join candidates as in [[annIvfTopKSql]], ADC
     * ranking as in [[pqAdcTopKSql]].
     */
-  private[ops] def ivfPqTopKSql(
+  private[graft] def ivfPqTopKSql(
       cent: Array[Array[Double]], books: Array[Array[Array[Double]]],
       k: Int = 10, nProbe: Int = NProbe): String =
     s"""${cellsSqlCtes(cent)}${pqSqlCtes(books)}, probes AS (
@@ -1515,7 +1444,7 @@ object Similarity {
     * under the served batch with the adaptive probe budget
     * ([[adaptiveProbesSql]]) and the label predicate joined into the
     * candidate step — where the Spark plan carries it as an equi-key. */
-  private[ops] def ivfPqFilteredTopKSql(
+  private[graft] def ivfPqFilteredTopKSql(
       cent: Array[Array[Double]], books: Array[Array[Array[Double]]],
       k: Int = 10, minProbe: Int = NProbe, alpha: Int = FilteredAlpha): String =
     s"""${cellsSqlCtes(cent, "  SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings")}${
@@ -1662,7 +1591,7 @@ object Similarity {
     * `shortlist` by the same (adc DESC, n_id) window, then the exact
     * `list_cosine_similarity` re-rank of [[pqRerankTopKSql]].
     */
-  private[ops] def ivfPqResidualRerankTopKSql(
+  private[graft] def ivfPqResidualRerankTopKSql(
       cent: Array[Array[Double]], books: Array[Array[Array[Double]]],
       k: Int = 10, shortlist: Int = 50, nProbe: Int = NProbe): String = {
     val base = ivfPqResidualTopKSql(cent, books, k, nProbe)
@@ -1696,7 +1625,7 @@ object Similarity {
     * reconstruction constant `qc = ⟨q, c⟩` added before the shared round —
     * the same add order as the plan (`qc + fold(pd)`).
     */
-  private[ops] def ivfPqResidualTopKSql(
+  private[graft] def ivfPqResidualTopKSql(
       cent: Array[Array[Double]], books: Array[Array[Array[Double]]],
       k: Int = 10, nProbe: Int = NProbe, evSql: String = RawEvSql): String = {
     val dsub = books(0)(0).length
@@ -1817,16 +1746,13 @@ object Similarity {
     (rot, fitBooks(rotated))
   }
 
-  private val opqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int), (Array[Array[Double]], Array[Array[Array[Double]]])]
-
-  private[graft] def fitOpq(spark: SparkSession, dir: String, m: Int, ks: Int)
+  private[graft] def fitOpq(spark: SparkSession, dir: String, m: Int = PqM, ks: Int = PqKs)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    opqCache.getOrElseUpdate((dir, m, ks), {
+    Artifacts.fit("opq", dir, m, ks) {
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       fitOpqFrom(e, m, ks)
-    })
+    }
 
   /** `R·v` as pure column arithmetic: one codegen [[graft.functions.DotProduct]]
     * against each literal rotation row — a projection, no exchange, and
@@ -1892,28 +1818,24 @@ object Similarity {
     ivfPqResidualTopKFrom(er, cent, books, k, nProbe)
   }
 
-  private val opqIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int),
-      (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]])]
-
   private[graft] def fitOpqIvf(spark: SparkSession, dir: String,
-      nCentroids: Int, m: Int, ks: Int)
+      nCentroids: Int = NCentroids, m: Int = PqM, ks: Int = PqKs)
       : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]]) =
-    opqIvfCache.getOrElseUpdate((dir, nCentroids, m, ks), {
+    Artifacts.fit("opq_ivf", dir, nCentroids, m, ks) {
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       val (rot, _) = fitOpq(spark, dir, m, ks) // the OPQ pre-transform
       val er = e.withColumn("v", rotateCol(rot, col("v")))
       val cent = fitCentroidsFrom(er, nCentroids)
       (rot, cent, fitPqResidualFrom(er, cent, m, ks))
-    })
+    }
 
   /** EXACT generated oracle for [[opqIvfPqTopK]]: [[opqTopKSql]]'s rotated
     * `ev` body substituted into the [[ivfPqResidualTopKSql]] chain — every
     * downstream CTE (cells, residuals, codes, LUT, cell constant, ADC
     * rank) is the residual oracle verbatim over the rotated vectors.
     */
-  private[ops] def opqIvfPqTopKSql(
+  private[graft] def opqIvfPqTopKSql(
       rot: Array[Array[Double]], cent: Array[Array[Double]],
       books: Array[Array[Array[Double]]], k: Int = 10, nProbe: Int = NProbe): String =
     ivfPqResidualTopKSql(cent, books, k, nProbe, evSql = rotatedEvSql(rot))
@@ -1934,7 +1856,7 @@ object Similarity {
     * element-for-element), then the [[pqAdcTopKSql]] body verbatim —
     * [[pqSqlCtes]]'s codes/LUT and the fixed-order ADC rank over it.
     */
-  private[ops] def opqTopKSql(
+  private[graft] def opqTopKSql(
       rot: Array[Array[Double]], books: Array[Array[Array[Double]]], k: Int = 10): String =
     s"""WITH ev AS (
        |${rotatedEvSql(rot)}
@@ -2249,7 +2171,7 @@ object Similarity {
 
   /** Generated oracle for [[ivfRetrievalEval]] — the shared eval template
     * over the fitted IVF oracle and the static brute truth. */
-  private[ops] def ivfRetrievalEvalSql(cent: Array[Array[Double]], k: Int = 10): String =
+  private[graft] def ivfRetrievalEvalSql(cent: Array[Array[Double]], k: Int = 10): String =
     retrievalEvalSqlWith(annIvfTopKSql(cent), annTopKSql, k)
 
   /** Retrieval-quality metrics of the FILTERED serve ([[annFilteredTopK]])
@@ -2266,7 +2188,7 @@ object Similarity {
   /** Generated oracle for [[filteredRetrievalEval]] — the shared eval
     * template over the fitted filtered-serve oracle and the static
     * filtered brute truth. */
-  private[ops] def filteredRetrievalEvalSql(cent: Array[Array[Double]], k: Int = 10): String =
+  private[graft] def filteredRetrievalEvalSql(cent: Array[Array[Double]], k: Int = 10): String =
     retrievalEvalSqlWith(annFilteredTopKSql(cent), annFilteredBruteSql, k)
 
   /** Generated oracle for [[retrievalEval]]: the two committed leg

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
+
 /** Text analysis for training-data pipelines over the `documents` table:
   * token statistics, quality scoring, stopword-based language ID, and
   * content fingerprinting. Pure column expressions — one narrow projection
@@ -743,18 +745,14 @@ object TextAnalysis {
     * cached plan — so a serve re-reads index-sized artifacts, never
     * re-aggregates the corpus. At 100 TB these are the incrementally-
     * maintained aggregate tables an `append`/`remove` updates alongside
-    * the postings. `paths` holds the snapshot directories for
-    * superseded-entry cleanup. */
+    * the postings. `paths` holds the snapshot directories, deleted on
+    * release. */
   private[graft] final case class LexModel(tfb: DataFrame, dfi: DataFrame,
       stats: DataFrame, paths: Seq[String])
 
   /** The registered queries' BM25 length-normalization parameter — folded
     * into the stored `bdl` column at model build. */
   private[graft] val DefaultB = 0.75
-
-  private val lexModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, LexModel]
-  private val lexModelLock = new Object
 
   /** The session-held lexical model for a corpus directory: the postings
     * snapshot from [[TextIndex.servingIndex]] widened to the serving
@@ -764,57 +762,49 @@ object TextAnalysis {
     * model work per query. Integer columns round-trip exactly; the double
     * columns (bdl, idf) are single fixed expressions of integers computed
     * once here instead of per pass — identical bits either way, so
-    * indexed/one-shot parity is unconditional. Session lifecycle as
-    * [[Similarity.servedLshIndex]]: an entry bound to another session is
-    * rebuilt, never returned; a superseded entry's snapshot dirs are
-    * deleted only once its session has stopped; build-or-get serialized. */
+    * indexed/one-shot parity is unconditional. A served
+    * [[graft.Artifacts]] entry: its snapshot dirs are deleted once the
+    * session stops. */
   private[graft] def servedLexModel(spark: SparkSession, dir: String): LexModel =
-    lexModelLock.synchronized {
-      lexModelCache.get(dir).filter(_.tfb.sparkSession eq spark).getOrElse {
-        lexModelCache.get(dir)
-          .filter(_.tfb.sparkSession.sparkContext.isStopped)
-          .foreach(_.paths.foreach(IncrementalIndex.deleteDir))
-        val tf = TextIndex.servingIndex(spark, dir).tf
-        val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-        def snap(frame: DataFrame, tag: String): DataFrame = {
-          val p = IncrementalIndex.snapshotDir(s"graft_text_model_$tag")
-          try frame.write.mode("overwrite").parquet(p)
-          catch { case e: Throwable => IncrementalIndex.deleteDir(p); throw e }
-          paths += p
-          spark.read.parquet(p)
-        }
-        // the postings leg is the scoring fan-out side — written with the
-        // scan-parallelism floor so a serve's candidate join never funnels
-        // through a one-row-group file (IncrementalIndex.writeServing doc)
-        def snapServing(frame: DataFrame, tag: String): DataFrame = {
-          // doc_id-clustered (r18): every serve aggregates its candidate
-          // rows by (q, doc), so whole-document scan tasks collapse the
-          // sums map-side (writeServing's clusterBy doc)
-          val (f, p) = IncrementalIndex.writeServing(
-            frame, s"graft_text_model_$tag", clusterBy = Seq("doc_id"))
-          paths += p
-          f
-        }
-        val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-        val stats = snap(
-          dl.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
-            .crossJoin(tf.agg(sum("tf").as("c_total"))), "stats")
-        val tfb = snapServing(
-          tf.join(dl, Seq("doc_id")).crossJoin(broadcast(stats))
-            .select(col("doc_id"), col("tok"), col("tf"), col("dl"),
-              (lit(DefaultB) * col("dl") / col("avgdl")).as("bdl")), "tfb")
-        val dfi = snap(
-          tf.groupBy("tok")
-            .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-            .crossJoin(broadcast(stats))
-            .select(col("tok"), col("df"), col("cf"),
-              log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-                .as("idf")), "dfi")
-        val built = LexModel(tfb, dfi, stats, paths.toSeq)
-        lexModelCache.put(dir, built)
-        built
+    Artifacts.served("lex_model", dir, spark) {
+      val tf = TextIndex.servingIndex(spark, dir).tf
+      val paths = scala.collection.mutable.ArrayBuffer.empty[String]
+      def snap(frame: DataFrame, tag: String): DataFrame = {
+        val p = IncrementalIndex.snapshotDir(s"graft_text_model_$tag")
+        try frame.write.mode("overwrite").parquet(p)
+        catch { case e: Throwable => IncrementalIndex.deleteDir(p); throw e }
+        paths += p
+        spark.read.parquet(p)
       }
-    }
+      // the postings leg is the scoring fan-out side — written with the
+      // scan-parallelism floor so a serve's candidate join never funnels
+      // through a one-row-group file (IncrementalIndex.writeServing doc)
+      def snapServing(frame: DataFrame, tag: String): DataFrame = {
+        // doc_id-clustered (r18): every serve aggregates its candidate
+        // rows by (q, doc), so whole-document scan tasks collapse the
+        // sums map-side (writeServing's clusterBy doc)
+        val (f, p) = IncrementalIndex.writeServing(
+          frame, s"graft_text_model_$tag", clusterBy = Seq("doc_id"))
+        paths += p
+        f
+      }
+      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+      val stats = snap(
+        dl.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
+          .crossJoin(tf.agg(sum("tf").as("c_total"))), "stats")
+      val tfb = snapServing(
+        tf.join(dl, Seq("doc_id")).crossJoin(broadcast(stats))
+          .select(col("doc_id"), col("tok"), col("tf"), col("dl"),
+            (lit(DefaultB) * col("dl") / col("avgdl")).as("bdl")), "tfb")
+      val dfi = snap(
+        tf.groupBy("tok")
+          .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+          .crossJoin(broadcast(stats))
+          .select(col("tok"), col("df"), col("cf"),
+            log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1)
+              .as("idf")), "dfi")
+      LexModel(tfb, dfi, stats, paths.toSeq)
+    }(_.paths.foreach(IncrementalIndex.deleteDir))
 
   /** The BM25 view of [[servedLexModel]]: at the registered queries'
     * `b = 0.75` the stored `bdl` column serves directly; any other `b`

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Overlap.overlap
 
 /** Append-only incremental maintenance for the INVERTED text index — the
@@ -170,40 +171,23 @@ object TextIndex {
   def topK(idx: InvertedIndex, queries: DataFrame, k: Int = 10): DataFrame =
     TextAnalysis.bm25Against(idx.tf, queries, k)
 
-  private val servingCache =
-    scala.collection.concurrent.TrieMap.empty[String, InvertedIndex]
-  private val servingLock = new Object
-
   /** The session-held serving index for a corpus directory: built (and its
     * postings snapshot written) ONCE per session, then reused by every
     * indexed retrieval serve — [[TextAnalysis.bm25PrfTopKIndexed]],
     * [[TextAnalysis.qldTopKIndexed]], the hybrid's lexical leg. This is the
-    * amortized-build convention the fitted-model caches
-    * (`Similarity.fitPq` etc.) already follow: in production the
-    * snapshot is a catalog table maintained by `append`/`remove`, and a
-    * query NEVER pays the corpus tokenize — here the first call per
-    * directory pays it and the session holds the artifact. (Keyed by dir;
-    * assumes an immutable corpus table, exactly like the fit caches — a
-    * LIVE corpus goes through the explicit build/append lifecycle instead.
-    * Session-guarded like `TextAnalysis.servedBm25Model`: an entry bound
-    * to another session is rebuilt, never returned — and its superseded
-    * snapshot is released ONLY once that session has STOPPED (a second
-    * LIVE session must not delete files the first still reads; two live
-    * sessions alternating pay a rebuild per switch, never a dangling
-    * read). The build-or-get is serialized so concurrent first calls
-    * can't double-build and orphan a snapshot.)
+    * amortized-build convention the fitted models (`Similarity.fitPq`
+    * etc.) already follow: in production the snapshot is a catalog table
+    * maintained by `append`/`remove`, and a query NEVER pays the corpus
+    * tokenize — here the first call per directory pays it and the session
+    * holds the artifact, a served [[graft.Artifacts]] entry. (Keyed by
+    * dir; assumes an immutable corpus table, exactly like the fits — a
+    * LIVE corpus goes through the explicit build/append lifecycle
+    * instead.)
     */
   def servingIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): InvertedIndex = servingLock.synchronized {
-    servingCache.get(dir).filter(_.tf.sparkSession eq spark).getOrElse {
-      servingCache.get(dir)
-        .filter(_.tf.sparkSession.sparkContext.isStopped)
-        .foreach(release)
-      val built = build(Tables(spark, dir, "documents").select("doc_id", "text"))
-      servingCache.put(dir, built)
-      built
-    }
-  }
+      dir: String): InvertedIndex =
+    Artifacts.served("text_index", dir, spark)(
+      build(Tables(spark, dir, "documents").select("doc_id", "text")))(release)
 
   /** Registered query: build on 90% of the corpus, `append` the remaining
     * 10% ingest batch, serve the benchmark query set ([[TextAnalysis

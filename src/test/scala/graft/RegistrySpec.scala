@@ -1,20 +1,17 @@
 package graft
 
-import graft.QuerySpec.{Fitted, RowsOnly}
+import graft.QuerySpec.RowsOnly
+import graft.ops.Similarity
 
 /** Registry tripwire. Every query is one `SparkEntry.specs` entry whose
-  * check is an oracle, a fitted oracle or a rows-only reason, so coverage
-  * cannot drift by construction; this spec pins what the types cannot:
-  * unique names, the fitted oracles' wiring, the tally, and that every
-  * query resolves.
+  * check is an oracle, a fitted oracle carrying its own SQL renderer, or a
+  * rows-only reason, so coverage cannot drift by construction; this spec
+  * pins what the types cannot: unique names, the tally, that a fitted
+  * oracle shares its builder's fit, and that every query resolves.
   */
 class RegistrySpec extends SparkSuite {
 
-  // the fitted oracles exist only once their contexts are bound (exactly
-  // what Verify does before its dump)
-  graft.ops.Similarity.setOracleContext(spark, "/root/testdata/sf0.001")
-  graft.ops.Multimodal.setOracleContext(spark, "/root/testdata/sf0.001")
-  graft.ops.QualityModel.setOracleContext(spark, "/root/testdata/sf0.001")
+  private val dir = "/root/testdata/sf0.001"
 
   test("query names are unique") {
     // `queries` and `oracleSql` are maps: a duplicate would silently
@@ -23,26 +20,21 @@ class RegistrySpec extends SparkSuite {
     assert(dups.isEmpty, s"declared more than once: ${dups.mkString(", ")}")
   }
 
-  test("the Fitted-marked queries are exactly the fitted oracles' keys") {
-    val marked = SparkEntry.specs.filter(_.check == Fitted).map(_.name).toSet
-    val generated = graft.ops.Similarity.quantizerOracles.keySet ++
-      graft.ops.Multimodal.codecOracles.keySet ++ graft.ops.QualityModel.modelOracles.keySet
-    assert(marked == generated,
-      s"marked but not generated: ${(marked -- generated).mkString(", ")}; " +
-        s"generated but not marked: ${(generated -- marked).mkString(", ")}")
-  }
-
   test("the ledger tally is pinned: registered = exact + rows-only") {
     // THE single source of truth for the registered/exact/rows-only split
     // (BASELINE.md's gate paragraph cites these numbers; the driver's
     // correctness report derives from the same structures). The pin makes
     // the TALLY a deliberate, reviewed change instead of prose that can
-    // drift. "Exact" counts every query whose oracle Verify can emit,
-    // the fitted ones included once the contexts above are bound.
+    // drift. "Exact" counts every query whose oracle Verify emits, the
+    // fitted ones included.
+    val cent = Similarity.fitCentroids(spark, dir)
     val rowsOnly = SparkEntry.specs.count(_.check.isInstanceOf[RowsOnly])
-    val tally = (SparkEntry.queries.size, SparkEntry.oracleSql.size, rowsOnly)
+    val tally = (SparkEntry.queries.size, SparkEntry.oracleSql(spark, dir).size, rowsOnly)
     assert(tally == ((295, 287, 8)),
       s"ledger tally changed to $tally — update this pin AND BASELINE.md's gate paragraph together")
+    // a builder and its oracle plan with one fit, not two equal ones
+    assert(Similarity.fitCentroids(spark, dir) eq cent,
+      "rendering the oracles refitted the centroids the builders use")
   }
 
   test("every query runs against the smoke SF and returns a non-empty schema") {
@@ -52,7 +44,7 @@ class RegistrySpec extends SparkSuite {
     // JVM temp dir on first touch and ann_ivf_topk fits its KMeans
     // quantizer — but none of the final DataFrames are executed.
     for ((name, fn) <- SparkEntry.queries) {
-      val df = fn(spark, "/root/testdata/sf0.001")
+      val df = fn(spark, dir)
       assert(df.schema.fields.nonEmpty, s"$name resolves to an empty schema")
       spark.catalog.clearCache()
     }

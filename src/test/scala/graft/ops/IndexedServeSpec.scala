@@ -45,7 +45,7 @@ class IndexedServeSpec extends SparkSuite {
     }
   }
 
-  test("servingIndex: one build per (session, dir); stale-session entries rebuilt") {
+  test("servingIndex: the same session gets the same index, built once") {
     val a = TextIndex.servingIndex(spark, dir)
     val b = TextIndex.servingIndex(spark, dir)
     assert(a eq b, "second call rebuilt the session-held serving index")
